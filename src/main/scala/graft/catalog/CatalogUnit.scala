@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.csv.CSVTable
 import org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog
 import org.apache.spark.sql.execution.datasources.v2.json.JsonTable
@@ -17,7 +18,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.hadoop.fs.Path
 
 import graft.model.{DataSourceSpec, SourceType}
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Per-source-type table resolution, delegating to Spark's own DSv2 tables
   * (reference: catalog/CatalogUnit.scala:53-152, catalog/FileCatalogUnit.scala:53-164,
@@ -85,8 +88,13 @@ object CatalogUnit {
   private def hasImpl(ds: DataSourceSpec): Boolean =
     ds.options.contains("catalog_impl") || ds.options.contains("catalog-impl")
 
+  // a lake runtime jar is deployed or not for the life of the JVM: probe each
+  // class name once instead of throwing ClassNotFoundException per resolution
+  private val classPresence = new ConcurrentHashMap[String, java.lang.Boolean]()
+
   private def classPresent(name: String): Boolean =
-    try { Class.forName(name); true } catch { case _: Throwable => false }
+    classPresence.computeIfAbsent(name, n => java.lang.Boolean.valueOf(
+      try { Class.forName(n); true } catch { case _: Throwable => false }))
 }
 
 /** Parquet/ORC/CSV/JSON/Avro directories. A registered path is a directory of
@@ -116,9 +124,13 @@ final class FileCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
     val path = resolvePath(spark, name)
     val opts = new CaseInsensitiveStringMap((ds.options ++ Map("path" -> path)).asJava)
     val paths = Seq(path)
+    def footerTable(schema: Option[StructType]): FileTable =
+      if (format == "parquet") ParquetTable(name, spark, opts, paths, schema, classOf[ParquetFileFormat])
+      else OrcTable(name, spark, opts, paths, schema, classOf[OrcFileFormat])
     format match {
-      case "parquet" => ParquetTable(name, spark, opts, paths, schemaOverride, classOf[ParquetFileFormat])
-      case "orc" => OrcTable(name, spark, opts, paths, schemaOverride, classOf[OrcFileFormat])
+      case "parquet" | "orc" if schemaOverride.isEmpty =>
+        FileCatalogUnit.withInferredSchema(spark, format, path, ds.options)(footerTable)
+      case "parquet" | "orc" => footerTable(schemaOverride)
       case "csv" => CSVTable(name, spark, opts, paths, schemaOverride, classOf[CSVFileFormat])
       case "json" => JsonTable(name, spark, opts, paths, schemaOverride, classOf[JsonFileFormat])
       case "avro" =>
@@ -148,6 +160,64 @@ final class FileCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
       .filterNot(_.startsWith("_"))
       .map(n => if (n.contains('.')) n.substring(0, n.lastIndexOf('.')) else n)
       .distinct.sorted
+  }
+}
+
+object FileCatalogUnit {
+  /** One inference: the table's leaf files as (path, length, modification
+    * time), sorted by path, and the schema Spark inferred from them.
+    */
+  private final case class Inferred(files: Seq[(String, Long, Long)], schema: StructType)
+
+  /** (format, resolved path, datasource options, inference confs). */
+  private type Key = (String, String, Map[String, String], Map[String, String])
+
+  // One entry per distinct table (and conf variant); a changed file set
+  // replaces its entry rather than adding one.
+  private val inferred = new ConcurrentHashMap[Key, Inferred]()
+
+  // SQL confs that parquet/ORC schema inference and partition discovery
+  // read (timestamp flavour, nanos-as-long, binary-as-string, schema merge,
+  // corrupt/missing-file skipping, partition column typing, case folding).
+  private val InferencePrefixes = Seq("spark.sql.parquet.", "spark.sql.orc.",
+    "spark.sql.legacy.parquet.", "spark.sql.legacy.orc.", "spark.sql.files.ignore",
+    "spark.sql.sources.partition")
+  private val InferenceKeys = Set("spark.sql.caseSensitive", "spark.sql.timestampType")
+
+  private def inferenceConf(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      InferenceKeys.contains(k) || InferencePrefixes.exists(k.startsWith)
+    }
+
+  private def fingerprint(t: FileTable): Seq[(String, Long, Long)] =
+    t.fileIndex.allFiles()
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
+
+  /** Parquet/ORC inference runs a footer read (a Spark job for parquet) on
+    * every fresh table. Reuse the last inferred schema while the table's
+    * leaf files are unchanged. On a hit the fingerprint comes from the
+    * returned table's own file index, which its scan lists anyway, so a hit
+    * lists once, like a table that infers. A miss lists twice: once to
+    * infer, once in the returned table, which carries the schema like every
+    * later hit so that equal reads resolve to equal tables (cached plans
+    * match).
+    */
+  def withInferredSchema(spark: SparkSession, format: String, path: String,
+      options: Map[String, String])(table: Option[StructType] => FileTable): FileTable = {
+    val key = (format, path, options, inferenceConf(spark))
+    Option(inferred.get(key)).flatMap { hit =>
+      val t = table(Some(hit.schema))
+      if (fingerprint(t) == hit.files) Some(t) else None
+    }.getOrElse {
+      val t = table(None)
+      val files = fingerprint(t)
+      // an inference failure is left for analysis to raise, as before
+      Try(t.schema).fold(_ => t, { s =>
+        inferred.put(key, Inferred(files, s))
+        table(Some(s))
+      })
+    }
   }
 }
 

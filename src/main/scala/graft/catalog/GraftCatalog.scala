@@ -84,10 +84,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val registered = model.listRegisteredTables(nsSeq)
     val fromSource = model.findParentDataSource(nsSeq) match {
       case Some((ds, rest)) => CatalogUnit(ds).listTables(spark, rest)
-      case None => model.listDataSources(nsSeq).flatMap { ds =>
-        // file datasources expose their tables one level down; JDBC at ns level
-        if (SourceType.fileTypes.contains(ds.typ)) Nil else Nil
-      }
+      case None => Nil
     }
     val fromUsl = model.findUslFor(nsSeq).map(_.tables.map(_.name)).getOrElse(Nil)
     (registered ++ fromSource ++ fromUsl).distinct.sorted

@@ -193,15 +193,6 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
     }.sorted
   }
 
-  def listDataSources(ns: Seq[String]): Seq[DataSourceSpec] = {
-    val p = nsPath(ns)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName).collect {
-      case n if n.endsWith(DsSuffix) => (n.dropRight(DsSuffix.length), DsSuffix)
-      case n if n.endsWith(FsSuffix) => (n.dropRight(FsSuffix.length), FsSuffix)
-    }.flatMap { case (name, _) => loadDataSource(ns, name) }.sortBy(_.name)
-  }
-
   def listUsls(ns: Seq[String]): Seq[String] = {
     val p = nsPath(ns)
     if (!fs.exists(p)) return Nil

@@ -1,8 +1,17 @@
 package graft.catalog
 
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkTestBase
+
+import java.util.concurrent.atomic.AtomicInteger
 
 /** End-to-end catalog federation: register datasources, query through the
   * lightning-style FQN, ingest a catalog snapshot, compile + activate a USL,
@@ -17,6 +26,42 @@ class GraftCatalogSuite extends SparkTestBase {
     spark.sql(
       s"REGISTER PARQUET DATASOURCE tpch OPTIONS (path '${sf()}') NAMESPACE graft.datasource.file")
   }
+
+  /** Spark jobs `body` submits from this thread. */
+  private def jobsOf(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.test.jobs") == tag)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try { body; GraftTestBridge.drainListenerBus(sc); jobs.get() }
+    finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The schema the graft catalog handed to the parquet/ORC table it
+    * resolves for `fqn` (graft.<ns...>.<name>); None means Spark infers it.
+    */
+  private def givenSchema(fqn: String): Option[StructType] = {
+    val parts = fqn.split('.').toSeq.drop(1)
+    val cat = new GraftCatalog()
+    cat.initialize("graft", new CaseInsensitiveStringMap(java.util.Map.of("warehouse", warehouseDir)))
+    cat.loadTable(Identifier.of(parts.init.toArray, parts.last)) match {
+      case t: ParquetTable => t.userSpecifiedSchema
+      case t: OrcTable => t.userSpecifiedSchema
+      case t => fail(s"$fqn resolved to ${t.getClass.getName}")
+    }
+  }
+
+  private def columns(fqn: String): Seq[(String, DataType)] =
+    spark.sql(s"SELECT * FROM $fqn").schema.fields.toSeq.map(f => (f.name, f.dataType))
 
   test("registered parquet datasource resolves tables by FQN") {
     val n = spark.sql("SELECT COUNT(*) FROM graft.datasource.file.tpch.nation").head().getLong(0)
@@ -288,5 +333,110 @@ class GraftCatalogSuite extends SparkTestBase {
     checkAnswer(
       spark.sql("SELECT id, name FROM graft.datasource.jdbc.emb.APP.people ORDER BY id"),
       Seq(Row(1, "ada"), Row(2, "grace")))
+  }
+
+  test("a repeated parquet read through the catalog runs only its scan job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    spark.range(10).selectExpr("id AS k", "CAST(id AS STRING) AS v").write.parquet(s"$dir/kv")
+    spark.sql(s"REGISTER PARQUET DATASOURCE memo OPTIONS (path '$dir') NAMESPACE graft.datasource.file")
+    val q = "SELECT * FROM graft.datasource.file.memo.kv"
+    // first read: schema inference (one footer-read job) + the scan
+    assert(jobsOf(assert(spark.sql(q).collect().length == 10)) == 2)
+    // unchanged files: the inferred schema is reused, only the scan runs
+    assert(jobsOf(assert(spark.sql(q).collect().length == 10)) == 1)
+    // equal reads resolve to equal tables, so a cached plan still matches
+    val cached = spark.sql(q).cache()
+    try {
+      assert(cached.count() == 10)
+      assert(spark.sql(q).queryExecution.withCachedData.toString.contains("InMemoryRelation"))
+    } finally cached.unpersist()
+  }
+
+  test("overwriting a parquet table with a new schema shows it on the next statement") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-ow").toString
+    spark.range(3).selectExpr("id AS k", "CAST(id AS STRING) AS v").write.parquet(s"$dir/kv")
+    spark.sql(s"REGISTER PARQUET DATASOURCE memoow OPTIONS (path '$dir') NAMESPACE graft.datasource.file")
+    val fqn = "graft.datasource.file.memoow.kv"
+    assert(columns(fqn) == Seq("k" -> LongType, "v" -> StringType))
+    assert(columns(fqn) == Seq("k" -> LongType, "v" -> StringType))
+    spark.range(4).selectExpr("id AS k", "CAST(id AS DOUBLE) * 1.5 AS w", "CAST(id AS INT) AS x")
+      .write.mode("overwrite").parquet(s"$dir/kv")
+    assert(columns(fqn) == Seq("k" -> LongType, "w" -> DoubleType, "x" -> IntegerType))
+    assert(spark.sql(s"SELECT SUM(x) FROM $fqn").head().getLong(0) == 6)
+    // an appended file with the same schema is also a changed file set
+    spark.range(4, 5).selectExpr("id AS k", "CAST(id AS DOUBLE) * 1.5 AS w", "CAST(id AS INT) AS x")
+      .write.mode("append").parquet(s"$dir/kv")
+    assert(spark.sql(s"SELECT COUNT(*) FROM $fqn").head().getLong(0) == 5)
+  }
+
+  test("parquet inference confs flipped between two reads of one file change the schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-conf").toString
+    // raw parquet files: Spark's own writer records its schema in the footer,
+    // which inference prefers over these confs (and it cannot write NANOS)
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    def rawParquet(table: String, message: String)(fill: Group => Group): Unit = {
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(message)
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/$table/part-0.parquet"),
+        spark.sparkContext.hadoopConfiguration)).withType(schema).build()
+      try w.write(fill(new SimpleGroupFactory(schema).newGroup())) finally w.close()
+    }
+    rawParquet("bin", "message m { required binary c; }")(_.append("c", "x"))
+    rawParquet("nanos", "message m { required int64 c (TIMESTAMP(NANOS,true)); }")(
+      _.append("c", 1000000L))
+    spark.sql(s"REGISTER PARQUET DATASOURCE memoconf OPTIONS (path '$dir') NAMESPACE graft.datasource.file")
+
+    def withConf[T](k: String, v: String)(body: => T): T = {
+      val prev = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val bin = "graft.datasource.file.memoconf.bin"
+    assert(withConf("spark.sql.parquet.binaryAsString", "false")(columns(bin)) == Seq("c" -> BinaryType))
+    assert(withConf("spark.sql.parquet.binaryAsString", "true")(columns(bin)) == Seq("c" -> StringType))
+    assert(withConf("spark.sql.parquet.binaryAsString", "false")(columns(bin)) == Seq("c" -> BinaryType))
+
+    val ts = "graft.datasource.file.memoconf.nanos"
+    assert(withConf("spark.sql.legacy.parquet.nanosAsLong", "true")(columns(ts)) == Seq("c" -> LongType))
+    // without the legacy conf the nanos column is unreadable: the earlier
+    // long-typed inference must not be served
+    val e = intercept[Exception] {
+      withConf("spark.sql.legacy.parquet.nanosAsLong", "false")(columns(ts))
+    }
+    assert(e.getMessage.contains("NANOS"), e.getMessage)
+  }
+
+  test("a registered table snapshot wins over the memoized inference") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-snap").toString
+    spark.range(3).selectExpr("id AS k", "CAST(id AS STRING) AS v").write.parquet(s"$dir/kv")
+    spark.sql(s"REGISTER PARQUET DATASOURCE memosnap OPTIONS (path '$dir') NAMESPACE graft.datasource.file")
+    spark.sql(
+      "REGISTER CATALOG memosnapcat SOURCE graft.datasource.file.memosnap NAME LIKE 'kv' NAMESPACE graft.metastore")
+    // the memo now holds a three-column schema for the same files...
+    spark.range(3).selectExpr("id AS k", "CAST(id AS STRING) AS v", "id * 2 AS extra")
+      .write.mode("overwrite").parquet(s"$dir/kv")
+    assert(columns("graft.datasource.file.memosnap.kv").map(_._1) == Seq("k", "v", "extra"))
+    // ...but the snapshot resolves with its ingested two-column schema
+    assert(columns("graft.metastore.memosnapcat.kv") == Seq("k" -> LongType, "v" -> StringType))
+    assert(givenSchema("graft.metastore.memosnapcat.kv") ==
+      Some(StructType(Seq(StructField("k", LongType), StructField("v", StringType)))))
+  }
+
+  test("orc tables reuse their inferred schema until their files change") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-orc").toString
+    spark.range(3).selectExpr("id AS k", "CAST(id AS STRING) AS v").write.orc(s"$dir/kv")
+    spark.sql(s"REGISTER ORC DATASOURCE memoorc OPTIONS (path '$dir') NAMESPACE graft.datasource.fmt")
+    val fqn = "graft.datasource.fmt.memoorc.kv"
+    def struct(cols: (String, DataType)*) = StructType(cols.map { case (n, t) => StructField(n, t) })
+    assert(givenSchema(fqn) == Some(struct("k" -> LongType, "v" -> StringType)))
+    assert(columns(fqn) == Seq("k" -> LongType, "v" -> StringType))
+    spark.range(4).selectExpr("id AS k", "CAST(id AS DOUBLE) * 1.5 AS w")
+      .write.mode("overwrite").orc(s"$dir/kv")
+    assert(givenSchema(fqn) == Some(struct("k" -> LongType, "w" -> DoubleType)))
+    assert(columns(fqn) == Seq("k" -> LongType, "w" -> DoubleType))
+    assert(spark.sql(s"SELECT SUM(w) FROM $fqn").head().getDouble(0) == 9.0)
   }
 }
