@@ -53,13 +53,9 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // round-over-round comparability: gate sets grow each round, so also emit
-    // the total over the PREVIOUS round's gate set (shared subset) — deltas on
-    // that number are apples-to-apples
-    val sharedPrev = results.collect { case (k, v) if PrevRoundGates(k) => v }.sum
     val hostJson = BenchEnv.hostJson(loadStart, tStart)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""shared_prev_total":$sharedPrev,"n_shared_prev":${results.keys.count(PrevRoundGates)},"sf":"$sfDir",$hostJson}"""
+      s""""sf":"$sfDir",$hostJson}"""
     println(line)
     // the driver's log pipeline truncates long stdout lines (BENCH_r07.json
     // recovered only ~62 of 137 per-gate numbers), so ALSO write the full
@@ -69,7 +65,6 @@ object Bench {
     val pretty = new StringBuilder
     pretty.append("{\n")
     pretty.append(s"""  "metric": "total", "value": $total, "unit": "sec",\n""")
-    pretty.append(s"""  "shared_prev_total": $sharedPrev, "n_shared_prev": ${results.keys.count(PrevRoundGates)},\n""")
     pretty.append(s"""  "n_gates": ${results.size}, "sf": "$sfDir",\n""")
     pretty.append(s"""  $hostJson,\n""")
     pretty.append("  \"queries\": {\n")
@@ -88,56 +83,8 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(summaryPath),
       (s"""{\n  "metric": "total", "value": $total, "unit": "sec",\n""" +
         s"""  "n_gates": ${results.size}, "sf": "$sfDir",\n""" +
-        s"""  "shared_prev_total": $sharedPrev,\n""" +
         s"""  $hostJson,\n""" +
         s"""  "top10_slowest": {\n$top10\n  }\n}\n""").getBytes("UTF-8"))
     spark.stop()
   }
-
-  /** The round-7 gate set (CORRECTNESS_r07.json keys, 137) — shared_prev_total
-    * over these keys gives the apples-to-apples r8-vs-r7 delta. */
-  private val PrevRoundGates: Set[String] = Set(
-    "ann_bruteforce", "ann_hnsw", "ann_ivf", "ann_ivfpq", "ann_lsh",
-    "ann_pq", "api_roundtrip", "bucketed_join", "cat_fqn_join",
-    "cat_snapshot_readback", "cdc_apply", "cdc_scd2", "cdc_scd2_inc",
-    "cmd_lake_history", "cmd_list_dq", "cmd_show_tables",
-    "cmd_usl_lifecycle", "dedup_embedding", "dedup_embedding_inc",
-    "dedup_exact", "dedup_groups", "dedup_incremental", "dedup_ingest_bloom",
-    "dedup_keep_best", "dedup_minhash", "dedup_ngram_jaccard",
-    "dedup_semantic", "dedup_simhash", "dedup_spans", "dq_custom_check",
-    "dq_fk_check", "dq_pk_check", "dq_run_summary", "lake_alter_evolution",
-    "lake_convert_roundtrip", "lake_delta_cdf", "lake_delta_cdf_dml",
-    "lake_iceberg_changelog", "layout_hilbert", "layout_zorder",
-    "multimodal_audio_dedup", "multimodal_features",
-    "multimodal_image_dedup", "multimodal_image_features",
-    "pipeline_curation", "pipeline_curation_v2", "pipeline_curation_v3",
-    "pipeline_dsir", "q17_small_qty_revenue", "q1_pricing_summary",
-    "q22_idle_balances", "q3_shipping_priority", "q5_revenue_by_nation",
-    "q6_forecast_revenue", "q7_nation_volume", "q9_brand_profit",
-    "q_anti_join", "q_approx_distinct", "q_approx_percentile",
-    "q_array_funcs", "q_asof_join", "q_conditional_agg", "q_count_distinct",
-    "q_cube", "q_date_arith", "q_json_extract", "q_percentile", "q_pivot",
-    "q_range_join", "q_rollup", "q_scalar_funcs", "q_semi_join",
-    "q_sessionize", "q_set_ops", "q_time_bucket", "q_unpivot",
-    "q_window_running", "q_window_topk", "sample_group_cap",
-    "sample_hash_split", "sample_mixture", "sample_temperature",
-    "sketch_source_similarity", "skew_salted_agg", "skew_split_join",
-    "src_avro_scan", "src_csv_scan", "src_delta_cmap_scan", "src_delta_dml",
-    "src_delta_dv_dml", "src_delta_dv_scan", "src_delta_merge_sync",
-    "src_delta_scan", "src_delta_write", "src_federated_join",
-    "src_iceberg_dml", "src_iceberg_eq_scan", "src_iceberg_eq_upsert",
-    "src_iceberg_mor_dml", "src_iceberg_mor_scan", "src_iceberg_scan",
-    "src_iceberg_write", "src_jdbc_scan", "src_json_scan",
-    "src_lake_optimize", "src_lake_vacuum", "src_orc_scan",
-    "text_bigram_xent", "text_bpe_roundtrip", "text_c4_clean", "text_chunk",
-    "text_decontaminate", "text_domain_stats", "text_fingerprint",
-    "text_gopher_quality", "text_gopher_repetition", "text_kn_xent",
-    "text_langid", "text_logreg_quality", "text_nb_source", "text_nfc",
-    "text_novelty", "text_pii_scrub", "text_quality", "text_quality_filter",
-    "text_seq_pack", "text_source_stats", "text_unigram_roundtrip",
-    "text_vocab_topk", "unstructured_audio_scan", "unstructured_image_scan",
-    "unstructured_pdf_scan", "unstructured_tag_scan",
-    "unstructured_text_scan", "unstructured_video_scan",
-    "unstructured_write_roundtrip", "usl_readback"
-)
 }

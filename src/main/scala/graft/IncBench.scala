@@ -57,13 +57,13 @@ object IncBench {
       .join(corpusHashes, Seq("__h"), "left_anti").drop("__h")
       .localCheckpoint(true)
     time("corpus_banding") {
-      Dedup.minHashBandedForBench(corpus, "doc_id", "text", 3, 128, 32).count()
+      Dedup.minHashBanded(corpus, "doc_id", "text", 3, 128, 32).count()
     }
     val corpusReps = corpus.groupBy(Dedup.normTextHash("text").as("__rh"))
       .agg(min(col("doc_id")).as("doc_id"), min_by(col("text"), col("doc_id")).as("text"))
       .select(col("doc_id"), col("text"))
     time("corpus_banding_distinct") {
-      Dedup.minHashBandedForBench(corpusReps, "doc_id", "text", 3, 128, 32).count()
+      Dedup.minHashBanded(corpusReps, "doc_id", "text", 3, 128, 32).count()
     }
     // r16 queue #3: does the persisted-index BUILD pay the clique tax?
     // index_build is the shipped ingestIndexBuild; index_build_reps is the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 
 /** Same-JVM stage attribution for the SemDeDup path (gate dedup_semantic:
   * quantizer fit → soft cell assignment → within-cell capped pairs →
@@ -35,9 +35,9 @@ object SemBench {
     }
 
     time("quantizer_fit") {
-      Dedup.semanticQuantizerForBench(emb, "embedding", 4, 4096).length.toLong
+      Similarity.trainSphericalQuantizer(emb, "embedding", 4, 4096).length.toLong
     }
-    val centroids = Dedup.semanticQuantizerForBench(emb, "embedding", 4, 4096)
+    val centroids = Similarity.trainSphericalQuantizer(emb, "embedding", 4, 4096)
     time("cell_assignment") {
       emb.select(explode(graft.functions.GraftFunctions
           .nearest_centroids(col("embedding"), centroids, 2)).as("cell"))

@@ -55,7 +55,7 @@ object SigBench {
         F.shingle_minhash(T.tokens(col("text")), 3, 128), 1))).head().getLong(0)
     }
     time("banding") { // signature + band hash + explode + count
-      Dedup.minHashBandedForBench(docs, "doc_id", "text", 3, 128, 32).count()
+      Dedup.minHashBanded(docs, "doc_id", "text", 3, 128, 32).count()
     }
     time("candidate_pairs") { // banding + bucket self-join + dedup pairs
       Dedup.minHashCandidatePairs(docs, "doc_id", "text").count()

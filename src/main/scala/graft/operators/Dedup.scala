@@ -59,19 +59,21 @@ object Dedup {
     * sort-merge regime where the per-round label side is far past any
     * broadcast estimate. Below it the rounds plan as broadcast joins whose
     * edge side never shuffles, and the extra checkpoint is pure cost
-    * (r18 A/B at both regimes; see the shape comment in duplicateGroups).
+    * (r18 A/B at both regimes; see the shape comment in DistributedLabels).
     */
   val MinLabelPrePartitionEdges = 1L * 1000 * 1000
 
-  /** Canonical edge count up to which [[duplicateGroups]] runs its
-    * min-label rounds on the driver instead of as Spark jobs. 500k edges
-    * collect to ~8 MB of longs — broadcast-class, the same order as one
-    * auto-broadcast join side or the [[MaxHotBuckets]] metadata collect —
-    * while each avoided distributed round is 3-4 serial AQE stage-jobs
-    * (r18 JobProfile: the sf0.1 CC gates are job-count-bound). The driver
-    * loop is bit-exact vs the distributed one (same rounds, budget, stall
-    * detector, maxIter/requireConvergence contract) and defers to it for
-    * the contract-and-star hand-off regime.
+  /** Canonical edge count up to which [[duplicateGroups]] and
+    * [[duplicateGroupsStar]] run ALL their rounds on the driver — min-label,
+    * the contract-and-star hand-off and star alike — instead of as Spark
+    * jobs. 500k edges collect to ~8 MB of longs — broadcast-class, the same
+    * order as one auto-broadcast join side or the [[MaxHotBuckets]]
+    * metadata collect — while each avoided distributed round is 3-5 serial
+    * AQE stage-jobs (r18 JobProfile: the sf0.1 CC gates are
+    * job-count-bound). Both executors run under the one [[CcControl]] loop,
+    * so labels, hook values and exceptions do not depend on the choice.
+    * `spark.graft.cc.driverMaxEdges` overrides the bound; 0 pins the
+    * distributed executor on every graph, the empty one included.
     */
   val DriverCcMaxCanonicalEdges = 500L * 1000
 
@@ -311,6 +313,11 @@ object Dedup {
     *    (min-label emits them as singleton groups; dedup pair generators
     *    never produce self-pairs).
     *
+    * Both this and [[duplicateGroupsStar]] canonicalize the pairs,
+    * materialize and count them in one action, pick the executor by that
+    * count ([[DriverCcMaxCanonicalEdges]]) and run the one [[CcControl]]
+    * loop, so the result does not depend on where the rounds ran.
+    *
     * @param maxIter upper bound on rounds, honored as given for every
     *                 strategy. For `minLabel` it must be >= the largest
     *                 component's diameter; for `star` ~2*log2(n) suffices
@@ -356,380 +363,32 @@ object Dedup {
       return duplicateGroupsStar(pairs, maxIter, requireConvergence,
         reliableCheckpoint, roundsOut)
     val ck = new CkptLoop(pairs.sparkSession, reliableCheckpoint)
-    // materialize the edge list once, in CANONICAL form — (hi, lo) with
-    // duplicates and reversed repeats collapsed, self-pairs kept as (x, x):
-    // one pass over the (expensive) candidate-generation lineage, shuffling
-    // |pairs| rows. Every shape downstream derives from this checkpoint:
-    // the star route seeds on it DIRECTLY (canonical IS star's native edge
-    // form, so routing adds zero materialization over forced star — the r17
-    // lesson: the first cut of this routing built the 2x symmetric closure
-    // before probing and paid ~4 min of redundant shuffle+checkpoint at the
-    // d=8/sf25m frontier), and min-label's symmetric closure is a NARROW
-    // explode of it (both directions of a distinct canonical set are
-    // automatically distinct — no second shuffle, half the checkpoint bytes
-    // of the pre-r17 2x-closure checkpoint).
-    val canonEdges = ck.eager(pairs
+    // CANONICAL form — (hi, lo) with duplicates and reversed repeats
+    // collapsed, self-pairs kept as (x, x): one pass over the (expensive)
+    // candidate-generation lineage. Every shape downstream derives from this
+    // checkpoint: the star-first route seeds on it directly (canonical is
+    // star's native edge form — r17: building the 2x symmetric closure
+    // before routing cost ~4 min of redundant shuffle+checkpoint at the
+    // d=8/sf25m frontier), and min-label's symmetric closure is a narrow
+    // explode of it.
+    val (canon, count) = materialize(ck, pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
-      .distinct())
-    // r17, measured ("CC strategy A/B", BASELINE r17): on the aggressive-
-    // distance frontier graph (90.6M verified pairs, mutated sf25m at d=8)
-    // forced star runs 236 s where the minLabel prefix + mid-run handoff
-    // runs 429 s — identical outputs. minLabel's per-round cost IS the
-    // edge-frame size, and the stall detector below can only fire after
-    // paying at least two such rounds, so on HUGE frames auto routes
-    // star-FIRST. The decision reads one count off the just-checkpointed
-    // canonical frame (milliseconds on gate graphs). Small graphs keep
-    // minLabel-first, which beats star there (sf0.1 gates: dedup_groups
-    // 2.7 s vs dedup_groups_star 3.5 s); the 25M default threshold sits
-    // more than an order of magnitude above every gate / verbatim-scale
-    // graph (< 1M canonical edges) and safely inside the measured star-win
-    // regime (90.6M).
-    val canonCount = canonEdges.count()
-    if (strategy == "auto" && canonCount > autoStarEdgeThreshold) {
-      val starRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-      // drop self-pairs (star's canonical form excludes them, same as the
-      // forced-star path) — a narrow filter over the checkpoint, not a job
-      val out = starLoop(ck, canonEdges.where(col("u") =!= col("v")),
-        maxIter, requireConvergence, Some(starRounds))
-      roundsOut.foreach(_.set(starRounds.get()))
-      return out
-    }
-    // TINY graphs run the min-label rounds ON THE DRIVER (r18, guide §1/§5:
-    // JobProfile showed the sf0.1 CC gates serial-JOB-bound — 40-80 AQE
-    // stage-jobs of < 0.1 s each — and every distributed round here is
-    // 3-4 such jobs over a few thousand edges). The bound is broadcast-class
-    // by design: 500k canonical edges collect to ~8 MB of longs, the same
-    // order as one auto-broadcast join side or the sampledHotBuckets
-    // collect, nothing corpus-scale rides through the driver, and at 100 TB
-    // the rep-level dup graph blows past the bound and keeps the
-    // distributed loop. Bit-exact by construction — the driver loop runs
-    // the SAME synchronous rounds, budget, stall detector, convergence
-    // check, and maxIter/requireConvergence contract as the distributed
-    // loop below, and FALLS BACK to the distributed path the moment it
-    // would enter the contract-and-star-handoff regime (so that regime has
-    // exactly one implementation). Hooks (roundsOut/changedOut) flush only
-    // from whichever path produced the returned labels.
-    val driverCcMax = pairs.sparkSession.conf
-      .get("spark.graft.cc.driverMaxEdges", DriverCcMaxCanonicalEdges.toString).toLong
-    if (canonCount <= driverCcMax) {
-      driverMinLabel(canonEdges, strategy, maxIter, autoRoundBudget,
-          requireConvergence, roundsOut, changedOut) match {
-        case Some(out) => return out
-        case None => () // stall/hand-off regime: distributed path below
-      }
-    }
-    // symmetric closure for min-label: both directions of each canonical
-    // edge, self-pairs once. TWO shapes, picked off the probed edge count
-    // (r18, guide §2.4 "remove shuffles outright" — measured both ways):
-    //  - SMALL graphs (gate/verbatim scale): a NARROW per-round explode of
-    //    the canonical checkpoint. Here the labels side is model-sized, AQE
-    //    re-plans every round's neighbor-min join as a BROADCAST of labels,
-    //    and the edge side therefore never shuffles at all — a
-    //    pre-partitioned closure checkpoint only ADDS its own shuffle +
-    //    materialization (r18 same-slot A/B: dedup_groups 2.96 → 3.33 s
-    //    median with the unconditional closure checkpoint; reverted).
-    //  - MID-regime graphs (labels far past any broadcast threshold, the
-    //    per-round join a sort-merge): materialize the closure ONCE,
-    //    PRE-PARTITIONED on src. The checkpoint preserves the repartition's
-    //    outputPartitioning into the LogicalRDD, so the loop's heaviest
-    //    side (2|E| rows) crosses the network exactly once for the whole
-    //    loop instead of once per round. The labels init rides the same
-    //    partitioning (distinct on id = src). Threshold 1M canonical edges:
-    //    >= 1M edges means >= ~1M distinct node labels, an order of
-    //    magnitude past the 10 MB auto-broadcast estimate at 16 B/row —
-    //    safely inside the sort-merge regime; every gate graph (< 100k
-    //    canonical edges) keeps the broadcast-round shape that wins there.
-    //    (Huge graphs never reach here — auto routes them star-first.)
-    val closureSrc = canonEdges.select(explode(
-        when(col("u") =!= col("v"), array(
-          struct(col("u").as("src"), col("v").as("dst")),
-          struct(col("v").as("src"), col("u").as("dst"))))
-        .otherwise(array(struct(col("u").as("src"), col("v").as("dst"))))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val prePartition = canonCount >= MinLabelPrePartitionEdges
-    val edges =
-      if (prePartition) ck.eager(closureSrc.repartition(col("src")))
-      else closureSrc
-    // the canonical checkpoint is fully superseded by a materialized
-    // closure (nothing on that path reads it again) — reclaim it
-    if (prePartition) ck.drop(canonEdges)
-    var labels = ck.eager(edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
-    ck.seed(labels)
-    val budget = if (strategy == "auto") math.min(autoRoundBudget, maxIter) else maxIter
-    var converged = false
-    var handOff = false
-    var prevChanged = Long.MaxValue
-    var i = 0
-    while (!converged && !handOff && i < budget) {
-      val neighborMin = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("comp")).as("ncomp"))
-      // ONE job per iteration: the convergence check is a count over the
-      // lazily-checkpointed update (carrying the old label as __old), so the
-      // same action that materializes this round's labels also answers "did
-      // anything change" — no second job, no join of two checkpointed frames.
-      val updatedSrc = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("comp").as("__old"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-      val updated = ck.lazily(updatedSrc)
-      val changed = updated.where(col("comp") < col("__old")).count()
-      changedOut.foreach(_ += changed)
-      converged = changed == 0
-      // ADAPTIVE hand-off (auto only): clique-shaped graphs collapse
-      // geometrically — each round's changed count a fraction of the
-      // last — while diameter-shaped graphs propagate labels one hop per
-      // round, so the count flattens. Once the decay stalls (changed not
-      // below half the previous round's, after two rounds of trend) every
-      // further min-label round buys ONE hop: contract NOW and let star
-      // close the remainder in O(log n) rounds instead of burning the rest
-      // of the fixed budget. autoRoundBudget stays the hard cap for decay
-      // curves that degrade slowly.
-      if (!converged && strategy == "auto" && i >= 1 && changed * 2 > prevChanged)
-        handOff = true
-      prevChanged = changed
-      ck.release(updatedSrc)
-      ck.rotate(updated)
-      labels = updated.select(col("id"), col("comp"))
-      i += 1
-    }
-    if (!converged && strategy == "auto" && i < maxIter) {
-      // decay stalled (or budget exhausted) on a wide graph: contract and
-      // let star finish
-      val la = labels.select(col("id").as("src"), col("comp").as("__ca"))
-      val lb = labels.select(col("id").as("dst"), col("comp").as("__cb"))
-      val contracted = edges.join(la, "src").join(lb, "dst")
-        .where(col("__ca") =!= col("__cb"))
-        .select(col("__ca").as("id_a"), col("__cb").as("id_b"))
-      val starRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-      val starLabels = duplicateGroupsStar(contracted, maxIter,
-        requireConvergence, reliableCheckpoint, Some(starRounds))
-      roundsOut.foreach(_.set(i + starRounds.get()))
-      return labels.join(starLabels.withColumnRenamed("id", "comp"), Seq("comp"), "left")
-        .select(col("id"), coalesce(col("group_id"), col("comp")).as("group_id"))
-    }
-    roundsOut.foreach(_.set(i))
-    if (!converged) {
-      val msg = s"duplicateGroups did not converge within maxIter=$maxIter rounds; " +
-        "labels are partially merged (a component wider than maxIter hops exists — " +
-        "raise maxIter above the largest component's diameter)"
-      if (requireConvergence) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    labels.select(col("id"), col("comp").as("group_id"))
-  }
-
-  /** The driver-side twin of [[duplicateGroups]]' min-label loop for
-    * sub-[[DriverCcMaxCanonicalEdges]] canonical edge frames — synchronous
-    * min-label rounds over adjacency arrays, replicating the distributed
-    * loop's update rule, round budget, stall detector, and
-    * maxIter/requireConvergence contract EXACTLY, so the returned labels
-    * (and the roundsOut/changedOut hook values) are bit-identical to the
-    * distributed loop's for every converged-or-truncated path. Returns
-    * None — with hooks untouched — the moment the run would enter the
-    * auto contract-and-star hand-off regime, which stays distributed-only.
-    */
-  private def driverMinLabel(canonEdges: DataFrame, strategy: String,
-      maxIter: Int, autoRoundBudget: Int, requireConvergence: Boolean,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger],
-      changedOut: Option[scala.collection.mutable.Buffer[Long]]): Option[DataFrame] = {
-    val spark = canonEdges.sparkSession
-    val idType = canonEdges.schema("u").dataType
-    val asLong: (org.apache.spark.sql.Row, Int) => Long = idType match {
-      case org.apache.spark.sql.types.LongType => (r, i) => r.getLong(i)
-      case org.apache.spark.sql.types.IntegerType => (r, i) => r.getInt(i).toLong
-      case _ => return None // exotic id type: keep the distributed loop
-    }
-    val rows = canonEdges.collect()
-    // node table + symmetric adjacency in index space (self-pairs keep
-    // their node but contribute no useful neighbor, same as the closure)
-    val index = new java.util.HashMap[java.lang.Long, java.lang.Integer](rows.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]
-    def idx(id: Long): Int = {
-      val got = index.get(id)
-      if (got != null) got.intValue()
-      else { val i = ids.length; index.put(id, i); ids += id; i }
-    }
-    val degree = new scala.collection.mutable.ArrayBuffer[Int]
-    val us = new Array[Int](rows.length)
-    val vs = new Array[Int](rows.length)
-    var r = 0
-    while (r < rows.length) {
-      val u = idx(asLong(rows(r), 0)); val v = idx(asLong(rows(r), 1))
-      us(r) = u; vs(r) = v
-      while (degree.length < ids.length) degree += 0
-      if (u != v) { degree(u) += 1; degree(v) += 1 }
-      r += 1
-    }
-    val n = ids.length
-    val offsets = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { offsets(i + 1) = offsets(i) + degree(i); i += 1 }
-    val nbrs = new Array[Int](offsets(n))
-    val fill = offsets.clone()
-    r = 0
-    while (r < rows.length) {
-      val u = us(r); val v = vs(r)
-      if (u != v) { nbrs(fill(u)) = v; fill(u) += 1; nbrs(fill(v)) = u; fill(v) += 1 }
-      r += 1
-    }
-    var comp = Array.tabulate(n)(k => ids(k))
-    val decay = new scala.collection.mutable.ArrayBuffer[Long]
-    val budget = if (strategy == "auto") math.min(autoRoundBudget, maxIter) else maxIter
-    var converged = false
-    var handOff = false
-    var prevChanged = Long.MaxValue
-    var it = 0
-    while (!converged && !handOff && it < budget) {
-      val next = new Array[Long](n)
-      var changed = 0L
-      i = 0
-      while (i < n) {
-        var m = comp(i)
-        var e = offsets(i)
-        while (e < offsets(i + 1)) {
-          val c = comp(nbrs(e)); if (c < m) m = c; e += 1
-        }
-        next(i) = m
-        if (m < comp(i)) changed += 1
-        i += 1
-      }
-      decay += changed
-      converged = changed == 0
-      if (!converged && strategy == "auto" && it >= 1 && changed * 2 > prevChanged)
-        handOff = true
-      prevChanged = changed
-      comp = next
-      it += 1
-    }
-    if (handOff || (!converged && strategy == "auto" && it < maxIter)) {
-      // the contract-and-star hand-off regime, on the driver: contract the
-      // graph through the partial labels and close with the SAME
-      // alternating-star rounds the distributed hand-off runs — identical
-      // set evolution, identical round count, identical
-      // converge-or-throw/warn contract (see the distributed block below)
-      val contracted = new scala.collection.mutable.HashSet[(Long, Long)]
-      r = 0
-      while (r < rows.length) {
-        val cu = comp(us(r)); val cv = comp(vs(r))
-        if (cu != cv) contracted += ((math.max(cu, cv), math.min(cu, cv)))
-        r += 1
-      }
-      val (starEdges, starRounds, starConverged) =
-        driverStarRounds(contracted, maxIter)
-      roundsOut.foreach(_.set(it + starRounds))
-      changedOut.foreach(_ ++= decay)
-      if (!starConverged) {
-        val msg = s"duplicateGroupsStar did not converge within maxIter=$maxIter rounds"
-        if (requireConvergence) throw new IllegalStateException(msg)
-        log.warn(msg)
-      }
-      // star fixpoint labels over contracted comps; comps fully merged
-      // before the hand-off (no surviving edge) keep their comp — the same
-      // left-join + coalesce as the distributed hand-off, including the
-      // multi-row corner of a non-converged star edge set
-      val starLabels = new scala.collection.mutable.HashMap[Long,
-        scala.collection.mutable.ArrayBuffer[Long]]
-      starEdges.foreach { case (u, v) =>
-        starLabels.getOrElseUpdate(u, new scala.collection.mutable.ArrayBuffer[Long]) += v
-        starLabels.getOrElseUpdate(v, new scala.collection.mutable.ArrayBuffer[Long]) += v
-      }
-      val outPairs = new scala.collection.mutable.HashSet[(Long, Long)]
-      i = 0
-      while (i < n) {
-        starLabels.get(comp(i)) match {
-          case Some(gs) => gs.foreach(g => outPairs += ((ids(i), g)))
-          case None => outPairs += ((ids(i), comp(i)))
-        }
-        i += 1
-      }
-      return Some(localLabels(spark, idType, outPairs))
-    }
-    roundsOut.foreach(_.set(it))
-    changedOut.foreach(_ ++= decay)
-    if (!converged) {
-      val msg = s"duplicateGroups did not converge within maxIter=$maxIter rounds; " +
-        "labels are partially merged (a component wider than maxIter hops exists — " +
-        "raise maxIter above the largest component's diameter)"
-      if (requireConvergence) throw new IllegalStateException(msg)
-      log.warn(msg)
-    }
-    val outPairs = new scala.collection.mutable.HashSet[(Long, Long)]
-    i = 0
-    while (i < n) { outPairs += ((ids(i), comp(i))); i += 1 }
-    Some(localLabels(spark, idType, outPairs))
-  }
-
-  /** Build the (id, group_id) local relation for the driver CC paths, in
-    * the caller's id type.
-    */
-  private def localLabels(spark: org.apache.spark.sql.SparkSession,
-      idType: org.apache.spark.sql.types.DataType,
-      pairs: Iterable[(Long, Long)]): DataFrame = {
-    val rows = pairs.toSeq.sorted.map { case (id, g) =>
-      if (idType == org.apache.spark.sql.types.LongType)
-        org.apache.spark.sql.Row(id, g)
-      else org.apache.spark.sql.Row(id.toInt, g.toInt)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType, nullable = false),
-      org.apache.spark.sql.types.StructField("group_id", idType, nullable = false)))
-    spark.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      schema)
-  }
-
-  /** Driver-side twin of [[starLoop]]'s round evolution over an in-memory
-    * canonical edge set: alternating large-star / small-star with the same
-    * structural star-forest convergence test, so round counts and the final
-    * edge set are identical to the distributed loop's for the same input.
-    * Returns (final edge set, rounds, converged).
-    */
-  private def driverStarRounds(edges0: scala.collection.Set[(Long, Long)],
-      maxIter: Int): (scala.collection.Set[(Long, Long)], Int, Boolean) = {
-    var edges: scala.collection.Set[(Long, Long)] = edges0
-    // match starLoop exactly: the test runs on round OUTPUT only, so even a
-    // star-forest input pays one (idempotent) round before it is detected
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // largeStar: m(x) = min(neighborhood(x) ∪ {x}); every directed
-      // neighbor pair (a, b) with b > a emits (b, m(a)) — for a canonical
-      // edge (u, v) with u > v that is exactly (u, m(v))
-      val minNbr = new scala.collection.mutable.HashMap[Long, Long]
-      edges.foreach { case (u, v) =>
-        if (v < minNbr.getOrElse(u, Long.MaxValue)) minNbr(u) = v
-        if (u < minNbr.getOrElse(v, Long.MaxValue)) minNbr(v) = u
-      }
-      def m(x: Long): Long = math.min(x, minNbr.getOrElse(x, x))
-      val ls = new scala.collection.mutable.HashSet[(Long, Long)]
-      edges.foreach { case (u, v) => ls += ((u, m(v))) } // m(v) <= v < u: canonical
-      // smallStar over the canonical large-star output: m2(u) = min parent;
-      // relink (u, v): v != m2(u) → (v, m2(u)); plus (u, m2(u)) per child
-      val m2 = new scala.collection.mutable.HashMap[Long, Long]
-      ls.foreach { case (u, v) => if (v < m2.getOrElse(u, Long.MaxValue)) m2(u) = v }
-      val ss = new scala.collection.mutable.HashSet[(Long, Long)]
-      ls.foreach { case (u, v) =>
-        val mu = m2(u)
-        if (v != mu) ss += ((v, mu)) // mu = min of u's parents < v: canonical
-        ss += ((u, mu))
-      }
-      edges = ss
-      converged = isStarForest(edges)
-      i += 1
-    }
-    (edges, i, converged)
-  }
-
-  /** Canonical edge set is a depth-1 star forest: no child has two parents,
-    * no parent is itself a child — the same structural test [[starLoop]]
-    * counts violations of.
-    */
-  private def isStarForest(edges: scala.collection.Set[(Long, Long)]): Boolean = {
-    val asU = new scala.collection.mutable.HashSet[Long]
-    val asV = new scala.collection.mutable.HashSet[Long]
-    edges.foreach { case (u, v) => if (!asU.add(u)) return false; asV += v }
-    asU.forall(u => !asV.contains(u))
+      .distinct(), counted = true)
+    val driverMax = driverMaxEdges(pairs.sparkSession)
+    if (strategy == "auto" && count > autoStarEdgeThreshold)
+      // r17, measured ("CC strategy A/B", BASELINE r17): min-label's
+      // per-round cost IS the edge-frame size and the stall detector fires
+      // only after two such rounds, so huge frames go star-first. Self-pairs
+      // drop (star's canonical form excludes them) — a narrow filter over
+      // the checkpoint, not a job.
+      CcControl.star(starRounds(ck, canon.where(col("u") =!= col("v")), count, driverMax),
+        maxIter, requireConvergence, roundsOut)
+    else
+      CcControl.minLabel(
+        if (onDriver(driverMax, count, canon)) new DriverLabels(new DriverIo(canon))
+        else new DistributedLabels(ck, canon, count, reliableCheckpoint),
+        strategy == "auto", maxIter, autoRoundBudget, requireConvergence, roundsOut, changedOut)
   }
 
   /** Connected components by the ALTERNATING large-star / small-star
@@ -760,48 +419,13 @@ object Dedup {
   def duplicateGroupsStar(pairs: DataFrame, maxIter: Int = 35,
       requireConvergence: Boolean = true,
       reliableCheckpoint: Boolean = false,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None): DataFrame = {
-    val ck = new CkptLoop(pairs.sparkSession, reliableCheckpoint)
-    val edges = ck.eager(canonEdgeForm(
-      pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
-    // TINY graphs run the alternating-star rounds ON THE DRIVER — the same
-    // broadcast-class bound, round evolution, and structural convergence
-    // test as [[duplicateGroups]]' min-label hatch (see
-    // [[DriverCcMaxCanonicalEdges]]); each avoided distributed round is
-    // ~5 serial AQE stage-jobs. The probe count reads the just-materialized
-    // checkpoint (cheap at gate scale; at 100 TB the bound never engages
-    // and the count is one scan of the frame the loop was about to join
-    // every round anyway). spark.graft.cc.driverMaxEdges=0 pins the
-    // distributed rounds (tests, scale A/Bs).
-    val driverMax = pairs.sparkSession.conf
-      .get("spark.graft.cc.driverMaxEdges", DriverCcMaxCanonicalEdges.toString).toLong
-    if (driverMax > 0 && edges.count() <= driverMax) {
-      val idType = edges.schema("u").dataType
-      val isLong = idType == org.apache.spark.sql.types.LongType
-      if (isLong || idType == org.apache.spark.sql.types.IntegerType) {
-        val collected = new scala.collection.mutable.HashSet[(Long, Long)]
-        edges.collect().foreach { r0 =>
-          if (isLong) collected += ((r0.getLong(0), r0.getLong(1)))
-          else collected += ((r0.getInt(0).toLong, r0.getInt(1).toLong))
-        }
-        val (fix, rounds, converged) = driverStarRounds(collected, maxIter)
-        roundsOut.foreach(_.set(rounds))
-        if (!converged) {
-          val msg = s"duplicateGroupsStar did not converge within maxIter=$maxIter rounds"
-          if (requireConvergence) throw new IllegalStateException(msg)
-          log.warn(msg)
-        }
-        // fixpoint = forest of stars: u -> root, roots close over themselves
-        val outPairs = new scala.collection.mutable.HashSet[(Long, Long)]
-        fix.foreach { case (u, v) => outPairs += ((u, v)); outPairs += ((v, v)) }
-        return localLabels(pairs.sparkSession, idType, outPairs)
-      }
-    }
-    starLoop(ck, edges, maxIter, requireConvergence, roundsOut)
-  }
+      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None): DataFrame =
+    CcControl.star(starPhase(new CkptLoop(pairs.sparkSession, reliableCheckpoint),
+        canonEdgeForm(pairs.select(col("id_a").as("u"), col("id_b").as("v")))),
+      maxIter, requireConvergence, roundsOut)
 
   /** Canonical directed edge form: u > v (larger endpoint first), no self
-    * loops, distinct. The native edge representation of [[starLoop]].
+    * loops, distinct. The native edge representation of the star rounds.
     */
   private def canonEdgeForm(df: DataFrame): DataFrame =
     df.where(col("u") =!= col("v"))
@@ -809,54 +433,264 @@ object Dedup {
         least(col("u"), col("v")).as("v"))
       .distinct()
 
-  /** The alternating large-star / small-star round loop shared by
-    * [[duplicateGroupsStar]] and [[duplicateGroups]]' auto star-first route.
-    * `edges0` must be an ALREADY-CHECKPOINTED frame in [[canonEdgeForm]]
-    * (or a narrow transform of one — the auto route passes a self-pair
-    * filter over its canonical checkpoint); `ck` owns the round rotation.
+  /** Materialize a canonical edge frame through `ck`. With `counted`, the
+    * row count is the materializing action's own result, so counting costs
+    * no job of its own.
     */
-  private def starLoop(ck: CkptLoop, edges0: DataFrame, maxIter: Int,
-      requireConvergence: Boolean,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger]): DataFrame = {
+  private def materialize(ck: CkptLoop, canon: DataFrame,
+      counted: Boolean): (DataFrame, Long) =
+    if (!counted) (ck.eager(canon), -1L)
+    else {
+      val out = ck.lazily(canon)
+      val n = out.count()
+      ck.release(canon)
+      (out, n)
+    }
+
+  private def driverMaxEdges(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.get("spark.graft.cc.driverMaxEdges", DriverCcMaxCanonicalEdges.toString).toLong
+
+  /** The one executor choice, for both entry points and the star phase
+    * after a hand-off: the driver runs a canonical edge frame of `count`
+    * rows iff the driver bound is positive, the count is within it, and the
+    * ids are Long or Int. A bound of 0 pins the distributed executor on
+    * every graph, the empty one included.
+    */
+  private def onDriver(driverMax: Long, count: Long, edges: DataFrame): Boolean =
+    driverMax > 0 && count <= driverMax &&
+      Set[org.apache.spark.sql.types.DataType](org.apache.spark.sql.types.LongType,
+        org.apache.spark.sql.types.IntegerType).contains(edges.schema("u").dataType)
+
+  /** Materialize a [[canonEdgeForm]] frame and pick its star executor. The
+    * count is taken only when the driver executor is enabled at all — with
+    * the bound at 0 nothing reads it.
+    */
+  private def starPhase(ck: CkptLoop, canon: DataFrame): CcControl.StarRounds[DataFrame] = {
+    val driverMax = driverMaxEdges(canon.sparkSession)
+    val (edges, count) = materialize(ck, canon, counted = driverMax > 0)
+    starRounds(ck, edges, count, driverMax)
+  }
+
+  private def starRounds(ck: CkptLoop, edges: DataFrame, count: Long,
+      driverMax: Long): CcControl.StarRounds[DataFrame] =
+    if (onDriver(driverMax, count, edges)) {
+      val io = new DriverIo(edges)
+      new DriverStar(io, io.collect())
+    } else new DistributedStar(ck, edges)
+
+  /** Moves a materialized canonical (u, v) frame of Long or Int ids to the
+    * driver as longs, and builds (id, group_id) local relations back in the
+    * frame's id type.
+    */
+  private final class DriverIo(edges: DataFrame) {
+    private val idType = edges.schema("u").dataType
+    private val isLong = idType == org.apache.spark.sql.types.LongType
+
+    def collect(): Array[(Long, Long)] = edges.collect().map { r =>
+      if (isLong) (r.getLong(0), r.getLong(1)) else (r.getInt(0).toLong, r.getInt(1).toLong)
+    }
+
+    def labels(pairs: Iterable[(Long, Long)]): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      val rows = pairs.toSeq.sorted.map { case (id, g) =>
+        if (isLong) org.apache.spark.sql.Row(id, g)
+        else org.apache.spark.sql.Row(id.toInt, g.toInt)
+      }
+      edges.sparkSession.createDataFrame(rows.asJava,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id", idType, nullable = false),
+          org.apache.spark.sql.types.StructField("group_id", idType, nullable = false))))
+    }
+  }
+
+  /** The driver executor's min-label rounds over the collected edge list in
+    * index space: each node takes the minimum label of itself and its
+    * neighbors, synchronously — the [[DistributedLabels]] update rule.
+    */
+  private final class DriverLabels(io: DriverIo) extends CcControl.LabelRounds[DataFrame] {
+    private val edges = io.collect()
+    private val ids = edges.flatMap(e => Array(e._1, e._2)).sorted.distinct
+    private val us = edges.map(e => java.util.Arrays.binarySearch(ids, e._1))
+    private val vs = edges.map(e => java.util.Arrays.binarySearch(ids, e._2))
+    private var comp = ids
+    private var star: Option[DriverStar] = None
+
+    def round(): Long = {
+      val next = comp.clone()
+      var e = 0
+      while (e < us.length) {
+        val u = us(e); val v = vs(e)
+        if (comp(v) < next(u)) next(u) = comp(v)
+        if (comp(u) < next(v)) next(v) = comp(u)
+        e += 1
+      }
+      val changed = next.indices.count(i => next(i) < comp(i)).toLong
+      comp = next
+      changed
+    }
+
+    def contract(): CcControl.StarRounds[DataFrame] = {
+      val s = new DriverStar(io, us.indices.collect {
+        case e if comp(us(e)) != comp(vs(e)) =>
+          (math.max(comp(us(e)), comp(vs(e))), math.min(comp(us(e)), comp(vs(e))))
+      })
+      star = Some(s)
+      s
+    }
+
+    def emit(): DataFrame = {
+      val starLabels = star.fold(Map.empty[Long, Iterable[Long]])(_.labels.groupMap(_._1)(_._2))
+      io.labels(ids.indices.flatMap(i =>
+        starLabels.getOrElse(comp(i), Seq(comp(i))).map(ids(i) -> _)))
+    }
+  }
+
+  /** The driver executor's star rounds over an in-memory canonical edge
+    * set: the same set evolution and structural fixpoint test as
+    * [[DistributedStar]].
+    */
+  private final class DriverStar(io: DriverIo, edges0: Iterable[(Long, Long)])
+      extends CcControl.StarRounds[DataFrame] {
+    private var edges: scala.collection.Set[(Long, Long)] = edges0.toSet
+
+    def round(): Boolean = {
+      // largeStar: m(x) = min(neighborhood(x) ∪ {x}); every directed
+      // neighbor pair (a, b) with b > a emits (b, m(a)) — for a canonical
+      // edge (u, v) with u > v that is exactly (u, m(v))
+      val minNbr = new scala.collection.mutable.HashMap[Long, Long]
+      edges.foreach { case (u, v) =>
+        if (v < minNbr.getOrElse(u, Long.MaxValue)) minNbr(u) = v
+        if (u < minNbr.getOrElse(v, Long.MaxValue)) minNbr(v) = u
+      }
+      val ls = edges.map { case (u, v) => (u, math.min(v, minNbr.getOrElse(v, v))) }
+      // smallStar over the canonical large-star output: m2(u) = min parent;
+      // relink (u, v): v != m2(u) → (v, m2(u)); plus (u, m2(u)) per child
+      val m2 = new scala.collection.mutable.HashMap[Long, Long]
+      ls.foreach { case (u, v) => if (v < m2.getOrElse(u, Long.MaxValue)) m2(u) = v }
+      edges = ls.flatMap { case (u, v) =>
+        val mu = m2(u) // the min of u's parents < v: canonical
+        if (v != mu) Seq((v, mu), (u, mu)) else Seq((u, mu))
+      }
+      // a canonical edge set is a depth-1 star forest iff no child has two
+      // parents and no parent is itself a child
+      val children = new scala.collection.mutable.HashSet[Long]
+      edges.forall(e => children.add(e._1)) && edges.forall(e => !children.contains(e._2))
+    }
+
+    def labels: scala.collection.Set[(Long, Long)] =
+      edges.flatMap { case (u, v) => Seq((u, v), (v, v)) }
+
+    def emit(): DataFrame = io.labels(labels)
+  }
+
+  /** The distributed executor's min-label rounds over the canonical
+    * checkpoint `canon` (`count` rows), one Spark action per round.
+    */
+  private final class DistributedLabels(ck: CkptLoop, canon: DataFrame, count: Long,
+      reliableCheckpoint: Boolean) extends CcControl.LabelRounds[DataFrame] {
+    // symmetric closure: both directions of each canonical edge, self-pairs
+    // once. Below [[MinLabelPrePartitionEdges]] it is a NARROW per-round
+    // explode of the canonical checkpoint: AQE plans each round's join as a
+    // broadcast of the labels, so the edge side never shuffles (r18 A/B: a
+    // closure checkpoint here only added its own shuffle, dedup_groups
+    // 2.96 → 3.33 s). From it, the per-round join is a sort-merge, and the
+    // closure is materialized ONCE pre-partitioned on src, so its 2|E| rows
+    // cross the network once for the whole loop instead of once per round.
+    private val edges = {
+      val closure = canon.select(explode(
+          when(col("u") =!= col("v"), array(
+            struct(col("u").as("src"), col("v").as("dst")),
+            struct(col("v").as("src"), col("u").as("dst"))))
+          .otherwise(array(struct(col("u").as("src"), col("v").as("dst"))))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      if (count < MinLabelPrePartitionEdges) closure
+      else {
+        val out = ck.eager(closure.repartition(col("src")))
+        ck.drop(canon) // fully superseded by the closure: nothing reads it again
+        out
+      }
+    }
+    private var labels = ck.eager(edges.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")))
+    ck.seed(labels)
+    private var star: Option[CcControl.StarRounds[DataFrame]] = None
+
+    def round(): Long = {
+      val neighborMin = edges.join(labels.withColumnRenamed("id", "src"), "src")
+        .groupBy(col("dst").as("id")).agg(min(col("comp")).as("ncomp"))
+      // ONE job per round: the convergence check is a count over the
+      // lazily-checkpointed update (carrying the old label as __old), so the
+      // same action that materializes this round's labels also answers "did
+      // anything change" — no second job, no join of two checkpointed frames.
+      val updatedSrc = labels.join(neighborMin, Seq("id"), "left")
+        .select(col("id"), col("comp").as("__old"),
+          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
+      val updated = ck.lazily(updatedSrc)
+      val changed = updated.where(col("comp") < col("__old")).count()
+      ck.release(updatedSrc)
+      ck.rotate(updated)
+      labels = updated.select(col("id"), col("comp"))
+      changed
+    }
+
+    def contract(): CcControl.StarRounds[DataFrame] = {
+      val la = labels.select(col("id").as("src"), col("comp").as("__ca"))
+      val lb = labels.select(col("id").as("dst"), col("comp").as("__cb"))
+      val s = starPhase(new CkptLoop(canon.sparkSession, reliableCheckpoint),
+        canonEdgeForm(edges.join(la, "src").join(lb, "dst")
+          .select(col("__ca").as("u"), col("__cb").as("v"))))
+      star = Some(s)
+      s
+    }
+
+    def emit(): DataFrame = star match {
+      case None => labels.select(col("id"), col("comp").as("group_id"))
+      case Some(s) =>
+        labels.join(s.emit().withColumnRenamed("id", "comp"), Seq("comp"), "left")
+          .select(col("id"), coalesce(col("group_id"), col("comp")).as("group_id"))
+    }
+  }
+
+  /** The distributed executor's star rounds over an ALREADY-CHECKPOINTED
+    * [[canonEdgeForm]] frame (or a narrow transform of one — the auto
+    * star-first route passes a self-pair filter over its canonical
+    * checkpoint); `ck` owns the round rotation.
+    */
+  private final class DistributedStar(ck: CkptLoop, edges0: DataFrame)
+      extends CcControl.StarRounds[DataFrame] {
+    private var edges = edges0
+    ck.seed(edges)
+
     // large-star: every node links its strictly-larger neighbors to the
     // minimum of its neighborhood (including itself) — long chains collapse
     // toward minima in halving hops
-    def largeStar(e: DataFrame): DataFrame = {
+    private def largeStar(e: DataFrame): DataFrame = {
       val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       val mins = nbrs.groupBy("u").agg(min(col("v")).as("mv"))
         .select(col("u"), least(col("mv"), col("u")).as("m"))
       nbrs.where(col("v") > col("u")).join(mins, "u")
         .select(col("v").as("u"), col("m").as("v")) // v > u >= m: stays canonical
     }
+
     // small-star: every node links its smaller neighbors (and itself) to
     // their collective minimum — stars flatten to depth one
-    def smallStar(e: DataFrame): DataFrame = {
+    private def smallStar(e: DataFrame): DataFrame = {
       val mins = e.groupBy("u").agg(min(col("v")).as("m"))
       val relinked = e.join(mins, "u")
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
       relinked.unionByName(mins.select(col("u"), col("m").as("v")))
     }
-    var edges = edges0
-    ck.seed(edges)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+
+    def round(): Boolean = {
       val nextSrc = canonEdgeForm(smallStar(canonEdgeForm(largeStar(edges))))
       val next = ck.lazily(nextSrc)
-      // ONE job per round: a STRUCTURAL fixpoint test that both materializes
-      // this round's checkpoint and answers "is this a star forest" on the
-      // round's OWN output. The loop's fixpoints are exactly the star
-      // forests (largeStar relinks any u with two parents or any
-      // parent-of-a-parent; a canonical depth-1 forest maps to itself), and
-      // a canonical (u > v) edge set is a star forest iff no child has two
-      // parents (u repeated) and no parent is itself a child (a node both u
-      // and v). Detecting that structurally converges one whole round
-      // EARLIER than the r13–r17 set-equality marker join, which could only
-      // observe a fixpoint by paying the NEXT round's full transform to
-      // compare against — and it reads one frame where the outer join read
-      // two (r18, guide §1/§2.4: the CC gates are serial-job-bound). Exact,
-      // no probabilistic checksum: one narrow explode + one aggregate.
+      // ONE job per round: a STRUCTURAL fixpoint test on the round's own
+      // output that also materializes its checkpoint. The fixpoints are
+      // exactly the star forests, and a canonical (u > v) edge set is one
+      // iff no child has two parents (u repeated) and no parent is itself a
+      // child (a node both u and v) — detected on the producing round, one
+      // round earlier than a set-equality join against the next round.
       val violations = next.select(explode(array(
           struct(col("u").as("n"), lit(1L).as("cu"), lit(0L).as("cv")),
           struct(col("v").as("n"), lit(0L).as("cu"), lit(1L).as("cv")))).as("e"))
@@ -865,22 +699,16 @@ object Dedup {
         .agg(sum(col("cu")).as("nu"), sum(col("cv")).as("nv"))
         .where(col("nu") > 1 || (col("nu") > 0 && col("nv") > 0))
         .count()
-      converged = violations == 0
       ck.release(nextSrc)
       ck.rotate(next)
       edges = next
-      i += 1
+      violations == 0
     }
-    roundsOut.foreach(_.set(i))
-    if (!converged) {
-      val msg = s"duplicateGroupsStar did not converge within maxIter=$maxIter rounds"
-      if (requireConvergence) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    // fixpoint = forest of stars: u -> root, roots close over themselves
-    edges.select(col("u").as("id"), col("v").as("group_id"))
-      .unionByName(edges.select(col("v").as("id"), col("v").as("group_id")))
-      .distinct()
+
+    def emit(): DataFrame =
+      edges.select(col("u").as("id"), col("v").as("group_id"))
+        .unionByName(edges.select(col("v").as("id"), col("v").as("group_id")))
+        .distinct()
   }
 
   /** Retention policy over near-duplicate groups: keep the single best member
@@ -1341,15 +1169,7 @@ object Dedup {
     * signature/banding expressions [[minHashCandidatePairs]] uses, factored
     * so the asymmetric ingest join bands each side independently.
     */
-  /** Bench hook: the banded LSH frame alone (signature + band hash +
-    * explode), so stage-attribution harnesses ([[graft.SigBench]]) can time
-    * candidate generation's first half without the bucket join.
-    */
-  def minHashBandedForBench(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, numHashes: Int, bands: Int): DataFrame =
-    minHashBanded(df, idCol, textCol, shingleSize, numHashes, bands)
-
-  private[operators] def minHashBanded(df: DataFrame, idCol: String, textCol: String,
+  private[graft] def minHashBanded(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0)
     val rowsPerBand = numHashes / bands
@@ -2253,14 +2073,6 @@ object Dedup {
       .where(col("cosine") >= threshold)
     if (probes <= 1) pairs else pairs.distinct()
   }
-
-  /** Bench hook ([[graft.SemBench]] stage attribution): the quantizer fit
-    * alone, so the driver-local k-means cost is observable separately from
-    * the distributed stages.
-    */
-  def semanticQuantizerForBench(df: DataFrame, vecCol: String,
-      nCells: Int, sampleSize: Int): Array[Array[Double]] =
-    Similarity.trainSphericalQuantizer(df, vecCol, nCells, sampleSize)
 
   /** The candidate pairs SemDeDup scores before cosine verification — the
     * scaling-evidence twin of [[Similarity.lshScoredPairs]]: proves the

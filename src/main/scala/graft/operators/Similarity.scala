@@ -224,7 +224,7 @@ object Similarity {
     * [[Dedup.semanticDuplicates]] (SemDeDup clusters with the same spherical
     * coarse quantizer IVF uses for cell pruning).
     */
-  private[operators] def trainSphericalQuantizer(corpus: DataFrame, vecCol: String,
+  private[graft] def trainSphericalQuantizer(corpus: DataFrame, vecCol: String,
       nCells: Int, sampleSize: Int): Array[Array[Double]] = {
     val samplePts = corpus
       .select(col(vecCol).cast("array<double>").as("__v"), rand(42L).as("__r"))

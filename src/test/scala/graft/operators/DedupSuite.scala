@@ -1136,43 +1136,66 @@ class DedupSuite extends SparkTestBase {
     assert(out == expected)
   }
 
-  test("driver min-label hatch: labels, hooks, and truncation contract bit-identical to the distributed loop") {
+  test("driverMaxEdges=0 pins the distributed executor on an empty graph too") {
     import spark.implicits._
-    // converging mix (two cliques sharing a node + a separate pair) and a
-    // truncation case (chain wider than maxIter hops, forced minLabel) —
-    // each run both through the driver hatch (default) and the distributed
-    // loop (hatch disabled), comparing labels AND the diagnostic hooks
-    def runBoth(pairs: org.apache.spark.sql.DataFrame, maxIter: Int, strategy: String) = {
-      def once() = {
-        val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
-        val decay = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val labels = Dedup.duplicateGroups(pairs, maxIter = maxIter,
-            strategy = strategy, roundsOut = Some(rounds), changedOut = Some(decay))
-          .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-        (labels, rounds.get(), decay.toSeq)
-      }
-      val hatch = once()
-      spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-      try { (hatch, once()) }
-      finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val counts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "count") counts.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
-    val mix = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 7L), (7L, 9L), (20L, 21L))
-      .toDF("id_a", "id_b")
-    val (h1, d1) = runBoth(mix, maxIter = 20, strategy = "auto")
-    assert(h1 == d1, s"hatch=$h1 distributed=$d1")
-    // truncation: a 40-hop chain at maxIter=5 must return the SAME partial
-    // labels (and per-round changed counts) from both implementations
-    val chain = (0L until 40L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("id_a", "id_b")
-    val (h2, d2) = runBoth(chain, maxIter = 5, strategy = "minLabel")
-    assert(h2 == d2, s"partial labels diverge: hatch=${h2._2}/${h2._3} dist=${d2._2}/${d2._3}")
-    // stall → contract-and-star hand-off: a 120-hop chain flattens the
-    // decay after 2 rounds; the driver hatch must reproduce the distributed
-    // hand-off's labels, total rounds, AND decay curve
-    val chain120 = (0L until 120L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("id_a", "id_b")
-    val (h3, d3) = runBoth(chain120, maxIter = 20, strategy = "auto")
-    assert(h3 == d3, s"hand-off diverges: hatch=${h3._2}/${h3._3} dist=${d3._2}/${d3._3}")
+    spark.listenerManager.register(ql)
+    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
+    try {
+      val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
+      assert(Dedup.duplicateGroups(empty, roundsOut = Some(rounds)).collect().isEmpty)
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      // one count materializes the canonical edges; the distributed round is
+      // the second (the driver executor counts nothing per round)
+      assert(rounds.get() == 1 && counts.get() == 2,
+        s"expected 1 distributed round after the materializing count, got " +
+          s"${rounds.get()} rounds and ${counts.get()} counting actions")
+    } finally {
+      spark.conf.unset("spark.graft.cc.driverMaxEdges")
+      spark.listenerManager.unregister(ql)
+    }
+  }
+
+  test("CC entry points materialize and count the canonical edges in one job") {
+    import spark.implicits._
+    val chain = (0L until 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      .localCheckpoint(true) // isolate the entry points' own jobs
+    def jobsIn(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try { body; org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext); jobs.get() }
+      finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // AQE runs each query stage as its own job — pin it off so jobs == actions.
+    // A bound below the 6 canonical edges keeps the distributed executor but
+    // still needs the count; maxIter = 0 stops before the first round.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.graft.cc.driverMaxEdges", "1")
+    try {
+      // the materializing count, then the eager initial labels — no job
+      // counts the canonical edges apart from the one that materializes them
+      val minLabel = jobsIn(Dedup.duplicateGroups(chain, maxIter = 0, strategy = "minLabel"))
+      assert(minLabel == 2, s"duplicateGroups set-up jobs: $minLabel")
+      val star = jobsIn(Dedup.duplicateGroupsStar(chain, maxIter = 0, requireConvergence = false))
+      assert(star == 1, s"duplicateGroupsStar set-up jobs: $star")
+    } finally {
+      spark.conf.unset("spark.graft.cc.driverMaxEdges")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("spark.graft.checkpoint.reliable routes one-shot lineage cuts to reliable storage, values identical") {
