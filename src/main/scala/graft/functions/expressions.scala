@@ -224,6 +224,41 @@ case class WordShingles(child: Expression, n: Int)
   override def prettyName: String = "word_shingles"
 }
 
+/** Occurrence count of each distinct element of an array<string>, in
+  * first-occurrence order: ["a","b","a"] -> [{a,2},{b,1}]. One hash pass,
+  * linear in the array's length. Null elements are not counted.
+  */
+case class TokenCounts(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("w", StringType, nullable = false),
+    StructField("c", IntegerType, nullable = false))), containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"token_counts expects array<string>, got $t")
+  }
+  override def nullSafeEval(input: Any): Any = {
+    val arr = input.asInstanceOf[ArrayData]
+    val counts = new java.util.LinkedHashMap[UTF8String, Array[Int]]()
+    var i = 0
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i)) {
+        val w = arr.getUTF8String(i)
+        val c = counts.get(w)
+        if (c == null) counts.put(w.clone(), Array(1)) else c(0) += 1
+      }
+      i += 1
+    }
+    val out = new Array[Any](counts.size)
+    var j = 0
+    counts.forEach((w, c) => { out(j) = InternalRow(w, c(0)); j += 1 })
+    new GenericArrayData(out)
+  }
+  override protected def withNewChildInternal(c: Expression): TokenCounts = copy(child = c)
+  override def prettyName: String = "token_counts"
+}
+
 /** FUSED shingle→MinHash kernel: bit-identical to
   * `MinHashSignature(WordShingles(tokens, n), numHashes)` with ZERO
   * per-shingle allocation. The r13 same-JVM A/B proved candidate
@@ -1105,6 +1140,7 @@ object GraftFunctions {
   def simhash64(c: Column, portable: Boolean = false): Column =
     col(SimHash64(expr(c), portable))
   def word_shingles(c: Column, n: Int): Column = col(WordShingles(expr(c), n))
+  def token_counts(c: Column): Column = col(TokenCounts(expr(c)))
   def shingle_minhash(c: Column, n: Int, numHashes: Int = 128): Column =
     col(ShingleMinHash(expr(c), n, numHashes))
   def cosine_similarity(a: Column, b: Column): Column =

@@ -32,6 +32,10 @@ private[operators] object CcControl {
   trait LabelRounds[Out] {
     /** One synchronous min-label round; returns how many labels dropped. */
     def round(): Long
+    /** True iff the current labels are a fixpoint: every edge joins two
+      * equal labels, so a further round would drop none.
+      */
+    def settled(): Boolean
     /** The graph contracted through the current labels, left for star
       * rounds to finish.
       */
@@ -80,8 +84,14 @@ private[operators] object CcControl {
       val (starRounds, starConverged) = starPhase(ex.contract(), maxIter)
       settle(rounds + starRounds, starConverged, starNotConverged(maxIter),
         requireConvergence, roundsOut)
-    } else
+    } else {
+      // a zero-change round sees convergence one round after the labels
+      // got there: a component of diameter maxIter is exact after its last
+      // permitted round, which still changed labels. One fixpoint check —
+      // paid only when the rounds ran out — tells the two apart.
+      if (!converged && rounds > 0) converged = ex.settled()
       settle(rounds, converged, minLabelNotConverged(maxIter), requireConvergence, roundsOut)
+    }
     ex.emit()
   }
 
@@ -109,7 +119,7 @@ private[operators] object CcControl {
   private def minLabelNotConverged(maxIter: Int): String =
     s"duplicateGroups did not converge within maxIter=$maxIter rounds; " +
       "labels are partially merged (a component wider than maxIter hops exists — " +
-      "raise maxIter above the largest component's diameter)"
+      "raise maxIter to at least the largest component's diameter)"
 
   private def starNotConverged(maxIter: Int): String =
     s"duplicateGroupsStar did not converge within maxIter=$maxIter rounds"

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => T}
+import graft.functions.{GraftFunctions => F, TextFunctions => T}
 import graft.operators.Ckpt.Ops
 
 /** Multinomial Naive Bayes text classification — the closed-form stand-in
@@ -105,18 +105,12 @@ object Classify {
     // summing c * __t is value-exact vs summing the term c times — and the
     // |classes|-way fan-out, the model join, and the per-(doc, label)
     // aggregate all run at distinct-(doc, token) volume instead of
-    // occurrence volume. The collapse itself is MAP-SIDE (array_distinct +
-    // per-token run count over the doc's own token array) — a
-    // groupBy(id, w) collapse was measured to ADD an occurrence-volume
+    // occurrence volume. The collapse itself is MAP-SIDE ([[docTokenCounts]])
+    // — a groupBy(id, w) collapse was measured to ADD an occurrence-volume
     // exchange that costs more than the fan-out it saves whenever the
     // model join broadcasts (sf0.1 A/B +15%), while the map-side form
     // never shuffles occurrences at all.
-    val docToks = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), T.tokens(col(textCol)).as("__toks"))
-      .select(col("id"), explode(expr(
-        "transform(array_distinct(__toks), " +
-          "w -> struct(w AS w, size(filter(__toks, t -> t = w)) AS c))")).as("e"))
-      .select(col("id"), col("e.w").as("w"), col("e.c").cast("long").as("c"))
+    val docToks = docTokenCounts(docs.where(col(textCol).isNotNull), idCol, textCol)
     // every (distinct doc token, label) pair: bounded fan-out of |classes|
     val perLabel = docToks.crossJoin(broadcast(priors))
       .join(model.tokenCounts, Seq("label", "w"), "left")
@@ -144,6 +138,17 @@ object Classify {
       .select(col("id"), col("label"),
         col("__score").cast("double").as("score"))
   }
+
+  /** (id, w, c): each distinct token `w` of each doc's text with its
+    * occurrence count `c` (long), computed map-side in one hash pass over
+    * the doc's tokens ([[graft.functions.TokenCounts]]) — linear in the
+    * document's length. Null-text docs yield no rows.
+    */
+  private[graft] def docTokenCounts(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"),
+        explode(F.token_counts(T.tokens(col(textCol)))).as("e"))
+      .select(col("id"), col("e.w").as("w"), col("e.c").cast("long").as("c"))
 
   // ---- Logistic regression on hashed token features (the DCLM/fastText
   // quality-classifier shape with an actual trained linear model) ----

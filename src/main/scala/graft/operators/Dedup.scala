@@ -320,7 +320,10 @@ object Dedup {
     *
     * @param maxIter upper bound on rounds, honored as given for every
     *                 strategy. For `minLabel` it must be >= the largest
-    *                 component's diameter; for `star` ~2*log2(n) suffices
+    *                 component's diameter (when the last permitted round
+    *                 still changed labels, one fixpoint check — one job on
+    *                 the distributed executor — decides whether they
+    *                 converged); for `star` ~2*log2(n) suffices
     *                 (the default 20 covers any graph that fits in storage
     *                 — star's standalone default of 35 is just more slack).
     *                 Under `auto` the min-label phase runs at most
@@ -529,6 +532,8 @@ object Dedup {
       changed
     }
 
+    def settled(): Boolean = us.indices.forall(e => comp(us(e)) == comp(vs(e)))
+
     def contract(): CcControl.StarRounds[DataFrame] = {
       val s = new DriverStar(io, us.indices.collect {
         case e if comp(us(e)) != comp(vs(e)) =>
@@ -633,12 +638,17 @@ object Dedup {
       changed
     }
 
+    /** Each closure edge with its endpoints' labels as (u, v). */
+    private def labeledEdges: DataFrame =
+      edges.join(labels.select(col("id").as("src"), col("comp").as("u")), "src")
+        .join(labels.select(col("id").as("dst"), col("comp").as("v")), "dst")
+        .select(col("u"), col("v"))
+
+    def settled(): Boolean = labeledEdges.where(col("u") =!= col("v")).isEmpty
+
     def contract(): CcControl.StarRounds[DataFrame] = {
-      val la = labels.select(col("id").as("src"), col("comp").as("__ca"))
-      val lb = labels.select(col("id").as("dst"), col("comp").as("__cb"))
       val s = starPhase(new CkptLoop(canon.sparkSession, reliableCheckpoint),
-        canonEdgeForm(edges.join(la, "src").join(lb, "dst")
-          .select(col("__ca").as("u"), col("__cb").as("v"))))
+        canonEdgeForm(labeledEdges))
       star = Some(s)
       s
     }

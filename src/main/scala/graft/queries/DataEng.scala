@@ -243,18 +243,14 @@ object DataEng {
     QuerySpec("q_approx_percentile",
       (s, dir) => t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
+        // two aggregates, not one per quantile: each buffers the group's
+        // values once and answers all of its quantiles from that buffer
         .agg(
-          expr("percentile(l_extendedprice, 0.5)").as("p50"),
-          expr("percentile(l_extendedprice, 0.9)").as("p90"),
-          expr("approx_percentile(l_extendedprice, 0.5, 10000)").as("a50"),
-          expr("approx_percentile(l_extendedprice, 0.9, 10000)").as("a90"),
-          expr("percentile(l_extendedprice, 0.49)").as("lo50"),
-          expr("percentile(l_extendedprice, 0.51)").as("hi50"),
-          expr("percentile(l_extendedprice, 0.89)").as("lo90"),
-          expr("percentile(l_extendedprice, 0.91)").as("hi90"))
-        .select(col("l_returnflag"), col("p50"), col("p90"),
-          (col("a50") >= col("lo50") && col("a50") <= col("hi50")).as("within_bound_p50"),
-          (col("a90") >= col("lo90") && col("a90") <= col("hi90")).as("within_bound_p90"))
+          expr("percentile(l_extendedprice, array(0.5, 0.9, 0.49, 0.51, 0.89, 0.91))").as("p"),
+          expr("approx_percentile(l_extendedprice, array(0.5, 0.9), 10000)").as("a"))
+        .select(col("l_returnflag"), col("p")(0).as("p50"), col("p")(1).as("p90"),
+          (col("a")(0) >= col("p")(2) && col("a")(0) <= col("p")(3)).as("within_bound_p50"),
+          (col("a")(1) >= col("p")(4) && col("a")(1) <= col("p")(5)).as("within_bound_p90"))
         .orderBy(col("l_returnflag")),
       Some("""SELECT l_returnflag,
           quantile_cont(l_extendedprice, 0.5) AS p50,

@@ -115,6 +115,50 @@ object Pipeline {
     scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 
+  /** The `text_gopher_quality` gate over a `documents`-shaped frame
+    * (`doc_id`, `text`): per-doc word count, mean word length and
+    * alphabetic-word fraction, the top-bigram occupancy (most frequent
+    * 2-shingle count / total bigrams) and the composite keep flag. Docs
+    * whose text is null have no bigrams and no row.
+    *
+    * Each value is computed once per document: the tokens and the three
+    * scalars are projected BELOW the bigram explode, so the Generate only
+    * carries them along. Selected in the same `select` as the explode, they
+    * would sit in a Project above the Generate and re-tokenize the
+    * document once per bigram row — quadratic in its length. The
+    * aggregates recover the per-doc scalars with first(), so there is one
+    * corpus scan and no doc-keyed join.
+    */
+  private[graft] def gopherQuality(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val tk = col("tk")
+    val nWords = size(tk).cast("long")
+    val perDoc = d.select(col("doc_id"), T.tokens(col("text")).as("tk"))
+      .select(col("doc_id"), tk, nWords.as("n_words"),
+        (aggregate(tk, lit(0L), (a, w) => a + length(w).cast("long"))
+          .cast("double") / nWords.cast("double")).as("mean_word_len"),
+        (size(filter(tk, w => w.rlike("[a-z]"))).cast("double") / nWords.cast("double"))
+          .as("frac_alpha_words"))
+    val enriched = perDoc.select(col("doc_id"), col("n_words"), col("mean_word_len"),
+      col("frac_alpha_words"), explode(F.word_shingles(tk, 2)).as("bg"))
+    val perBg = enriched.groupBy(col("doc_id"), col("bg"))
+      .agg(count(lit(1)).as("count"), first(col("n_words")).as("n_words"),
+        first(col("mean_word_len")).as("mean_word_len"),
+        first(col("frac_alpha_words")).as("frac_alpha_words"))
+    val w = Window.partitionBy(col("doc_id"))
+    perBg.withColumn("mx", max(col("count")).over(w))
+      .groupBy(col("doc_id"))
+      .agg(first(col("n_words")).as("n_words"),
+        first(col("mean_word_len")).as("mean_word_len"),
+        first(col("frac_alpha_words")).as("frac_alpha_words"),
+        (first(col("mx")).cast("double") / sum(col("count")).cast("double")).as("top_bigram_frac"))
+      .select(col("doc_id"), col("n_words"), col("mean_word_len"),
+        col("frac_alpha_words"), col("top_bigram_frac"),
+        (col("n_words") >= 10 && col("n_words") <= 10000 &&
+         col("mean_word_len") >= 2.0 && col("mean_word_len") <= 12.0 &&
+         col("frac_alpha_words") >= 0.7 && col("top_bigram_frac") <= 0.2).as("keep"))
+      .orderBy(col("doc_id"))
+  }
+
   val specs: Seq[QuerySpec] = Seq(
 
     // ---- Exact dedup: hash-groupBy on normalized text (one keyed shuffle) ----
@@ -1119,38 +1163,7 @@ object Pipeline {
     // repetition fraction, with the composite keep flag. All exact-int
     // derived -> hash-comparable. ----
     QuerySpec("text_gopher_quality",
-      (s, dir) => {
-        val d = t(s, dir, "documents")
-        val tk = T.tokens(col("text"))
-        val nWords = size(tk).cast("long")
-        val meanLen = aggregate(tk, lit(0L), (a, w) => a + length(w).cast("long"))
-          .cast("double") / nWords.cast("double")
-        val alphaFrac = size(filter(tk, w => w.rlike("[a-z]"))).cast("double") / nWords.cast("double")
-        // ONE corpus scan: the per-doc scalar metrics ride along the exploded
-        // bigram rows (first() in the aggregates recovers them), so there is
-        // no second scan and no doc-keyed join — top-bigram occupancy =
-        // most frequent 2-shingle count / total bigrams
-        val enriched = d.select(col("doc_id"), nWords.as("n_words"),
-          meanLen.as("mean_word_len"), alphaFrac.as("frac_alpha_words"),
-          explode(F.word_shingles(tk, 2)).as("bg"))
-        val perBg = enriched.groupBy(col("doc_id"), col("bg"))
-          .agg(count(lit(1)).as("count"), first(col("n_words")).as("n_words"),
-            first(col("mean_word_len")).as("mean_word_len"),
-            first(col("frac_alpha_words")).as("frac_alpha_words"))
-        val w = Window.partitionBy(col("doc_id"))
-        perBg.withColumn("mx", max(col("count")).over(w))
-          .groupBy(col("doc_id"))
-          .agg(first(col("n_words")).as("n_words"),
-            first(col("mean_word_len")).as("mean_word_len"),
-            first(col("frac_alpha_words")).as("frac_alpha_words"),
-            (first(col("mx")).cast("double") / sum(col("count")).cast("double")).as("top_bigram_frac"))
-          .select(col("doc_id"), col("n_words"), col("mean_word_len"),
-            col("frac_alpha_words"), col("top_bigram_frac"),
-            (col("n_words") >= 10 && col("n_words") <= 10000 &&
-             col("mean_word_len") >= 2.0 && col("mean_word_len") <= 12.0 &&
-             col("frac_alpha_words") >= 0.7 && col("top_bigram_frac") <= 0.2).as("keep"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => gopherQuality(t(s, dir, "documents")),
       Some(s"""WITH base AS (
           SELECT doc_id, tk, len(tk) AS n_words,
             CAST(list_sum(list_transform(tk, w -> len(w))) AS DOUBLE) / len(tk) AS mean_word_len,
@@ -1386,8 +1399,11 @@ object Pipeline {
 
     QuerySpec("text_c4_clean",
       (s, dir) => {
-        val d = t(s, dir, "documents")
-        val tk = T.tokens(col("text"))
+        // staged projections compute `tk`, `lined` and `kept` once per
+        // document: the lambdas in c4KeptLines keep the select out of
+        // whole-stage codegen, so nothing would share a repeated subtree,
+        // and CollapseProject never inlines a costly alias used twice
+        val tk = col("tk")
         def seg(from: Int, n: Int) = concat_ws(" ", slice(tk, from, n))
         val lined = concat_ws("\n",
           concat(seg(1, 8), lit(".")),                                    // kept
@@ -1398,12 +1414,16 @@ object Pipeline {
             .otherwise(concat(seg(26, 7), lit("?"))),
           when(col("doc_id") % 97 === 0, lit("standard lorem ipsum filler text here."))
             .otherwise(concat(seg(33, 5), lit("."))))
-        val kept = T.c4KeptLines(lined)
-        d.select(col("doc_id"),
-            size(split(lined, "\n")).cast("long").as("n_lines"),
+        val (ln, kept) = (col("lined"), col("kept"))
+        t(s, dir, "documents")
+          .select(col("doc_id"), T.tokens(col("text")).as("tk"))
+          .select(col("doc_id"), lined.as("lined"))
+          .select(col("doc_id"), ln, T.c4KeptLines(ln).as("kept"))
+          .select(col("doc_id"),
+            size(split(ln, "\n")).cast("long").as("n_lines"),
             size(kept).cast("long").as("n_kept"),
             concat_ws(" ", kept).as("kept_text"),
-            T.c4Keep(kept, lined).as("keep"))
+            T.c4Keep(kept, ln).as("keep"))
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH lined AS (

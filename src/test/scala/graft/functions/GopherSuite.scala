@@ -63,6 +63,45 @@ class GopherSuite extends SparkTestBase {
     assert(n.isNullAt(0))
   }
 
+  test("gopher quality scalars computed below the bigram explode: degenerate docs") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // the per-doc divisions now run on every document, also on the ones
+    // the explode drops; none of these may raise an ANSI error
+    val d = Seq((1L, Option("")), (2L, None), (3L, Some("word")), (4L, Some(" \t\n ")),
+      (5L, Some("the cat saw the cat"))).toDF("doc_id", "text")
+    // the formulation that selected the scalars beside the explode
+    val tk = TextFunctions.tokens(col("text"))
+    val nWords = size(tk).cast("long")
+    val meanLen = aggregate(tk, lit(0L), (a, w) => a + length(w).cast("long"))
+      .cast("double") / nWords.cast("double")
+    val alphaFrac = size(filter(tk, w => w.rlike("[a-z]"))).cast("double") / nWords.cast("double")
+    val perBg = d.select(col("doc_id"), nWords.as("n_words"),
+        meanLen.as("mean_word_len"), alphaFrac.as("frac_alpha_words"),
+        explode(F.word_shingles(tk, 2)).as("bg"))
+      .groupBy(col("doc_id"), col("bg"))
+      .agg(count(lit(1)).as("count"), first(col("n_words")).as("n_words"),
+        first(col("mean_word_len")).as("mean_word_len"),
+        first(col("frac_alpha_words")).as("frac_alpha_words"))
+    val want = perBg.withColumn("mx", max(col("count")).over(Window.partitionBy(col("doc_id"))))
+      .groupBy(col("doc_id"))
+      .agg(first(col("n_words")).as("n_words"),
+        first(col("mean_word_len")).as("mean_word_len"),
+        first(col("frac_alpha_words")).as("frac_alpha_words"),
+        (first(col("mx")).cast("double") / sum(col("count")).cast("double")).as("top_bigram_frac"))
+      .select(col("doc_id"), col("n_words"), col("mean_word_len"),
+        col("frac_alpha_words"), col("top_bigram_frac"),
+        (col("n_words") >= 10 && col("n_words") <= 10000 &&
+         col("mean_word_len") >= 2.0 && col("mean_word_len") <= 12.0 &&
+         col("frac_alpha_words") >= 0.7 && col("top_bigram_frac") <= 0.2).as("keep"))
+      .orderBy(col("doc_id"))
+      .collect().toSeq
+    val got = graft.queries.Pipeline.gopherQuality(d).collect().toSeq
+    assert(got == want)
+    // null text has no bigrams and no row; the other four each have one
+    assert(got.map(_.getLong(0)) == Seq(1L, 3L, 4L, 5L))
+  }
+
   test("gopher_repetition is reachable from SQL") {
     GraftFunctions.registerAll(spark)
     val r = spark.sql(

@@ -170,4 +170,26 @@ class CcDifferentialSuite extends SparkTestBase {
   (fixed ++ seeded).zipWithIndex.foreach { case (c, i) =>
     test(f"case $i%02d: $c") { check(c) }
   }
+
+  test("min-label converges at maxIter equal to the diameter on both executors") {
+    // the last permitted round still changes labels, yet leaves them exact:
+    // a single pair (diameter 1) at maxIter = 1, a 4-node chain (diameter
+    // 3) at maxIter = 3, and a star whose center is not the minimum
+    // (diameter 2) at maxIter = 2 under auto, where the stall fires on the
+    // last permitted round
+    val cases = Seq(
+      Case(Seq("pair"), Seq((1L, 2L)), "minLabel", maxIter = 1, requireConvergence = true),
+      Case(Seq("chain(4)"), chain(4), "minLabel", maxIter = 3, requireConvergence = true),
+      Case(Seq("star(5)"), (1L to 4L).map(i => (5L, i)), "auto", maxIter = 2,
+        requireConvergence = true))
+    for (c <- cases) {
+      val onDriver = run(c)
+      assert(onDriver.result == Right(("bigint", reference(c))), s"driver executor on $c")
+      assert(distributed(run(c)) == onDriver, s"executors diverge on $c")
+    }
+    // one round short of the diameter still throws
+    val short = run(Case(Seq("chain(4)"), chain(4), "minLabel", maxIter = 2,
+      requireConvergence = true))
+    assert(short.result.left.exists(_._2.contains("did not converge")), short.toString)
+  }
 }

@@ -72,6 +72,41 @@ class ClassifySuite extends SparkTestBase {
     assert(out == Set(1L), "null-text doc must not be scored")
   }
 
+  test("token collapse counts a 10k-token document exactly") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val long = Seq.fill(10000)(s"w${rnd.nextInt(3000)}")
+    val short = Seq("b", "a", "b", "b")
+    val docs = Seq((1L, long.mkString(" ")), (2L, short.mkString(" ")),
+      (3L, null.asInstanceOf[String])).toDF("doc_id", "text")
+    val got = Classify.docTokenCounts(docs, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    def naive(id: Long, toks: Seq[String]) =
+      toks.groupBy(identity).map { case (w, ws) => (id, w, ws.size.toLong) }
+    assert(got.sorted == (naive(1L, long) ++ naive(2L, short)).toSeq.sorted)
+    // first-occurrence order within a document
+    assert(got.filter(_._1 == 2L) == Seq((2L, "b", 3L), (2L, "a", 1L)))
+  }
+
+  test("nbPredict scales linearly in document length (10x tokens, <= ~15x time)") {
+    import spark.implicits._
+    val model = Classify.nbTrain(
+      Seq(("a", "t1 t2 t3"), ("b", "t4 t5 t6")).toDF("source", "text"), "source", "text")
+    // every token distinct: the costliest shape for a per-token rescan
+    def doc(n: Int) = Seq((1L, (0 until n).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text")
+    def seconds(n: Int): Double = {
+      val d = doc(n)
+      (0 until 2).map { _ =>
+        val t0 = System.nanoTime()
+        assert(Classify.nbPredict(model, d, "doc_id", "text").collect().length == 1)
+        (System.nanoTime() - t0) / 1e9
+      }.min
+    }
+    seconds(2000) // warm-up
+    val (small, large) = (seconds(2000), seconds(20000))
+    assert(large <= 15 * small, f"2k tokens $small%.3f s, 20k tokens $large%.3f s")
+  }
+
   test("GATE CONFIG: no log term or prior sits near a rounding boundary") {
     // same fixed-corpus argument as the bigram gate: terms agree across
     // libms up to ulps; verify every distinct rounded quantity at the

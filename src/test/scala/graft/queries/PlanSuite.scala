@@ -1,5 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression,
+  HigherOrderFunction, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
+
 import graft.SparkTestBase
 
 /** Physical-plan assertions for the 100 TB story: small dimensions must
@@ -337,6 +341,51 @@ class PlanSuite extends SparkTestBase {
           failures += s"$name: CartesianProduct"
         if (p.contains("BatchEvalPython"))
           failures += s"$name: python UDF"
+      } catch {
+        case e: Exception => failures += s"$name: planning failed: ${e.getMessage}"
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  /** Why a Project directly above a Generate evaluates, once per generated
+    * row, a value that depends only on the Generate's input row: (a) a
+    * non-trivial expression that also occurs inside the generator's input,
+    * or (b) a higher-order function. Either one costs the per-row work
+    * times the number of rows the generator emits — the way a document
+    * gets re-tokenized once per bigram. Trivial means an attribute, an
+    * alias of one, or a literal. Other expressions over the input row
+    * (a cast of an id, a regexp_extract of a path) are left alone: their
+    * cost per generated row is constant, and moving them below the
+    * Generate could raise ANSI errors on rows the generator drops.
+    */
+  private def recomputedPerGeneratedRow(plan: LogicalPlan): Seq[String] = {
+    def trivial(e: Expression): Boolean = e match {
+      case Alias(c, _) => trivial(c)
+      case _: Attribute | _: Literal => true
+      case _ => false
+    }
+    plan.collectWithSubqueries { case Project(projectList, g: Generate) =>
+      val genInput = g.generator.children
+        .flatMap(_.collect { case e if !trivial(e) => e.canonicalized }).toSet
+      projectList.filter(e => !trivial(e) && e.references.subsetOf(g.child.outputSet))
+        .flatMap { e =>
+          val shared = e.collectFirst {
+            case s if !s.isInstanceOf[Alias] && !trivial(s) && genInput(s.canonicalized) => s
+          }.map(s => s"${e.name} repeats the generator's input ${s.sql}")
+          val lambda = e.collectFirst { case h: HigherOrderFunction => h }
+            .map(h => s"${e.name} evaluates the lambda ${h.prettyName}")
+          shared.orElse(lambda)
+        }
+    }.flatten
+  }
+
+  test("no gate plan recomputes a per-row value once per generated row") {
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
+      try {
+        recomputedPerGeneratedRow(fn(spark, sf()).queryExecution.optimizedPlan)
+          .foreach(why => failures += s"$name: Project above Generate: $why")
       } catch {
         case e: Exception => failures += s"$name: planning failed: ${e.getMessage}"
       }
