@@ -164,38 +164,8 @@ final class FileCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
 }
 
 object FileCatalogUnit {
-  /** One inference: the table's leaf files as (path, length, modification
-    * time), sorted by path, and the schema Spark inferred from them.
-    */
-  private final case class Inferred(files: Seq[(String, Long, Long)], schema: StructType)
-
-  /** (format, resolved path, datasource options, inference confs). */
-  private type Key = (String, String, Map[String, String], Map[String, String])
-
-  // One entry per distinct table (and conf variant); a changed file set
-  // replaces its entry rather than adding one.
-  private val inferred = new ConcurrentHashMap[Key, Inferred]()
-
-  // SQL confs that parquet/ORC schema inference and partition discovery
-  // read (timestamp flavour, nanos-as-long, binary-as-string, schema merge,
-  // corrupt/missing-file skipping, partition column typing, case folding).
-  private val InferencePrefixes = Seq("spark.sql.parquet.", "spark.sql.orc.",
-    "spark.sql.legacy.parquet.", "spark.sql.legacy.orc.", "spark.sql.files.ignore",
-    "spark.sql.sources.partition")
-  private val InferenceKeys = Set("spark.sql.caseSensitive", "spark.sql.timestampType")
-
-  private def inferenceConf(spark: SparkSession): Map[String, String] =
-    spark.conf.getAll.filter { case (k, _) =>
-      InferenceKeys.contains(k) || InferencePrefixes.exists(k.startsWith)
-    }
-
-  private def fingerprint(t: FileTable): Seq[(String, Long, Long)] =
-    t.fileIndex.allFiles()
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-      .sortBy(_._1)
-
   /** Parquet/ORC inference runs a footer read (a Spark job for parquet) on
-    * every fresh table. Reuse the last inferred schema while the table's
+    * every fresh table. Reuse the [[SchemaMemo]] schema while the table's
     * leaf files are unchanged. On a hit the fingerprint comes from the
     * returned table's own file index, which its scan lists anyway, so a hit
     * lists once, like a table that infers. A miss lists twice: once to
@@ -205,16 +175,12 @@ object FileCatalogUnit {
     */
   def withInferredSchema(spark: SparkSession, format: String, path: String,
       options: Map[String, String])(table: Option[StructType] => FileTable): FileTable = {
-    val key = (format, path, options, inferenceConf(spark))
-    Option(inferred.get(key)).flatMap { hit =>
-      val t = table(Some(hit.schema))
-      if (fingerprint(t) == hit.files) Some(t) else None
-    }.getOrElse {
+    val key = SchemaMemo.key(spark, format, path, options)
+    SchemaMemo.reuse(key)(s => table(Some(s)))(t => Some(t.fileIndex)).getOrElse {
       val t = table(None)
-      val files = fingerprint(t)
       // an inference failure is left for analysis to raise, as before
       Try(t.schema).fold(_ => t, { s =>
-        inferred.put(key, Inferred(files, s))
+        SchemaMemo.remember(key, t.fileIndex, s)
         table(Some(s))
       })
     }

@@ -25,6 +25,17 @@ import org.apache.spark.sql.DataFrame
   * cost is one extra job and a reliable-storage write per site; correctness
   * and values are identical (each site's own size argument — model-sized
   * vs corpus-sized — is documented at the site).
+  *
+  * Retention: reliable mode never deletes a one-shot checkpoint (unlike
+  * `CkptLoop`, which drops each superseded round). Its files stay in the
+  * checkpoint directory until Spark's cleaner removes them once the
+  * checkpointed RDD is garbage-collected, which it does only under
+  *
+  *   spark.cleaner.referenceTracking.cleanCheckpoints = true
+  *
+  * Set it on long-lived sessions that run pipelines repeatedly; otherwise
+  * the checkpoint directory grows by one (some corpus-sized) directory per
+  * call site and run.
   */
 private[graft] object Ckpt {
 

@@ -1200,8 +1200,9 @@ object Pipeline {
     QuerySpec("text_gopher_repetition",
       (s, dir) => {
         import graft.functions.GopherRepetition
-        val d = t(s, dir, "documents")
-        val tk = T.tokens(col("text"))
+        // tokenize each document once: `tk` is projected first and every
+        // seg slices that column (inlined, the tokens were rebuilt per seg)
+        val tk = col("tk")
         def seg(from: Int, n: Int) = concat_ws(" ", slice(tk, from, n))
         val l1 = seg(1, 6); val l2 = seg(7, 5); val l4 = seg(12, 6)
         val l5 = when(col("doc_id") % 5 === 0, l2).otherwise(seg(18, 5))
@@ -1213,7 +1214,9 @@ object Pipeline {
           round(col("__g").getField(f), 6).as(f))
         val keep = GopherRepetition.KeepThresholds
           .map { case (f, th) => col(f) <= th }.reduce(_ && _)
-        d.select(col("doc_id"), F.gopher_repetition(lined).as("__g"))
+        t(s, dir, "documents")
+          .select(col("doc_id"), T.tokens(col("text")).as("tk"))
+          .select(col("doc_id"), F.gopher_repetition(lined).as("__g"))
           .select(col("doc_id") +: flat: _*)
           .withColumn("keep", keep)
           .orderBy(col("doc_id"))

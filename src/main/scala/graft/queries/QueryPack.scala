@@ -1,6 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+
+import graft.catalog.SchemaMemo
 
 /** One correctness-gate query: a Spark DataFrame program plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle SQL over
@@ -28,7 +31,10 @@ object QueryPack {
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    ltzTs(parquet(spark, s"$dir/$name.parquet"))
+  }
+
+  private[queries] def ltzTs(df: DataFrame): DataFrame =
     df.schema.fields.find(_.name == "ts") match {
       case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
@@ -39,5 +45,24 @@ object QueryPack {
             .cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
+
+  /** `spark.read.parquet(path)`, with the [[SchemaMemo]] schema while the
+    * path's leaf files are unchanged, so a repeated read runs no footer
+    * inference job. A miss infers as `spark.read.parquet` does; an
+    * inference failure raises from it and stores nothing.
+    */
+  private[queries] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = SchemaMemo.key(spark, "parquet", path, Map.empty)
+    SchemaMemo.reuse(key)(spark.read.schema(_).parquet(path))(fileIndex).getOrElse {
+      val df = spark.read.parquet(path)
+      fileIndex(df).foreach(SchemaMemo.remember(key, _, df.schema))
+      df
+    }
   }
+
+  // the listing the read's own scan uses (None keeps the read out of the memo)
+  private def fileIndex(df: DataFrame): Option[PartitioningAwareFileIndex] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case i: PartitioningAwareFileIndex => i }
 }

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local SparkSession with the graft extension + catalog wired in
   * (mirrors the reference's SparkExtensionsTestBase.scala:35-68).
@@ -53,6 +56,25 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     val got = df.collect().toSeq.map(_.toString).sorted
     val want = expected.map(_.toString).sorted
     assert(got == want, s"\nexpected: ${want.mkString("\n")}\ngot: ${got.mkString("\n")}")
+  }
+
+  /** Spark jobs `body` submits from this thread. */
+  protected def jobsOf(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.test.jobs") == tag)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try { body; GraftTestBridge.drainListenerBus(sc); jobs.get() }
+    finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   protected def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"

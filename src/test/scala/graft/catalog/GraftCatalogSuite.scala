@@ -1,7 +1,5 @@
 package graft.catalog
 
-import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
@@ -10,8 +8,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkTestBase
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** End-to-end catalog federation: register datasources, query through the
   * lightning-style FQN, ingest a catalog snapshot, compile + activate a USL,
@@ -25,25 +21,6 @@ class GraftCatalogSuite extends SparkTestBase {
     super.beforeAll()
     spark.sql(
       s"REGISTER PARQUET DATASOURCE tpch OPTIONS (path '${sf()}') NAMESPACE graft.datasource.file")
-  }
-
-  /** Spark jobs `body` submits from this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("graft.test.jobs") == tag)
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.jobs", tag)
-    try { body; GraftTestBridge.drainListenerBus(sc); jobs.get() }
-    finally {
-      sc.setLocalProperty("graft.test.jobs", null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   /** The schema the graft catalog handed to the parquet/ORC table it
