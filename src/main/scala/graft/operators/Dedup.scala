@@ -69,7 +69,7 @@ object Dedup {
     * jobs. 500k edges collect to ~8 MB of longs — broadcast-class, the same
     * order as one auto-broadcast join side or the [[MaxHotBuckets]]
     * metadata collect — while each avoided distributed round is 3-5 serial
-    * AQE stage-jobs (r18 JobProfile: the sf0.1 CC gates are
+    * AQE stage-jobs (OPTIMIZATION_r18.md §1: the sf0.1 CC gates are
     * job-count-bound). Both executors run under the one [[CcControl]] loop,
     * so labels, hook values and exceptions do not depend on the choice.
     * `spark.graft.cc.driverMaxEdges` overrides the bound; 0 pins the
@@ -174,12 +174,12 @@ object Dedup {
     // flag when the sampled count's EXPECTATION corresponds to a true size
     // at the cap: flagAt = cap x fraction. The previous cap x fraction / 2
     // flagged from ~cap/2 up, star-linking buckets the contract promises an
-    // exact self-join (measured in SemDedupScaleBench as a recall collapse
-    // for legitimately-dense cells). Binomial noise makes the cutoff soft
-    // over roughly [0.8, 1.2] x cap — acceptable for a guard whose target
-    // is degenerate buckets many multiples over the cap, never marginal
-    // ones; a bucket sneaking through at 1.2 x cap costs 1.44x the capped
-    // worst-case join, not a blowup.
+    // exact self-join (measured as a recall collapse for legitimately-dense
+    // cells; BASELINE.md "Round-6 semantic-dedup scaling evidence").
+    // Binomial noise makes the cutoff soft over roughly [0.8, 1.2] x cap —
+    // acceptable for a guard whose target is degenerate buckets many
+    // multiples over the cap, never marginal ones; a bucket sneaking through
+    // at 1.2 x cap costs 1.44x the capped worst-case join, not a blowup.
     val flagAt = math.max(2L, math.round(maxBucketSize * fraction))
     val hotAgg = mkBanded(rows.sample(withReplacement = false, fraction, seed = 7L))
       .groupBy(keyCols.map(col): _*)
@@ -343,11 +343,14 @@ object Dedup {
     *                 `spark.sparkContext.setCheckpointDir(...)`.
     * @param strategy `minLabel` | `star` | `auto` (see above)
     * @param autoRoundBudget min-label rounds `auto` spends before switching
-    * @param roundsOut when set, receives the total round count (evidence
-    *                 hook for scale benchmarks)
+    * @param roundsOut when set, receives the total round count (a test
+    *                 hook, due to be replaced by the routing decision
+    *                 records of ROADMAP.md "Label jobs and runtime
+    *                 decisions where they happen")
     * @param changedOut when set, receives the per-round changed-label count
-    *                 (the decay curve — diagnostic hook, zero extra jobs:
-    *                 the count is the convergence check's own result)
+    *                 (the decay curve — a test hook like `roundsOut`, zero
+    *                 extra jobs: the count is the convergence check's own
+    *                 result)
     * @param autoStarEdgeThreshold canonical (direction-collapsed, distinct)
     *                 edge count past which `auto` routes star-first — see
     *                 [[AutoStarCanonicalEdges]] for the measured default
@@ -417,7 +420,8 @@ object Dedup {
     *                rounds' files deleted as the loop advances) instead of
     *                executor-local `localCheckpoint()` — the multi-round
     *                100-TB path must survive executor loss
-    * @param roundsOut when set, receives the round count (scale-bench hook)
+    * @param roundsOut when set, receives the round count (a test hook, see
+    *                 [[duplicateGroups]])
     */
   def duplicateGroupsStar(pairs: DataFrame, maxIter: Int = 35,
       requireConvergence: Boolean = true,
@@ -937,7 +941,8 @@ object Dedup {
     *   J=0.5; precision is 1.0 regardless (exact-Jaccard verify). Halving to
     *   bands=16 (r=8) drops the theoretical floor at exactly J=0.7 to ~61%,
     *   but the MEASURED trade on a real skewed-J corpus (mutated sf25m,
-    *   BASELINE.md r16 "BandKnobBench") is much milder: candidates −81%,
+    *   BASELINE.md "r16: the banding escape hatch, measured at the
+    *   ceiling") is much milder: candidates −81%,
     *   pair-path wall −56%, verified pairs at J ≥ 0.7 93.9% kept, group
     *   nodes 98.3% kept — the loss concentrates in the J ∈ [0.7, 0.8)
     *   detection tail. bands=16 is therefore the documented escape hatch
@@ -1078,8 +1083,9 @@ object Dedup {
     val members = df
       .select(normTextHash(textCol).as("__rh"), col(idCol).as("__mid"))
       .cut(false) // lazy: materializes inside the first consuming
-      // job instead of as its own serial action (r17 JobProfile: the sf0.1
-      // dedup gates are job-COUNT-bound — 84 serial jobs, max 0.11 s each)
+      // job instead of as its own serial action (OPTIMIZATION_r17.md §2: the
+      // sf0.1 dedup gates are job-COUNT-bound — 84 serial jobs, max 0.11 s
+      // each)
     // one representative (min id) + its text per distinct normText; the
     // partial aggregate dedups per partition first, so under a high dup
     // rate the exchange carries far fewer texts than rows. The member count
@@ -1095,7 +1101,8 @@ object Dedup {
 
   /** `bands` carries the detection-probability contract documented at
     * [[minHashDuplicates]] (1 − (1 − J^r)^bands; measured 32→16 trade in
-    * BASELINE.md r16 "BandKnobBench") — it only scales the rep-level
+    * BASELINE.md "r16: the banding escape hatch, measured at the
+    * ceiling") — it only scales the rep-level
     * candidate stage here; exact-dup members are detected at probability 1
     * by the collapse regardless of banding.
     */
@@ -1179,7 +1186,7 @@ object Dedup {
     * signature/banding expressions [[minHashCandidatePairs]] uses, factored
     * so the asymmetric ingest join bands each side independently.
     */
-  private[graft] def minHashBanded(df: DataFrame, idCol: String, textCol: String,
+  private[operators] def minHashBanded(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0)
     val rowsPerBand = numHashes / bands
@@ -1215,7 +1222,7 @@ object Dedup {
     * Ids must be disjoint across the two inputs (normal for ingest batches).
     * @return (id_new, id_corpus) candidate pairs, deduped
     */
-  def incrementalCandidatePairs(corpus: DataFrame, newDocs: DataFrame,
+  private def incrementalCandidatePairs(corpus: DataFrame, newDocs: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3,
       numHashes: Int = 128, bands: Int = 32,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
@@ -1314,8 +1321,9 @@ object Dedup {
     * duplicates are NOT resolved here — run [[exactDedup]] /
     * [[minHashDuplicates]] on the batch itself for that.
     */
-  /** Exact-collapse note (r15, measurement-driven — `graft.IncBench` on the
-    * verbatim sf25 fixture attributed the gate's 43 s as: exact stage 3 s,
+  /** Exact-collapse note (r15, measurement-driven — BASELINE.md "r15:
+    * dedup_incremental attributed and exact-collapsed": stage attribution on
+    * the verbatim sf25 fixture attributed the gate's 43 s as: exact stage 3 s,
     * candidate generation 25 s, verify ~15 s, with member-level corpus
     * banding at 5.5 s vs 1.4 s over distinct texts): near-dup membership is
     * a function of TEXT alone and this surface returns only batch-side ids,
@@ -1386,8 +1394,9 @@ object Dedup {
   final case class IngestIndex(shingleSize: Int, numHashes: Int, bands: Int,
       hashes: DataFrame, banded: DataFrame)
 
-  /** r16 exact-collapse (measurement: `graft.IncBench` index_build vs
-    * index_build_reps — on the verbatim sf25 corpus member-level banding
+  /** r16 exact-collapse (measurement: BASELINE.md "r16: ingestIndexBuild
+    * collapse, decided by measurement", index_build vs index_build_reps — on
+    * the verbatim sf25 corpus member-level banding
     * was the build's dominant cost, paid once per exact-dup clique member
     * for identical banded keys): the index bands ONE representative (min
     * id) per DISTINCT normalized text. Near-dup candidacy is a function of
@@ -1548,7 +1557,8 @@ object Dedup {
     // batch-sized exact-stage lineage, but a checkpoint here severs the
     // exact stage from the executed plan — hiding the zero-exchange
     // broadcast shape PlanSuite pins — and the stage is batch-bounded
-    // map-side work, far below the candidate/verify cost IncBench measured
+    // map-side work, far below the candidate/verify cost measured in
+    // BASELINE.md "r15: dedup_incremental attributed and exact-collapsed"
     val exactSurvivors = (bloom match {
       case Some(b) => bloomExactSurvivors(index.hashes, withH, b)
       case None => withH.join(index.hashes, Seq("__h"), "left_anti")
@@ -1674,7 +1684,8 @@ object Dedup {
 
   /** `blocks` sentinel for [[simHashDuplicates]] / [[simHashDuplicateGroups]]:
     * force the single-table banding scheme regardless of distance. Exists for
-    * scheme A/B measurement ([[graft.SimHashBandBench]]); production callers
+    * scheme A/B measurement (BASELINE.md "r16: multi-table SimHash banding
+    * (Manku '07)"); production callers
     * should leave `blocks = 0` and let the auto-route pick — a forced scheme
     * whose bucket keys are too narrow for the corpus silently cap-degrades
     * (see [[simHashAutoBlocks]]).
@@ -1776,7 +1787,8 @@ object Dedup {
     *               is corpus-sized, not distance-sized);
     *               > 0 = explicit multi-table with that block count;
     *               [[SimHashSingleTable]] (−1) = force single-table (A/B
-    *               benches only — WRONG at aggressive distances).
+    *               measurement and tests only — WRONG at aggressive
+    *               distances).
     *
     * OUTPUT-SIZE CONTRACT: this operator MATERIALIZES every near-dup pair,
     * and exact duplicates are Hamming distance 0, so a boilerplate clique of
@@ -1798,7 +1810,7 @@ object Dedup {
       // the checkpointed reps frame, so the probe is a metadata-cheap job)
       if (blocks == 0) simHashAutoBlocks(maxHamming, df.count(), maxBucketSize)
       else if (blocks > 0) Some(blocks)
-      else None // SimHashSingleTable: forced single-table (A/B benches)
+      else None // SimHashSingleTable: forced single-table (A/B, tests)
     routed match {
       case Some(b) =>
         simHashDuplicatesMultiTable(df, idCol, textCol, maxHamming, b,
@@ -1898,10 +1910,9 @@ object Dedup {
       .distinct()
 
   /** Raw capped bucket pairs of the multi-table scheme (pre-verify, may
-    * contain cross-table duplicates) — shared with the candidate-pressure
-    * bench ([[graft.SimHashBandBench]]).
+    * contain cross-table duplicates).
     */
-  private[graft] def simHashMultiTableCandidates(df: DataFrame, idCol: String,
+  private def simHashMultiTableCandidates(df: DataFrame, idCol: String,
       textCol: String, maxHamming: Int, blocks: Int,
       maxBucketSize: Int, portable: Boolean): DataFrame = {
     require(blocks > maxHamming && blocks <= 64,
@@ -2055,9 +2066,9 @@ object Dedup {
     * number that must sit well under `maxCellSize`, or the hot-bucket guard
     * (meant for degenerate boilerplate/zero-vector cells; sampled detection
     * at ~maxCellSize) star-links the working regime and recall collapses
-    * (measured in SemDedupScaleBench — cells at the detection point lost
-    * essentially all pairs). Rule: target ~400 rows/cell at the default
-    * cap, i.e. nCells ~ rows x probes / 400, which also bounds the
+    * (BASELINE.md "Round-6 semantic-dedup scaling evidence" — cells at the
+    * detection point lost essentially all pairs). Rule: target ~400
+    * rows/cell at the default cap, i.e. nCells ~ rows x probes / 400, which also bounds the
     * within-cell join at ~80k pairs/cell; the quantizer still fits on a
     * bounded sample at any corpus size.
     */
@@ -2082,19 +2093,6 @@ object Dedup {
         F.cosine_similarity(col("v_a"), col("v_b")).as("cosine"))
       .where(col("cosine") >= threshold)
     if (probes <= 1) pairs else pairs.distinct()
-  }
-
-  /** The candidate pairs SemDeDup scores before cosine verification — the
-    * scaling-evidence twin of [[Similarity.lshScoredPairs]]: proves the
-    * within-cell join prunes the quadratic all-pairs space and that the
-    * pruning ratio holds as the corpus grows (SemDedupScaleBench).
-    */
-  def semanticScoredPairs(df: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16, sampleSize: Int = 4096,
-      maxCellSize: Int = DefaultMaxBucketSize, probes: Int = 1): Long = {
-    val centroids = Similarity.trainSphericalQuantizer(df, vecCol, nCells, sampleSize)
-    cappedBucketPairs(df, semanticBanded(idCol, vecCol, centroids, probes),
-      Seq("cell"), Seq("v"), maxCellSize).count()
   }
 
   private def semanticBanded(idCol: String, vecCol: String,

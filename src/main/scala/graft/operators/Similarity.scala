@@ -62,18 +62,6 @@ object Similarity {
       .select("query_id", "nn_id", "cosine", "rank")
   }
 
-  /** The (query, corpus-row) pairs LSH actually scores — the pruned join
-    * before cosine evaluation. Exposed for scaling evidence: its count over
-    * growing corpora is the measured pruning ratio vs brute force's
-    * rows x queries.
-    */
-  def lshScoredPairs(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-      bits: Int = 6, multiProbe: Boolean = true, tables: Int = 1,
-      excludeSelf: Boolean = true): Long =
-    lshCandidates(corpus, queries, idCol, vecCol, qIdCol, qVecCol,
-      bits, multiProbe, tables, excludeSelf).count()
-
   /** A banded LSH corpus — the serving index for [[lshQuery]]: columns
     * (table, bucket, nn_id, __cv). The banding is a pure map over the
     * corpus, but at 100 TB re-hashing every vector per query batch is a full
@@ -170,17 +158,6 @@ object Similarity {
       .select("query_id", "nn_id", "cosine", "rank")
   }
 
-  /** The (query, corpus-row) pairs IVF scores after cell pruning — the IVF
-    * twin of [[lshScoredPairs]], for scaling evidence. Re-trains the (tiny,
-    * driver-local) quantizer, so counts match a fresh ivfTopK run exactly.
-    */
-  def ivfScoredPairs(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-      nCells: Int = 16, nProbe: Int = 3, sampleSize: Int = 4096,
-      excludeSelf: Boolean = true): Long =
-    ivfCandidates(corpus, queries, idCol, vecCol, qIdCol, qVecCol,
-      nCells, nProbe, sampleSize, excludeSelf).count()
-
   /** A trained IVF coarse quantizer plus its corpus cell assignment — the
     * build-once / query-many production shape. Build when the corpus lands,
     * then serve query batch after query batch without re-training or
@@ -224,7 +201,7 @@ object Similarity {
     * [[Dedup.semanticDuplicates]] (SemDeDup clusters with the same spherical
     * coarse quantizer IVF uses for cell pruning).
     */
-  private[graft] def trainSphericalQuantizer(corpus: DataFrame, vecCol: String,
+  private[operators] def trainSphericalQuantizer(corpus: DataFrame, vecCol: String,
       nCells: Int, sampleSize: Int): Array[Array[Double]] = {
     val samplePts = corpus
       .select(col(vecCol).cast("array<double>").as("__v"), rand(42L).as("__r"))
@@ -632,8 +609,8 @@ object Similarity {
       if (points.isEmpty) return Array(Array(0.0))
       // restarts are independent (each fully determined by its own seed), so
       // they run on parallel driver threads — the quantizer fit was the
-      // measured driver-side serial gap of the ANN gates (r17 JobProfile:
-      // ann_ivfpq wall 2.4 s, of which only 0.56 s was Spark jobs). The
+      // measured driver-side serial gap of the ANN gates (OPTIMIZATION_r17.md
+      // §3: ann_ivfpq wall 2.4 s, of which only 0.56 s was Spark jobs). The
       // winner is selected by (cost, restart index), which is EXACTLY the
       // sequential loop's first-lowest-cost rule — bit-identical output.
       val costs = new Array[Double](restarts)

@@ -93,8 +93,8 @@ object Pipeline {
     * total executor core count, not anything about the driver (r18,
     * VERDICT r17 #3). The multimodal gates synthesize ~30 independent
     * deterministic payloads per run, and serial synthesis was their
-    * measured driver gap (r17 JobProfile: the mp3 gate spent 1.55 s of its
-    * 2.9 s wall between jobs). Output order — hence the gate rows — is
+    * measured driver gap (OPTIMIZATION_r17.md §4: the mp3 gate spent 1.55 s
+    * of its 2.9 s wall between jobs). Output order — hence the gate rows — is
     * identical to the serial map.
     */
   private def parRows[T](spark: org.apache.spark.sql.SparkSession,
@@ -179,8 +179,9 @@ object Pipeline {
     // agree). ----
     QuerySpec("dedup_member_expand",
       (s, dir) => {
-        // the gate corpus has no exact cliques, so build them the ScaleData
-        // way: a key-shifted verbatim copy of the first 100 docs (cliques of
+        // the gate corpus has no exact cliques, so build them the way the
+        // sf1+ scale fixtures did (BASELINE.md "Round 10: real sf1 on-disk
+        // run"): a key-shifted verbatim copy of the first 100 docs (cliques of
         // 2). Flag a SUBSET of clique reps (rep % 5 == 0) so the gate proves
         // selective expansion, not just group recovery.
         val d = t(s, dir, "documents")

@@ -740,8 +740,9 @@ object DeltaLite {
   /** DV application as a broadcast membership FILTER ([[DvMasked]]): no
     * join, no exchange, the scan stays one codegen stage, and cost is a
     * per-scanned-row bitmap probe instead of a hash join against one row
-    * per DELETED row (MorReadScaleBench showed the exploded anti-join's
-    * read tax growing with the deleted count). None = bitmaps exceed the
+    * per DELETED row (BASELINE.md "Round-8 merge-on-read READ evidence"
+    * showed the exploded anti-join's read tax growing with the deleted
+    * count). None = bitmaps exceed the
     * byte cap; the caller falls back to the distributed anti-join.
     */
   private def dvFiltered(spark: SparkSession, snap: Snapshot,

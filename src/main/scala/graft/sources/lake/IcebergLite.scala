@@ -828,7 +828,8 @@ object IcebergLite {
     * (path + compact bitmap bytes), never one JVM Row per deleted row.
     * The scan then filters through a codegen'd probe — no join against
     * the data side, no exchange on it, cost per SCANNED row instead of a
-    * hash join against one row per DELETED row (MorReadScaleBench). The
+    * hash join against one row per DELETED row (BASELINE.md "Round-8
+    * merge-on-read READ evidence"). The
     * caller's row cap (decided from manifest record counts before any IO)
     * stays the broadcast-SIZE gate; driver heap is bounded by live-file
     * count × bitmap bytes regardless of delete cardinality.

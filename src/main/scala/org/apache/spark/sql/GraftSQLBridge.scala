@@ -45,4 +45,10 @@ object GraftSQLBridge {
     cat.asInstanceOf[connector.catalog.TableCatalog]
       .loadTable(connector.catalog.Identifier.of(parts.tail.init.toArray, parts.last))
   }
+
+  /** Block until every listener event posted so far has been delivered, so
+    * a caller reads complete job records without sleeping.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.GraftTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSQLBridge, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,7 +69,7 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.test.jobs", tag)
-    try { body; GraftTestBridge.drainListenerBus(sc); jobs.get() }
+    try { body; GraftSQLBridge.drainListenerBus(spark); jobs.get() }
     finally {
       sc.setLocalProperty("graft.test.jobs", null)
       sc.removeSparkListener(listener)

@@ -1152,7 +1152,7 @@ class DedupSuite extends SparkTestBase {
     try {
       val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
       assert(Dedup.duplicateGroups(empty, roundsOut = Some(rounds)).collect().isEmpty)
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.GraftSQLBridge.drainListenerBus(spark)
       // one count materializes the canonical edges; the distributed round is
       // the second (the driver executor counts nothing per round)
       assert(rounds.get() == 1 && counts.get() == 2,
@@ -1174,9 +1174,9 @@ class DedupSuite extends SparkTestBase {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.GraftSQLBridge.drainListenerBus(spark)
       spark.sparkContext.addSparkListener(listener)
-      try { body; org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext); jobs.get() }
+      try { body; org.apache.spark.sql.GraftSQLBridge.drainListenerBus(spark); jobs.get() }
       finally spark.sparkContext.removeSparkListener(listener)
     }
     // AQE runs each query stage as its own job — pin it off so jobs == actions.
