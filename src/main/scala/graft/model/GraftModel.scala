@@ -104,10 +104,6 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
       .find(fs.exists)
       .map(p => read[DataSourceSpec](readString(p)))
 
-  def dropDataSource(ns: Seq[String], name: String): Boolean =
-    Seq(DsSuffix, FsSuffix).map(sfx => new Path(nsPath(ns), s"$name$sfx"))
-      .filter(fs.exists).map(p => fs.delete(p, false)).exists(identity)
-
   /** Walk the namespace prefix from the leaf upward looking for the nearest
     * registered data source (reference: AbstractLightningCatalog.scala:70-92).
     * Returns the source spec plus the remaining namespace below it.

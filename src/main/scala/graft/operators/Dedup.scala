@@ -195,82 +195,6 @@ object Dedup {
       java.util.Arrays.asList(hotRows: _*), hotAgg.schema)))
   }
 
-  /** Executor-local vs reliable-storage checkpointing for the iterative CC
-    * loops, plus per-round checkpoint-file cleanup in reliable mode. RDD
-    * checkpointing recomputes the lineage for the write job unless the data
-    * is cached (documented Spark behavior) — reliable mode persists around
-    * each checkpoint so every round computes its join ONCE. Spark only
-    * deletes checkpoint files under
-    * spark.cleaner.referenceTracking.cleanCheckpoints=true, and then only
-    * when the RDD is GC'd — a long run would otherwise accumulate one
-    * rdd-* directory per round in reliable storage indefinitely, so each
-    * superseded round's directory (resolved from the materialized plan — no
-    * directory-listing races with concurrent checkpoint users) is deleted
-    * as soon as the FOLLOWING round, which no longer reads it, has safely
-    * materialized.
-    */
-  private final class CkptLoop(spark: org.apache.spark.sql.SparkSession,
-      reliable: Boolean) {
-    if (reliable)
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint=true needs spark.sparkContext.setCheckpointDir(...) " +
-          "pointing at reliable storage (HDFS/S3) before resolving groups")
-    private var prevRound: Option[String] = None
-
-    def eager(df: DataFrame): DataFrame =
-      if (!reliable) df.localCheckpoint(true)
-      else {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val out = df.checkpoint(true)
-        df.unpersist(false)
-        out
-      }
-
-    /** Lazy checkpoint: materializes at the caller's next action over the
-      * returned frame (fusing the convergence check into the materializing
-      * job); call [[release]] on the SOURCE frame after that action.
-      */
-    def lazily(df: DataFrame): DataFrame =
-      if (!reliable) df.localCheckpoint(false)
-      else {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.checkpoint(false)
-      }
-
-    def release(src: DataFrame): Unit = if (reliable) src.unpersist(false)
-
-    /** Seed the rotation with round 0's state (nothing deleted yet). */
-    def seed(materialized: DataFrame): Unit =
-      if (reliable) prevRound = checkpointFile(materialized)
-
-    /** Delete a materialized checkpoint that is fully superseded OUTSIDE the
-      * round rotation (the canonical edge frame once the pre-partitioned
-      * symmetric closure has been materialized from it — nothing reads it
-      * again, and a loop must not leave two corpus-sized edge checkpoints
-      * on reliable storage when one is garbage).
-      */
-    def drop(materialized: DataFrame): Unit =
-      if (reliable) checkpointFile(materialized).foreach(delete)
-
-    /** Note `materialized` as the new current round and delete the previous
-      * round's checkpoint directory — no reader left.
-      */
-    def rotate(materialized: DataFrame): Unit = if (reliable) {
-      prevRound.foreach(delete)
-      prevRound = checkpointFile(materialized)
-    }
-
-    private def checkpointFile(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
-      }.flatten
-
-    private def delete(file: String): Unit = try {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    } catch { case _: Exception => () } // cleanup is best-effort by design
-  }
-
   /** Resolve verified duplicate PAIRS into duplicate GROUPS: connected
     * components. Output: (id, group_id) where group_id is the component's
     * minimum id — deterministic, so oracle-comparable against a
@@ -335,12 +259,6 @@ object Dedup {
     *                 truncated at maxIter
     * @param requireConvergence when true, throw instead of returning
     *                 partially-merged groups on maxIter exhaustion
-    * @param reliableCheckpoint when true, truncate lineage with
-    *                 `checkpoint()` against the session's configured
-    *                 checkpoint directory (HDFS/S3 on a cluster) instead of
-    *                 executor-local `localCheckpoint()` — survives executor
-    *                 loss at the cost of a write per round. Requires
-    *                 `spark.sparkContext.setCheckpointDir(...)`.
     * @param strategy `minLabel` | `star` | `auto` (see above)
     * @param autoRoundBudget min-label rounds `auto` spends before switching
     * @param roundsOut when set, receives the total round count (a test
@@ -357,7 +275,6 @@ object Dedup {
     */
   def duplicateGroups(pairs: DataFrame, maxIter: Int = 20,
       requireConvergence: Boolean = false,
-      reliableCheckpoint: Boolean = false,
       strategy: String = "auto",
       autoRoundBudget: Int = 6,
       roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None,
@@ -366,9 +283,8 @@ object Dedup {
     require(Set("minLabel", "star", "auto").contains(strategy),
       s"unknown CC strategy '$strategy' (minLabel | star | auto)")
     if (strategy == "star")
-      return duplicateGroupsStar(pairs, maxIter, requireConvergence,
-        reliableCheckpoint, roundsOut)
-    val ck = new CkptLoop(pairs.sparkSession, reliableCheckpoint)
+      return duplicateGroupsStar(pairs, maxIter, requireConvergence, roundsOut)
+    val ck = new Ckpt.Loop(pairs.sparkSession)
     // CANONICAL form — (hi, lo) with duplicates and reversed repeats
     // collapsed, self-pairs kept as (x, x): one pass over the (expensive)
     // candidate-generation lineage. Every shape downstream derives from this
@@ -393,7 +309,7 @@ object Dedup {
     else
       CcControl.minLabel(
         if (onDriver(driverMax, count, canon)) new DriverLabels(new DriverIo(canon))
-        else new DistributedLabels(ck, canon, count, reliableCheckpoint),
+        else new DistributedLabels(ck, canon, count),
         strategy == "auto", maxIter, autoRoundBudget, requireConvergence, roundsOut, changedOut)
   }
 
@@ -415,19 +331,13 @@ object Dedup {
     *
     * @param maxIter round bound; O(log n) suffices — 35 covers any graph
     *                that fits in storage
-    * @param reliableCheckpoint same switch as [[duplicateGroups]]: per-round
-    *                `checkpoint()` against reliable storage (superseded
-    *                rounds' files deleted as the loop advances) instead of
-    *                executor-local `localCheckpoint()` — the multi-round
-    *                100-TB path must survive executor loss
     * @param roundsOut when set, receives the round count (a test hook, see
     *                 [[duplicateGroups]])
     */
   def duplicateGroupsStar(pairs: DataFrame, maxIter: Int = 35,
       requireConvergence: Boolean = true,
-      reliableCheckpoint: Boolean = false,
       roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None): DataFrame =
-    CcControl.star(starPhase(new CkptLoop(pairs.sparkSession, reliableCheckpoint),
+    CcControl.star(starPhase(new Ckpt.Loop(pairs.sparkSession),
         canonEdgeForm(pairs.select(col("id_a").as("u"), col("id_b").as("v")))),
       maxIter, requireConvergence, roundsOut)
 
@@ -444,7 +354,7 @@ object Dedup {
     * row count is the materializing action's own result, so counting costs
     * no job of its own.
     */
-  private def materialize(ck: CkptLoop, canon: DataFrame,
+  private def materialize(ck: Ckpt.Loop, canon: DataFrame,
       counted: Boolean): (DataFrame, Long) =
     if (!counted) (ck.eager(canon), -1L)
     else {
@@ -472,13 +382,13 @@ object Dedup {
     * count is taken only when the driver executor is enabled at all — with
     * the bound at 0 nothing reads it.
     */
-  private def starPhase(ck: CkptLoop, canon: DataFrame): CcControl.StarRounds[DataFrame] = {
+  private def starPhase(ck: Ckpt.Loop, canon: DataFrame): CcControl.StarRounds[DataFrame] = {
     val driverMax = driverMaxEdges(canon.sparkSession)
     val (edges, count) = materialize(ck, canon, counted = driverMax > 0)
     starRounds(ck, edges, count, driverMax)
   }
 
-  private def starRounds(ck: CkptLoop, edges: DataFrame, count: Long,
+  private def starRounds(ck: Ckpt.Loop, edges: DataFrame, count: Long,
       driverMax: Long): CcControl.StarRounds[DataFrame] =
     if (onDriver(driverMax, count, edges)) {
       val io = new DriverIo(edges)
@@ -595,8 +505,8 @@ object Dedup {
   /** The distributed executor's min-label rounds over the canonical
     * checkpoint `canon` (`count` rows), one Spark action per round.
     */
-  private final class DistributedLabels(ck: CkptLoop, canon: DataFrame, count: Long,
-      reliableCheckpoint: Boolean) extends CcControl.LabelRounds[DataFrame] {
+  private final class DistributedLabels(ck: Ckpt.Loop, canon: DataFrame, count: Long)
+      extends CcControl.LabelRounds[DataFrame] {
     // symmetric closure: both directions of each canonical edge, self-pairs
     // once. Below [[MinLabelPrePartitionEdges]] it is a NARROW per-round
     // explode of the canonical checkpoint: AQE plans each round's join as a
@@ -651,7 +561,7 @@ object Dedup {
     def settled(): Boolean = labeledEdges.where(col("u") =!= col("v")).isEmpty
 
     def contract(): CcControl.StarRounds[DataFrame] = {
-      val s = starPhase(new CkptLoop(canon.sparkSession, reliableCheckpoint),
+      val s = starPhase(new Ckpt.Loop(canon.sparkSession),
         canonEdgeForm(labeledEdges))
       star = Some(s)
       s
@@ -670,7 +580,7 @@ object Dedup {
     * star-first route passes a self-pair filter over its canonical
     * checkpoint); `ck` owns the round rotation.
     */
-  private final class DistributedStar(ck: CkptLoop, edges0: DataFrame)
+  private final class DistributedStar(ck: Ckpt.Loop, edges0: DataFrame)
       extends CcControl.StarRounds[DataFrame] {
     private var edges = edges0
     ck.seed(edges)
@@ -730,10 +640,12 @@ object Dedup {
     * themselves. Composes [[minHashDuplicateGroups]] (the exact-collapsed
     * fused path — pair semantics identical, no quadratic clique pairs) -> a
     * per-group top-1 window, and is the pipeline-level entry point that
-    * carries the cluster-deployment switches (`requireConvergence`,
-    * `reliableCheckpoint`) down into the group resolver so deployments opt
-    * into fail-fast convergence and reliable-storage checkpointing without
-    * touching operator internals.
+    * carries `requireConvergence` down into the group resolver so
+    * deployments opt into fail-fast convergence without touching operator
+    * internals. Reliable-storage checkpointing of every cut on the way —
+    * exact collapse, candidate pairs and each CC round — is the session's
+    * one switch, `spark.graft.checkpoint.reliable=true` plus
+    * `sparkContext.setCheckpointDir(...)` (see [[Ckpt]]).
     *
     * @param quality a column computed against `df`'s rows scoring each doc
     *                (e.g. lexical diversity); higher wins within a group
@@ -743,11 +655,10 @@ object Dedup {
   def keepBest(df: DataFrame, idCol: String, textCol: String, quality: Column,
       threshold: Double = 0.7, maxBucketSize: Int = DefaultMaxBucketSize,
       maxIter: Int = 20, requireConvergence: Boolean = false,
-      reliableCheckpoint: Boolean = false, strategy: String = "auto"): DataFrame = {
+      strategy: String = "auto"): DataFrame = {
     val groups = minHashDuplicateGroups(df, idCol, textCol, threshold,
       maxBucketSize = maxBucketSize, maxIter = maxIter,
-      requireConvergence = requireConvergence,
-      reliableCheckpoint = reliableCheckpoint, strategy = strategy)
+      requireConvergence = requireConvergence, strategy = strategy)
     val scored = df.select(col(idCol), quality.as("quality"))
       .join(groups.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("group_id", coalesce(col("group_id"), col(idCol)))
@@ -1149,12 +1060,12 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 32,
       maxBucketSize: Int = DefaultMaxBucketSize,
       maxIter: Int = 20, requireConvergence: Boolean = false,
-      reliableCheckpoint: Boolean = false, strategy: String = "auto"): DataFrame = {
+      strategy: String = "auto"): DataFrame = {
     val c = collapsedMinHash(df, idCol, textCol, threshold, shingleSize,
       numHashes, bands, maxBucketSize)
     val edges = c.repPairs.select(col("id_a"), col("id_b"))
       .unionByName(c.ec.starEdges)
-    dispatchGroups(edges, maxIter, requireConvergence, reliableCheckpoint, strategy)
+    dispatchGroups(edges, maxIter, requireConvergence, strategy)
   }
 
   /** Strategy dispatch shared by the collapsed group paths.
@@ -1166,8 +1077,7 @@ object Dedup {
     * `requireConvergence` governs the minLabel/auto paths as before.
     */
   private def dispatchGroups(edges: DataFrame, maxIter: Int,
-      requireConvergence: Boolean, reliableCheckpoint: Boolean,
-      strategy: String): DataFrame =
+      requireConvergence: Boolean, strategy: String): DataFrame =
     if (strategy == "star") {
       // visible override (not just scaladoc): callers that explicitly
       // tolerated non-convergence in r14 now throw on a non-converged run
@@ -1175,10 +1085,9 @@ object Dedup {
         log.warn("dispatchGroups: strategy=\"star\" overrides requireConvergence=false " +
           "to true (non-converged star runs silently return partially merged groups); " +
           "call duplicateGroupsStar directly to opt out")
-      duplicateGroupsStar(edges, maxIter, requireConvergence = true,
-        reliableCheckpoint)
+      duplicateGroupsStar(edges, maxIter, requireConvergence = true)
     } else
-      duplicateGroups(edges, maxIter, requireConvergence, reliableCheckpoint, strategy)
+      duplicateGroups(edges, maxIter, requireConvergence, strategy)
 
   // ---- Incremental ingest dedup: a NEW batch against an EXISTING corpus ----
 
@@ -1677,11 +1586,6 @@ object Dedup {
          (col("__sa") + col("__sb") - col("__i")).cast("double")).as("jaccard"))
   }
 
-  /** All-pairs n-gram Jaccard above a threshold via LSH candidates. */
-  def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    minHashDuplicates(df, idCol, textCol, threshold, maxBucketSize = maxBucketSize)
-
   /** `blocks` sentinel for [[simHashDuplicates]] / [[simHashDuplicateGroups]]:
     * force the single-table banding scheme regardless of distance. Exists for
     * scheme A/B measurement (BASELINE.md "r16: multi-table SimHash banding
@@ -1965,7 +1869,7 @@ object Dedup {
       maxHamming: Int = 3, maxBucketSize: Int = DefaultMaxBucketSize,
       portable: Boolean = false,
       maxIter: Int = 20, requireConvergence: Boolean = false,
-      reliableCheckpoint: Boolean = false, strategy: String = "auto",
+      strategy: String = "auto",
       blocks: Int = 0): DataFrame = {
     val ec = exactCollapse(df, idCol, textCol)
     val repDocs = ec.repDocs(idCol, textCol)
@@ -1977,7 +1881,7 @@ object Dedup {
       maxBucketSize, portable, blocks)
     val edges = repPairs.select(col("id_a"), col("id_b"))
       .unionByName(ec.starEdges)
-    dispatchGroups(edges, maxIter, requireConvergence, reliableCheckpoint, strategy)
+    dispatchGroups(edges, maxIter, requireConvergence, strategy)
   }
 
   /** Embedding near-dup pairs: cosine >= threshold via LSH bucketing (same
@@ -2128,10 +2032,10 @@ object Dedup {
       maxCellSize: Int = DefaultMaxBucketSize, probes: Int = 1,
       keepLowCentroidSim: Boolean = false,
       maxIter: Int = 20, requireConvergence: Boolean = false,
-      reliableCheckpoint: Boolean = false, strategy: String = "auto"): DataFrame = {
+      strategy: String = "auto"): DataFrame = {
     val centroids = Similarity.trainSphericalQuantizer(df, vecCol, nCells, sampleSize)
     val pairs = semanticPairs(df, idCol, vecCol, centroids, threshold, maxCellSize, probes)
-    val groups = duplicateGroups(pairs, maxIter, requireConvergence, reliableCheckpoint, strategy)
+    val groups = duplicateGroups(pairs, maxIter, requireConvergence, strategy)
     // Min-id policy shuffles only (id, group_id) into the per-group window;
     // the paper policy additionally computes each row's cosine to its own
     // cluster centroid MAP-SIDE before the shuffle (centroids ride in as one

@@ -697,10 +697,4 @@ object Similarity {
       centers
     }
   }
-
-  /** Self-join variant: for every row, its nearest neighbor in the corpus. */
-  def nearestNeighborJoin(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int = 1): DataFrame =
-    bruteForceTopK(corpus, corpus.select(col(idCol), col(vecCol)),
-      idCol, vecCol, idCol, vecCol, k)
 }

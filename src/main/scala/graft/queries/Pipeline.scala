@@ -1202,10 +1202,12 @@ object Pipeline {
       (s, dir) => {
         import graft.functions.GopherRepetition
         // tokenize each document once: `tk` is projected first and every
-        // seg slices that column (inlined, the tokens were rebuilt per seg)
+        // seg slices that column (inlined, the tokens were rebuilt per seg);
+        // l1 and l2 feed several paragraphs, so a staged select builds each
+        // once per document
         val tk = col("tk")
         def seg(from: Int, n: Int) = concat_ws(" ", slice(tk, from, n))
-        val l1 = seg(1, 6); val l2 = seg(7, 5); val l4 = seg(12, 6)
+        val (l1, l2) = (col("l1"), col("l2")); val l4 = seg(12, 6)
         val l5 = when(col("doc_id") % 5 === 0, l2).otherwise(seg(18, 5))
         val p1 = concat_ws("\n", l1, l2)
         val p2 = concat_ws("\n", l1, l4, l5)
@@ -1217,6 +1219,7 @@ object Pipeline {
           .map { case (f, th) => col(f) <= th }.reduce(_ && _)
         t(s, dir, "documents")
           .select(col("doc_id"), T.tokens(col("text")).as("tk"))
+          .select(col("doc_id"), tk, seg(1, 6).as("l1"), seg(7, 5).as("l2"))
           .select(col("doc_id"), F.gopher_repetition(lined).as("__g"))
           .select(col("doc_id") +: flat: _*)
           .withColumn("keep", keep)

@@ -37,24 +37,6 @@ object Unstructured {
   val PreviewBytes = 1024
   val ThumbnailMaxDim = 96
 
-  /** Common metadata columns (reference: UnstructuredFileTable.scala:37-153). */
-  def metadataSchema(filetype: String): StructType = {
-    val base = StructType(Seq(
-      StructField("filetype", StringType),
-      StructField("path", StringType),
-      StructField("modifiedat", TimestampType),
-      StructField("sizeinbytes", LongType)))
-    filetype match {
-      case "text" | "pdf" => base.add("preview", StringType)
-      case "image" => base.add("width", IntegerType).add("height", IntegerType)
-        .add("imagethumbnail", BinaryType)
-      case "video" => base.add("format", StringType).add("duration", LongType)
-        .add("width", IntegerType).add("height", IntegerType)
-      case "audio" => base.add("samplerate", IntegerType).add("duration", LongType)
-      case _ => base
-    }
-  }
-
   def contentSchema(filetype: String): StructType = filetype match {
     case "text" => StructType(Seq(StructField("path", StringType),
       StructField("textcontent", StringType)))

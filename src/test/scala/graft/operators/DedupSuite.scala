@@ -826,20 +826,50 @@ class DedupSuite extends SparkTestBase {
     assert(lax.nonEmpty)
   }
 
-  test("keepBest(reliableCheckpoint=true) demands a checkpoint dir, then matches the local path") {
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val e = intercept[IllegalArgumentException] {
-        Dedup.keepBest(chainDocs, "doc_id", "text", col("q"), reliableCheckpoint = true)
-      }
-      assert(e.getMessage.contains("setCheckpointDir"))
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
+  test("keepBest under the reliable conf demands a checkpoint dir, then matches local") {
     val local = Dedup.keepBest(chainDocs, "doc_id", "text", col("q"))
       .collect().map(_.toString).sorted.toSeq
-    val reliable = Dedup.keepBest(chainDocs, "doc_id", "text", col("q"), reliableCheckpoint = true)
-      .collect().map(_.toString).sorted.toSeq
-    assert(reliable == local)
+    spark.conf.set(Ckpt.ReliableConf, "true")
+    try {
+      if (spark.sparkContext.getCheckpointDir.isEmpty) {
+        val e = intercept[IllegalArgumentException] {
+          Dedup.keepBest(chainDocs, "doc_id", "text", col("q"))
+        }
+        assert(e.getMessage.contains("setCheckpointDir"))
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      val reliable = Dedup.keepBest(chainDocs, "doc_id", "text", col("q"))
+        .collect().map(_.toString).sorted.toSeq
+      assert(reliable == local)
+    } finally spark.conf.set(Ckpt.ReliableConf, "false")
+  }
+
+  test("under the reliable conf every LogicalRDD keepBest returns is checkpointed") {
+    // one switch for the whole pipeline: the exact-collapse and candidate
+    // cuts AND the CC rounds all follow the session conf, so no
+    // executor-local block is left for the returned plan to read
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-plan")
+    val prev = spark.sparkContext.getCheckpointDir
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(Ckpt.ReliableConf, "true")
+    // distributed rounds, so the labels the plan reads are checkpoints
+    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
+    try {
+      val out = Dedup.keepBest(chainDocs, "doc_id", "text", col("q"), threshold = 0.7)
+      val rdds = out.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr
+      }
+      assert(rdds.nonEmpty, "the returned plan reads no checkpoint at all")
+      assert(rdds.forall(_.rdd.getCheckpointFile.isDefined),
+        s"${rdds.count(_.rdd.getCheckpointFile.isEmpty)} of ${rdds.size} cuts are executor-local")
+      assert(out.count() == 2L)
+    } finally {
+      spark.conf.set(Ckpt.ReliableConf, "false")
+      spark.conf.unset("spark.graft.cc.driverMaxEdges")
+      prev.foreach(spark.sparkContext.setCheckpointDir)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 
   // ---- incremental ingest dedup: new batch vs existing corpus ----
@@ -1212,8 +1242,7 @@ class DedupSuite extends SparkTestBase {
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set(Ckpt.ReliableConf, "true")
     try {
-      val reliableOut = Dedup.keepBest(chainDocs, "doc_id", "text", col("q"),
-          threshold = 0.7, reliableCheckpoint = true)
+      val reliableOut = Dedup.keepBest(chainDocs, "doc_id", "text", col("q"), threshold = 0.7)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(reliableOut == localOut,
         "reliable-mode lineage cuts must not change values")
@@ -1232,6 +1261,8 @@ class DedupSuite extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-clean")
     val prev = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(dir.toString)
+    // the session conf alone switches the CC loop to reliable storage
+    spark.conf.set(Ckpt.ReliableConf, "true")
     // pin the DISTRIBUTED rounds (the rotation under test): a 12-edge graph
     // would otherwise take the driver min-label hatch and checkpoint nothing
     spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
@@ -1241,7 +1272,7 @@ class DedupSuite extends SparkTestBase {
       // the checkpoint dir would hold one rdd-* dir per round
       val pairs = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
       val groups = Dedup.duplicateGroups(pairs, maxIter = 20,
-        requireConvergence = true, reliableCheckpoint = true, strategy = "minLabel")
+        requireConvergence = true, strategy = "minLabel")
       assert(groups.select("group_id").distinct().count() == 1L)
       val rddDirs = java.nio.file.Files.walk(dir)
         .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
@@ -1256,7 +1287,7 @@ class DedupSuite extends SparkTestBase {
       // round's edge set remains on reliable storage
       val before = java.nio.file.Files.walk(dir)
         .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
-      val starGroups = Dedup.duplicateGroupsStar(pairs, reliableCheckpoint = true)
+      val starGroups = Dedup.duplicateGroupsStar(pairs)
       assert(starGroups.collect().map(_.getLong(1)).forall(_ == 0L))
       val afterStar = java.nio.file.Files.walk(dir)
         .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
@@ -1264,6 +1295,7 @@ class DedupSuite extends SparkTestBase {
         s"star must keep exactly its final round's checkpoint, got ${afterStar - before}")
       assert(starGroups.count() == 12L, "star frame readable after cleanup")
     } finally {
+      spark.conf.set(Ckpt.ReliableConf, "false")
       spark.conf.unset("spark.graft.cc.driverMaxEdges")
       prev.foreach(spark.sparkContext.setCheckpointDir)
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
