@@ -37,6 +37,28 @@ object DqSupport {
       stripCompositeName(name).equalsIgnoreCase(q) ||
         (cols.nonEmpty && cols.mkString(",").equalsIgnoreCase(q))
     }
+
+    /** The LIST DQ `expression` column: the columns of a PK/UNIQUE, the
+      * columns and referenced table(columns) of an FK, a DQ's expression.
+      */
+    def rendering: String = typ match {
+      case "DQ" => expression.getOrElse("")
+      case "FK" => s"${cols.mkString(", ")} -> ${refTable.mkString(".")}(${refCols.mkString(", ")})"
+      case _ => cols.mkString(", ")
+    }
+  }
+
+  /** The checks of `checks` that `query` names, with a custom DQ taking
+    * precedence: the reference's annotation lookup short-circuits before
+    * the constraint lookup (DataQualitySpec.scala:461-468), so a DQ sharing
+    * a constraint's name answers alone.
+    */
+  def named(checks: Seq[Check], query: String, table: Seq[String]): Seq[Check] = {
+    val hit = checks.filter(_.answersTo(query))
+    if (hit.isEmpty) throw new NoSuchElementException(
+      s"no DQ or constraint named $query on ${table.mkString(".")}")
+    val dqHits = hit.filter(_.typ == "DQ")
+    if (dqHits.nonEmpty) dqHits else hit
   }
 
   /** Small daemon pool for submitting independent PK/FK Spark jobs
@@ -121,18 +143,19 @@ object DqSupport {
         .stripMargin)
   }
 
-  /** All checks declared on a table: column- and table-level PK/UNIQUE/FK +
-    * custom DQ annotations. Composite constraint names render as
-    * backtick-quoted comma lists like the reference
-    * (DataQualitySpec.scala:296-342, LightningSource.scala:92-98).
+  /** Composite constraint names render as backtick-quoted comma lists like
+    * the reference (DataQualitySpec.scala:296-342, LightningSource.scala:92-98).
     */
   def constraintName(explicit: Option[String], cols: Seq[String]): String =
     explicit.getOrElse(if (cols.size == 1) cols.head else s"`${cols.mkString(",")}`")
 
   def stripCompositeName(name: String): String = name.stripPrefix("`").stripSuffix("`")
 
-  def checksOf(spark: SparkSession, tableFqn: Seq[String], spec: TableSpec,
-      uslNs: Seq[String], usl: UslSpec): Seq[Check] = {
+  /** All checks declared on a table, in LIST DQ order: table- then
+    * column-level PK, table- then column-level UNIQUE, FK, then the custom
+    * DQ annotations. RUN DQ, LIST DQ and SHOW DQ RECORD all read this list.
+    */
+  def checksOf(spec: TableSpec): Seq[Check] = {
     val pkChecks = (spec.primaryKey.map(pk => (constraintName(pk.name, pk.columns), pk.columns, "PK")).toSeq ++
       spec.columns.filter(_.primaryKey).map(c => (c.name, Seq(c.name), "PK")) ++
       spec.uniques.map(u => (constraintName(u.name, u.columns), u.columns, "UNIQUE")) ++
@@ -229,19 +252,7 @@ case class ListDqCommand(usl: Seq[String]) extends GraftCommandBase {
     val spec = GraftEnv.model(spark).loadUsl(ns, name).getOrElse(
       throw new NoSuchElementException(s"USL ${parts.mkString(".")} not found"))
     spec.tables.flatMap { tb =>
-      val pk = (tb.primaryKey.map(p => (DqSupport.constraintName(p.name, p.columns), "PK", p.columns)).toSeq ++
-        tb.columns.filter(_.primaryKey).map(c => (c.name, "PK", Seq(c.name))) ++
-        tb.uniques.map(u => (DqSupport.constraintName(u.name, u.columns), "UNIQUE", u.columns)) ++
-        tb.columns.filter(_.unique).map(c => (c.name, "UNIQUE", Seq(c.name))))
-        .map { case (nm, typ, cols) => Row(nm, tb.name, typ, cols.mkString(", ")) }
-      val fk = (tb.foreignKeys.map(f =>
-          (DqSupport.constraintName(f.name, f.columns), f.columns, f.refTable, f.refColumns)) ++
-        tb.columns.flatMap(c => c.references.map(r => (c.name, Seq(c.name), r.table, r.columns))))
-        .map { case (nm, cols, rt, rc) =>
-          Row(nm, tb.name, "FK", s"${cols.mkString(", ")} -> ${rt.mkString(".")}(${rc.mkString(", ")})")
-        }
-      val dq = tb.dataQualities.map(d => Row(d.name, tb.name, "DQ", d.expression))
-      pk ++ fk ++ dq
+      DqSupport.checksOf(tb).map(c => Row(c.name, tb.name, c.typ, c.rendering))
     }
   }
 }
@@ -253,20 +264,9 @@ case class RunDqCommand(name: Option[String], table: Seq[String]) extends GraftC
   override val output: Seq[Attribute] = Seq(attr("name"), attr("table"), attr("type"),
     attr("total", LongType), attr("valid", LongType), attr("invalid", LongType))
   override def run(spark: SparkSession): Seq[Row] = {
-    val (ns, usl, tableSpec) = DqSupport.resolveUsl(spark, table)
-    val all = DqSupport.checksOf(spark, table, tableSpec, ns, usl)
-    val selected = name match {
-      case Some(n) =>
-        val hit = all.filter(_.answersTo(n))
-        require(hit.nonEmpty, s"no DQ or constraint named $n on ${table.mkString(".")}")
-        // name-collision dispatch (reference: DataQualitySpec.scala:461-468):
-        // the annotation lookup short-circuits BEFORE constraints there, so a
-        // custom DQ sharing a constraint's name runs alone — mirror that
-        // precedence instead of running both
-        val dqHits = hit.filter(_.typ == "DQ")
-        if (dqHits.nonEmpty) dqHits else hit
-      case None => all
-    }
+    val (_, _, tableSpec) = DqSupport.resolveUsl(spark, table)
+    val all = DqSupport.checksOf(tableSpec)
+    val selected = name.fold(all)(DqSupport.named(all, _, table))
     val tableName = GraftEnv.stripCatalog(spark, table).mkString(".")
     val results = DqSupport.runChecks(spark, table, selected)
     selected.zip(results).map { case (c, (tot, valid)) =>
@@ -303,28 +303,12 @@ case class ShowDqRecordsCommand(name: String, table: Seq[String], valid: Boolean
     * reference: DataQualitySpec.scala:613-615).
     */
   def recordsDf(spark: SparkSession): DataFrame = {
-    val (ns, usl, tableSpec) = DqSupport.resolveUsl(spark, table)
-    val norm = DqSupport.stripCompositeName(name)
-    tableSpec.dataQualities.find(_.name.equalsIgnoreCase(norm)) match {
-      case Some(dq) => DqSupport.customDqDf(spark, table, dq.expression, valid, limit)
-      case None =>
-        val pkCols = (tableSpec.primaryKey.map(p => (DqSupport.stripCompositeName(DqSupport.constraintName(p.name, p.columns)), p.columns)).toSeq ++
-          tableSpec.columns.filter(_.primaryKey).map(c => (c.name, Seq(c.name))) ++
-          tableSpec.uniques.map(u => (DqSupport.stripCompositeName(DqSupport.constraintName(u.name, u.columns)), u.columns)) ++
-          tableSpec.columns.filter(_.unique).map(c => (c.name, Seq(c.name))))
-        pkCols.find(_._1.equalsIgnoreCase(norm)) match {
-          case Some((_, cols)) => DqSupport.pkRecordsDf(spark, table, cols, valid, limit)
-          case None =>
-            val fks = tableSpec.foreignKeys.map(f =>
-                (DqSupport.stripCompositeName(DqSupport.constraintName(f.name, f.columns)), f.columns, f.refTable, f.refColumns)) ++
-              tableSpec.columns.flatMap(c => c.references.map(r => (c.name, Seq(c.name), r.table, r.columns)))
-            fks.find(_._1.equalsIgnoreCase(norm)) match {
-              case Some((_, cols, rt, rc)) =>
-                DqSupport.fkRecordsDf(spark, table, cols, rt, rc, valid, limit)
-              case None => throw new NoSuchElementException(
-                s"no DQ or constraint named $name on ${table.mkString(".")}")
-            }
-        }
+    val (_, _, tableSpec) = DqSupport.resolveUsl(spark, table)
+    val c = DqSupport.named(DqSupport.checksOf(tableSpec), name, table).head
+    c.typ match {
+      case "DQ" => DqSupport.customDqDf(spark, table, c.expression.get, valid, limit)
+      case "FK" => DqSupport.fkRecordsDf(spark, table, c.cols, c.refTable, c.refCols, valid, limit)
+      case _ => DqSupport.pkRecordsDf(spark, table, c.cols, valid, limit)
     }
   }
 

@@ -30,6 +30,15 @@ object Similarity {
       .where(if (excludeSelf) col("nn_id") =!= col("query_id") else lit(true))
       .select(col("query_id"), col("nn_id"),
         F.cosine_similarity(col("__cv"), col("__qv")).as("cosine"))
+    topK(scored, k)
+  }
+
+  /** The per-query top-k of scored (query_id, nn_id, cosine) rows, ranked
+    * by cosine desc then nn_id asc: (query_id, nn_id, cosine, rank). The
+    * `rank <= k` filter over the window lets Spark insert a map-side
+    * WindowGroupLimit.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("nn_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -49,18 +58,9 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
       k: Int, bits: Int = 6, multiProbe: Boolean = true, tables: Int = 1,
-      excludeSelf: Boolean = true): DataFrame = {
-    val scored = lshCandidates(corpus, queries, idCol, vecCol, qIdCol, qVecCol,
-        bits, multiProbe, tables, excludeSelf)
-      .select(col("query_id"), col("nn_id"),
-        F.cosine_similarity(col("__cv"), col("__qv")).as("cosine"))
-      .groupBy("query_id", "nn_id").agg(max("cosine").as("cosine")) // dedup multi-probe hits
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    lshQuery(lshBuild(corpus, idCol, vecCol, bits, tables), queries, qIdCol, qVecCol,
+      k, multiProbe, excludeSelf)
 
   /** A banded LSH corpus — the serving index for [[lshQuery]]: columns
     * (table, bucket, nn_id, __cv). The banding is a pure map over the
@@ -95,11 +95,7 @@ object Similarity {
       .select(col("query_id"), col("nn_id"),
         F.cosine_similarity(col("__cv"), col("__qv")).as("cosine"))
       .groupBy("query_id", "nn_id").agg(max("cosine").as("cosine")) // dedup multi-probe hits
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
+    topK(scored, k)
   }
 
   // single-table: no generate node on the scan (the common fast path)
@@ -128,13 +124,6 @@ object Similarity {
       .where(if (excludeSelf) col("nn_id") =!= col("query_id") else lit(true))
   }
 
-  private def lshCandidates(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-      bits: Int, multiProbe: Boolean, tables: Int,
-      excludeSelf: Boolean): DataFrame =
-    lshQueryCandidates(lshBuild(corpus, idCol, vecCol, bits, tables),
-      queries, qIdCol, qVecCol, multiProbe, excludeSelf)
-
   /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
     * corpus into `nCells` cells; each query scores only the rows in its
     * `nProbe` nearest cells. The scale path when LSH recall is too blunt:
@@ -146,17 +135,9 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
       k: Int, nCells: Int = 16, nProbe: Int = 3, sampleSize: Int = 4096,
-      excludeSelf: Boolean = true): DataFrame = {
-    val scored = ivfCandidates(corpus, queries, idCol, vecCol, qIdCol, qVecCol,
-        nCells, nProbe, sampleSize, excludeSelf)
-      .select(col("query_id"), col("nn_id"),
-        F.cosine_similarity(col("__cv"), col("__qv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    ivfQuery(ivfBuild(corpus, idCol, vecCol, nCells, sampleSize), queries, qIdCol, qVecCol,
+      k, nProbe, excludeSelf)
 
   /** A trained IVF coarse quantizer plus its corpus cell assignment — the
     * build-once / query-many production shape. Build when the corpus lands,
@@ -202,15 +183,9 @@ object Similarity {
     * coarse quantizer IVF uses for cell pruning).
     */
   private[operators] def trainSphericalQuantizer(corpus: DataFrame, vecCol: String,
-      nCells: Int, sampleSize: Int): Array[Array[Double]] = {
-    val samplePts = corpus
-      .select(col(vecCol).cast("array<double>").as("__v"), rand(42L).as("__r"))
-      .orderBy(col("__r"))
-      .limit(sampleSize)
-      .collect().map(r => KMeansLite.normalized(r.getSeq[Double](0).toArray))
-      .sortBy(p => p.toSeq: Seq[Double])(math.Ordering.Implicits.seqOrdering)
-    KMeansLite.fit(samplePts, nCells, iters = 25, seed = 42L, spherical = true)
-  }
+      nCells: Int, sampleSize: Int): Array[Array[Double]] =
+    KMeansLite.fit(sampleUnitVectors(corpus, vecCol, sampleSize), nCells,
+      iters = 25, seed = 42L, spherical = true)
 
   /** Rehydrate an index from persisted cells (columns nn_id, __cv, cell) and
     * the centroid table used to produce them.
@@ -227,11 +202,7 @@ object Similarity {
     val scored = ivfQueryCandidates(index, queries, qIdCol, qVecCol, nProbe, excludeSelf)
       .select(col("query_id"), col("nn_id"),
         F.cosine_similarity(col("__cv"), col("__qv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
+    topK(scored, k)
   }
 
   private[operators] def ivfQueryCandidates(index: IvfIndex, queries: DataFrame,
@@ -243,13 +214,6 @@ object Similarity {
     index.cells.join(broadcast(probes), Seq("cell"))
       .where(if (excludeSelf) col("nn_id") =!= col("query_id") else lit(true))
   }
-
-  private def ivfCandidates(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-      nCells: Int, nProbe: Int, sampleSize: Int,
-      excludeSelf: Boolean): DataFrame =
-    ivfQueryCandidates(ivfBuild(corpus, idCol, vecCol, nCells, sampleSize),
-      queries, qIdCol, qVecCol, nProbe, excludeSelf)
 
   // ---- Product quantization (Jegou et al. '11) ----
 
@@ -406,11 +370,7 @@ object Similarity {
     val scored = withV.join(broadcast(qPinned), Seq("query_id"))
       .select(col("query_id"), col("nn_id"),
         F.cosine_similarity(col("__cv"), col("__qv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
+    topK(scored, k)
   }
 
   /** [[pqTopK]] with build included — the one-shot shape the gate uses. */

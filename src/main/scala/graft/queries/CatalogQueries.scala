@@ -13,15 +13,18 @@ import graft.Graft
   */
 object CatalogQueries {
 
+  // Gate fixtures are built once per warehouse and published one of two
+  // ways: files a gate writes itself go through QueryPack.fixtureDir
+  // (staged, then one rename), tables SQL writes at a registered path go
+  // through QueryPack.fixtureOnce (completion marker written last).
   // The warehouse path embeds a fingerprint of the source parquet tables
-  // (name:size:mtime of every *.parquet in the sf dir): the gate fixtures
-  // inside are built once behind exists()/marker checks and DERIVE from
-  // those tables, so when the driver regenerates testdata in place between
-  // rounds, a path keyed only on the dir name would serve the previous
-  // generation's fixtures against oracles reading the new parquet — a
-  // spurious gate failure. A new generation now lands in a fresh warehouse
-  // and every fixture rebuilds. (Stale generations are orphaned in /tmp;
-  // fixture scale makes that cheap.)
+  // (name:size:mtime of every *.parquet in the sf dir): the fixtures DERIVE
+  // from those tables, so when testdata is regenerated in place, a path
+  // keyed only on the dir name would serve the previous generation's
+  // fixtures against oracles reading the new parquet — a spurious gate
+  // failure. A new generation lands in a fresh warehouse and every fixture
+  // rebuilds. (Stale generations are orphaned in /tmp; fixture scale makes
+  // that cheap.)
   private val whFingerprints = scala.collection.concurrent.TrieMap.empty[String, String]
   private def wh(dir: String): String = {
     val fp = whFingerprints.getOrElseUpdate(dir, {
@@ -35,9 +38,74 @@ object CatalogQueries {
     "/tmp/graft-verify-wh-" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "-" + fp
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+  /** [[QueryPack.fixtureOnce]] for lake tables SQL builds under `lakeDir`:
+    * the marker is `<first table>.done` beside them, and a build without
+    * one starts by deleting every named table.
+    */
+  private def tableOnce(lakeDir: java.io.File, tables: String*)(build: => Unit): Unit =
+    QueryPack.fixtureOnce(new java.io.File(lakeDir, s"${tables.head}.done"),
+      clear = tables.map(new java.io.File(lakeDir, _)))(build)
+
+  /** A PDF whose one object is a `w`x`h` image XObject; `dict` holds its
+    * color-space, depth and filter entries in print order.
+    */
+  private def imagePdf(w: Int, h: Int, dict: String, image: Array[Byte]): Array[Byte] =
+    (s"%PDF-1.4\n5 0 obj << /Type /XObject /Subtype /Image /Width $w /Height $h " +
+      s"$dict /Length ${image.length} >>\nstream\n")
+      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ image ++
+    "\nendstream\nendobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"
+      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  private val DctRgb = "/ColorSpace /DeviceRGB /BitsPerComponent 8 /Filter /DCTDecode"
+
+  /** The 72x64 page of the planted-pair scan gates: a 9x8 grid of 8x8
+    * solid blocks, one value per block from `level` over the two-round
+    * cell hash of (key, bx, by); a twin applies `edit` to block (4, 3).
+    * dHash's 9x8 sample grid reads exactly one pixel per block, and solid
+    * blocks aligned to JPEG's DCT grid survive compression as their DC
+    * term.
+    */
+  private def scanBlocks(k: Long, twin: Boolean)(level: Long => Int, edit: Int => Int): Array[Int] = {
+    val px = new Array[Int](72 * 64)
+    for (by <- 0 until 8; bx <- 0 until 9) {
+      var v = level(QueryPack.cellHash(k, bx, by, rounds = 2))
+      if (twin && bx == 4 && by == 3) v = edit(v)
+      for (y <- by * 8 until by * 8 + 8; x <- bx * 8 until bx * 8 + 8) px(y * 72 + x) = v
+    }
+    px
+  }
+
+  // 14 gray levels, 16 apart: adjacent blocks rarely tie, and a 16-level
+  // gap dwarfs JPEG ringing at the sampled pixel
+  private def grayBlocks(k: Long, twin: Boolean): Array[Int] =
+    scanBlocks(k, twin)(z => 16 + 16 * ((z >>> 40) % 14).toInt, v => ((v + 112) % 224) + 16)
+
+  /** Scan fixture `name`: one [[imagePdf]] per id of
+    * [[QueryPack.plantedPairs]] (region 2 twinned), its 72x64 page encoded
+    * by `image`.
+    */
+  private def plantedScanPdfs(s: SparkSession, dir: String, name: String, dict: String)(
+      image: (Long, Boolean) => Array[Byte]): java.io.File =
+    QueryPack.fixtureDir(new java.io.File(wh(dir), name)) { staging =>
+      QueryPack.plantedPairs(s, dir, twinRegion = 2)(image).foreach { case (id, page) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(staging.toString, f"$id%05d.pdf"),
+          imagePdf(72, 64, dict, page))
+      }
+    }
+
+  /** Perceptual image dedup over the pages of scan fixture `fixture`,
+    * registered as PDF datasource `src`: the (id_a, id_b) pairs.
+    */
+  private def scanDedup(s: SparkSession, src: String, fixture: java.io.File): DataFrame = {
+    Graft.sql(s,
+      s"REGISTER OR REPLACE PDF DATASOURCE $src OPTIONS (path '$fixture') NAMESPACE graft.datasource.un")
+    val media = s.sql(s"SELECT path, images FROM graft.datasource.un.$src.content")
+      .select(
+        regexp_extract(col("path"), "([0-9]+)\\.pdf$", 1).cast("long").as("id"),
+        explode(col("images")).as("bytes"))
+    graft.multimodal.Multimodal.imageNearDuplicates(media, "id", "bytes", maxDistance = 6)
+      .select(col("id_a"), col("id_b"))
+      .orderBy(col("id_a"))
   }
 
   /** Minimal ISO-BMFF file (ftyp + moov(mvhd v0 + trak(tkhd v0))) — the
@@ -113,8 +181,9 @@ object CatalogQueries {
       s"""REGISTER OR REPLACE JDBC DATASOURCE pdgate OPTIONS (
          |  url 'jdbc:derby:$dbDir/db;create=true', driver 'org.apache.derby.jdbc.EmbeddedDriver'
          |) NAMESPACE graft.datasource.jdbc""".stripMargin)
-    val loaded = new java.io.File(wh(dir), "derbydb/.loaded")
-    if (!loaded.exists()) {
+    // no `clear`: the embedded driver keeps the database open, so it cannot
+    // be removed in-process
+    QueryPack.fixtureOnce(new java.io.File(dbDir, ".loaded")) {
       // VARCHAR, not STRING: Derby maps STRING to CLOB, which it refuses
       // to GROUP BY — VARCHAR keeps the aggregate pushdown-safe
       s.sql("CREATE TABLE graft.datasource.jdbc.pdgate.APP.gatecust " +
@@ -125,7 +194,6 @@ object CatalogQueries {
       s.sql("INSERT INTO graft.datasource.jdbc.pdgate.APP.gatecust " +
         "SELECT CAST(c_custkey AS BIGINT), CAST(c_nationkey AS BIGINT), c_mktsegment, c_acctbal " +
         "FROM __gate_cust_src")
-      java.nio.file.Files.createFile(loaded.toPath): Unit
     }
     "graft.datasource.jdbc.pdgate.APP.gatecust"
   }
@@ -142,10 +210,7 @@ object CatalogQueries {
     import graft.sources.lake.LakeWrite
     import org.apache.hadoop.fs.Path
     val lakeDir = new java.io.File(wh(dir), "lake")
-    val tableDir = new java.io.File(lakeDir, "nation_delta")
-    if (!tableDir.exists()) {
-      val staging = new java.io.File(lakeDir, s"nation_delta.tmp${System.nanoTime()}")
-      staging.mkdirs()
+    QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_delta")) { staging =>
       val conf = s.sparkContext.hadoopConfiguration
       val root = new Path(staging.toString)
       val nation = QueryPack.t(s, dir, "nation")
@@ -170,7 +235,6 @@ object CatalogQueries {
         Seq(LakeWrite.deltaCommitInfo(1700000100000L),
           LakeWrite.deltaRemove("n_regionkey=2/part-00002.parquet", 1700000100000L),
           LakeWrite.deltaAdd(rel1, size1, 1700000100000L, Map("n_regionkey" -> "2"))))
-      if (!staging.renameTo(tableDir)) deleteRecursively(staging)
     }
     Graft.sql(s,
       s"REGISTER OR REPLACE DELTA DATASOURCE deltasrc OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -188,59 +252,55 @@ object CatalogQueries {
     import graft.sources.lake.LakeWrite
     import graft.sources.lake.LakeWrite.{IcebergSnapshot, ManifestEntry, ManifestFile}
     import org.apache.hadoop.fs.Path
-    val lakeDir = new java.io.File(wh(dir), "lake")
-    val tableDir = new java.io.File(lakeDir, "nation_ice_mor")
-    if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_ice_mor.tmp${System.nanoTime()}")
-          new java.io.File(staging, "metadata").mkdirs()
-          val conf = s.sparkContext.hadoopConfiguration
-          val root = new Path(staging.toString)
-          val nation = QueryPack.t(s, dir, "nation")
-            .select("n_nationkey", "n_name", "n_regionkey")
-          def dataFile(rel: String, d: org.apache.spark.sql.DataFrame, snapId: Long): ManifestEntry = {
-            val sorted = d.coalesce(1).sortWithinPartitions("n_nationkey")
-            val size = LakeWrite.writeOneParquetFile(sorted, new Path(root, rel))
-            ManifestEntry(1, rel, d.count(), size, snapId)
-          }
-          val a = dataFile("data/a.parquet", nation.where(col("n_nationkey") < 12), 2001L)
-          val b = dataFile("data/b.parquet", nation.where(col("n_nationkey") >= 12), 2001L)
-          val c = dataFile("data/c.parquet", nation.where(col("n_nationkey").isin(1, 12)), 2003L)
-          // data-driven positions: the files are sorted by n_nationkey, so
-          // a key's position is its rank within the file
-          val aKeys = nation.where(col("n_nationkey") < 12)
-            .select("n_nationkey").orderBy("n_nationkey")
-            .collect().map(_.get(0).toString.toLong)
-          val delPositions: Seq[(String, Long)] =
-            aKeys.zipWithIndex.collect { case (k, i) if k % 2 == 1 => ("data/a.parquet", i.toLong) }
-              .toSeq ++ Seq(("data/b.parquet", 0L), ("data/c.parquet", 0L))
-          import s.implicits._
-          val dSize = LakeWrite.writeOneParquetFile(
-            delPositions.toDF("file_path", "pos").coalesce(1), new Path(root, "data/d1.parquet"))
-          val m1len = LakeWrite.icebergWriteManifest(new java.io.File(staging, "metadata/m1.avro"),
-            Seq(a, b))
-          val md1len = LakeWrite.icebergWriteManifest(new java.io.File(staging, "metadata/md1.avro"),
-            Seq(ManifestEntry(1, "data/d1.parquet", delPositions.size.toLong, dSize, 2002L,
-              content = 1)))
-          val m3len = LakeWrite.icebergWriteManifest(new java.io.File(staging, "metadata/m3.avro"),
-            Seq(c))
-          LakeWrite.icebergWriteManifestList(new java.io.File(staging, "metadata/ml1.avro"),
-            Seq("metadata/m1.avro" -> m1len), 2001L, 1L)
-          LakeWrite.icebergWriteManifestListEntries(new java.io.File(staging, "metadata/ml2.avro"),
-            Seq(ManifestFile("metadata/m1.avro", m1len, 0, 1L),
-              ManifestFile("metadata/md1.avro", md1len, 1, 2L)), 2002L)
-          LakeWrite.icebergWriteManifestListEntries(new java.io.File(staging, "metadata/ml3.avro"),
-            Seq(ManifestFile("metadata/m1.avro", m1len, 0, 1L),
-              ManifestFile("metadata/m3.avro", m3len, 0, 3L),
-              ManifestFile("metadata/md1.avro", md1len, 1, 2L)), 2003L)
-          LakeWrite.icebergWriteMetadata(conf, root, 3, nation.schema,
-            Seq(IcebergSnapshot(2001L, 1700000000000L, "metadata/ml1.avro", 1L),
-              IcebergSnapshot(2002L, 1700000100000L, "metadata/ml2.avro", 2L,
-                parentId = Some(2001L), operation = "delete"),
-              IcebergSnapshot(2003L, 1700000200000L, "metadata/ml3.avro", 3L,
-                parentId = Some(2002L), operation = "append")),
-            currentSnapshotId = 2003L,
-            refs = Map("main" -> (2003L, "branch"), "predelete" -> (2001L, "tag")))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
+    QueryPack.fixtureDir(new java.io.File(wh(dir), "lake/nation_ice_mor")) { staging =>
+      new java.io.File(staging, "metadata").mkdirs()
+      val conf = s.sparkContext.hadoopConfiguration
+      val root = new Path(staging.toString)
+      val nation = QueryPack.t(s, dir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+      def dataFile(rel: String, d: org.apache.spark.sql.DataFrame, snapId: Long): ManifestEntry = {
+        val sorted = d.coalesce(1).sortWithinPartitions("n_nationkey")
+        val size = LakeWrite.writeOneParquetFile(sorted, new Path(root, rel))
+        ManifestEntry(1, rel, d.count(), size, snapId)
+      }
+      val a = dataFile("data/a.parquet", nation.where(col("n_nationkey") < 12), 2001L)
+      val b = dataFile("data/b.parquet", nation.where(col("n_nationkey") >= 12), 2001L)
+      val c = dataFile("data/c.parquet", nation.where(col("n_nationkey").isin(1, 12)), 2003L)
+      // data-driven positions: the files are sorted by n_nationkey, so
+      // a key's position is its rank within the file
+      val aKeys = nation.where(col("n_nationkey") < 12)
+        .select("n_nationkey").orderBy("n_nationkey")
+        .collect().map(_.get(0).toString.toLong)
+      val delPositions: Seq[(String, Long)] =
+        aKeys.zipWithIndex.collect { case (k, i) if k % 2 == 1 => ("data/a.parquet", i.toLong) }
+          .toSeq ++ Seq(("data/b.parquet", 0L), ("data/c.parquet", 0L))
+      import s.implicits._
+      val dSize = LakeWrite.writeOneParquetFile(
+        delPositions.toDF("file_path", "pos").coalesce(1), new Path(root, "data/d1.parquet"))
+      val m1len = LakeWrite.icebergWriteManifest(new java.io.File(staging, "metadata/m1.avro"),
+        Seq(a, b))
+      val md1len = LakeWrite.icebergWriteManifest(new java.io.File(staging, "metadata/md1.avro"),
+        Seq(ManifestEntry(1, "data/d1.parquet", delPositions.size.toLong, dSize, 2002L,
+          content = 1)))
+      val m3len = LakeWrite.icebergWriteManifest(new java.io.File(staging, "metadata/m3.avro"),
+        Seq(c))
+      LakeWrite.icebergWriteManifestList(new java.io.File(staging, "metadata/ml1.avro"),
+        Seq("metadata/m1.avro" -> m1len), 2001L, 1L)
+      LakeWrite.icebergWriteManifestListEntries(new java.io.File(staging, "metadata/ml2.avro"),
+        Seq(ManifestFile("metadata/m1.avro", m1len, 0, 1L),
+          ManifestFile("metadata/md1.avro", md1len, 1, 2L)), 2002L)
+      LakeWrite.icebergWriteManifestListEntries(new java.io.File(staging, "metadata/ml3.avro"),
+        Seq(ManifestFile("metadata/m1.avro", m1len, 0, 1L),
+          ManifestFile("metadata/m3.avro", m3len, 0, 3L),
+          ManifestFile("metadata/md1.avro", md1len, 1, 2L)), 2003L)
+      LakeWrite.icebergWriteMetadata(conf, root, 3, nation.schema,
+        Seq(IcebergSnapshot(2001L, 1700000000000L, "metadata/ml1.avro", 1L),
+          IcebergSnapshot(2002L, 1700000100000L, "metadata/ml2.avro", 2L,
+            parentId = Some(2001L), operation = "delete"),
+          IcebergSnapshot(2003L, 1700000200000L, "metadata/ml3.avro", 3L,
+            parentId = Some(2002L), operation = "append")),
+        currentSnapshotId = 2003L,
+        refs = Map("main" -> (2003L, "branch"), "predelete" -> (2001L, "tag")))
     }
   }
 
@@ -328,13 +388,11 @@ object CatalogQueries {
     QuerySpec("unstructured_text_scan",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "textfiles")
-        if (!fixture.exists()) {
-          fixture.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "textfiles")) { staging =>
           QueryPack.t(s, dir, "documents").select(col("doc_id"), col("text"))
             .collect().foreach { r =>
               java.nio.file.Files.write(
-                java.nio.file.Paths.get(fixture.toString, f"${r.getLong(0)}%05d.txt"),
+                java.nio.file.Paths.get(staging.toString, f"${r.getLong(0)}%05d.txt"),
                 r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
             }
         }
@@ -357,12 +415,7 @@ object CatalogQueries {
     QuerySpec("unstructured_audio_scan",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "audiofiles")
-        if (!fixture.exists()) {
-          // write-to-temp + atomic rename: a run crashing mid-loop must not
-          // leave a half-built dir that later runs mistake for the fixture
-          val staging = new java.io.File(wh(dir), s"audiofiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "audiofiles")) { staging =>
           QueryPack.t(s, dir, "nation").select(col("n_nationkey")).collect().foreach { r =>
             val key = r.getInt(0)
             val rate = 8000 + key * 441
@@ -375,10 +428,6 @@ object CatalogQueries {
             bb.put("data".getBytes).putInt(dataBytes).put(new Array[Byte](dataBytes))
             java.nio.file.Files.write(
               java.nio.file.Paths.get(staging.toString, f"$key%05d.wav"), bb.array())
-          }
-          if (!staging.renameTo(fixture)) { // concurrent run won the rename
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
           }
         }
         Graft.sql(s,
@@ -402,20 +451,13 @@ object CatalogQueries {
     QuerySpec("unstructured_image_scan",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "imagefiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"imagefiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "imagefiles")) { staging =>
           QueryPack.t(s, dir, "nation").select(col("n_nationkey")).collect().foreach { r =>
             val key = r.getInt(0)
             val img = new java.awt.image.BufferedImage(
               16 + key * 3, 9 + key * 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
             javax.imageio.ImageIO.write(img, "png",
               new java.io.File(staging, f"$key%05d.png"))
-          }
-          if (!staging.renameTo(fixture)) { // concurrent run won the rename
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
           }
         }
         Graft.sql(s,
@@ -438,19 +480,12 @@ object CatalogQueries {
     QuerySpec("unstructured_video_scan",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "videofiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"videofiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "videofiles")) { staging =>
           QueryPack.t(s, dir, "nation").select(col("n_nationkey")).collect().foreach { r =>
             val key = r.getInt(0)
             java.nio.file.Files.write(
               java.nio.file.Paths.get(staging.toString, f"$key%05d.mp4"),
               minimalMp4(1000, 3000 + key * 500, 320 + key * 16, 180 + key * 9))
-          }
-          if (!staging.renameTo(fixture)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
           }
         }
         Graft.sql(s,
@@ -476,10 +511,7 @@ object CatalogQueries {
     QuerySpec("unstructured_pdf_scan",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "pdffiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"pdffiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "pdffiles")) { staging =>
           QueryPack.t(s, dir, "nation").select(col("n_nationkey")).collect().foreach { r =>
             val key = r.getInt(0)
             val cs = s"BT (pdf doc $key ${"x" * (10 + key)}) Tj ET"
@@ -500,10 +532,6 @@ object CatalogQueries {
                 .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
             java.nio.file.Files.write(
               java.nio.file.Paths.get(staging.toString, f"$key%05d.pdf"), bytes)
-          }
-          if (!staging.renameTo(fixture)) { // concurrent run won the rename
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
           }
         }
         Graft.sql(s,
@@ -527,10 +555,7 @@ object CatalogQueries {
     QuerySpec("unstructured_pdf_imagedims",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "pdfimgfiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"pdfimgfiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "pdfimgfiles")) { staging =>
           QueryPack.t(s, dir, "nation").select(col("n_nationkey")).collect().foreach { r =>
             val key = r.getInt(0)
             val (w, h) = (16 + key, 9 + key)
@@ -538,20 +563,8 @@ object CatalogQueries {
               java.awt.image.BufferedImage.TYPE_INT_RGB)
             val jb = new java.io.ByteArrayOutputStream()
             javax.imageio.ImageIO.write(img, "jpg", jb)
-            val jpeg = jb.toByteArray
-            val bytes =
-              (s"%PDF-1.4\n5 0 obj << /Type /XObject /Subtype /Image /Width $w " +
-                s"/Height $h /ColorSpace /DeviceRGB /BitsPerComponent 8 " +
-                s"/Filter /DCTDecode /Length ${jpeg.length} >>\nstream\n")
-                .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ jpeg ++
-              "\nendstream\nendobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"
-                .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(staging.toString, f"$key%05d.pdf"), bytes)
-          }
-          if (!staging.renameTo(fixture)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
+            java.nio.file.Files.write(java.nio.file.Paths.get(staging.toString, f"$key%05d.pdf"),
+              imagePdf(w, h, DctRgb, jb.toByteArray))
           }
         }
         Graft.sql(s,
@@ -582,66 +595,16 @@ object CatalogQueries {
     QuerySpec("multimodal_pdf_image_dedup",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "pdfdedupfiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"pdfdedupfiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
-          // 9x8 grid of 8x8 solid blocks (72x64 px): dHash's 9x8 sample
-          // grid reads exactly one pixel per block, and solid JPEG-aligned
-          // blocks survive compression as their DC term
-          def blockJpeg(k: Long, perturb: Boolean): Array[Byte] = {
-            val img = new java.awt.image.BufferedImage(72, 64,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            for (by <- 0 until 8; bx <- 0 until 9) {
-              var z = k * 0x9E3779B97F4A7C15L + bx * 0xBF58476D1CE4E5B9L +
-                by * 0x94D049BB133111EBL
-              z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-              z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-              // 14 gray levels, 16 apart: adjacent blocks rarely tie, and a
-              // 16-level gap dwarfs JPEG ringing at the sampled pixel
-              var v = 16 + 16 * ((z >>> 40) % 14).toInt
-              if (perturb && bx == 4 && by == 3) v = ((v + 112) % 224) + 16
-              for (y <- by * 8 until by * 8 + 8; x <- bx * 8 until bx * 8 + 8)
-                img.setRGB(x, y, (v << 16) | (v << 8) | v)
-            }
-            val out = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "jpg", out)
-            out.toByteArray
-          }
-          def pdfBytes(jpeg: Array[Byte]): Array[Byte] =
-            ("%PDF-1.4\n5 0 obj << /Type /XObject /Subtype /Image /Width 72 " +
-              s"/Height 64 /ColorSpace /DeviceRGB /BitsPerComponent 8 " +
-              s"/Filter /DCTDecode /Length ${jpeg.length} >>\nstream\n")
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ jpeg ++
-            "\nendstream\nendobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          QueryPack.t(s, dir, "nation").select(col("n_nationkey"), col("n_regionkey"))
-            .collect().foreach { r =>
-              val (k, reg) = (r.get(0).toString.toLong, r.get(1).toString.toLong)
-              java.nio.file.Files.write(java.nio.file.Paths.get(
-                staging.toString, f"$k%05d.pdf"), pdfBytes(blockJpeg(k, perturb = false)))
-              if (reg == 2)
-                java.nio.file.Files.write(java.nio.file.Paths.get(
-                  staging.toString, f"${k + 100}%05d.pdf"), pdfBytes(blockJpeg(k, perturb = true)))
-            }
-          if (!staging.renameTo(fixture)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
-          }
-        }
-        Graft.sql(s,
-          s"REGISTER OR REPLACE PDF DATASOURCE scansrc OPTIONS (path '$fixture') NAMESPACE graft.datasource.un")
-        val media = s.sql("SELECT path, images FROM graft.datasource.un.scansrc.content")
-          .select(
-            regexp_extract(col("path"), "([0-9]+)\\.pdf$", 1).cast("long").as("id"),
-            explode(col("images")).as("bytes"))
-        graft.multimodal.Multimodal.imageNearDuplicates(media, "id", "bytes", maxDistance = 6)
-          .select(col("id_a"), col("id_b"))
-          .orderBy(col("id_a"))
+        scanDedup(s, "scansrc", plantedScanPdfs(s, dir, "pdfdedupfiles", DctRgb) { (k, twin) =>
+          val img = new java.awt.image.BufferedImage(72, 64,
+            java.awt.image.BufferedImage.TYPE_INT_RGB)
+          img.setRGB(0, 0, 72, 64, grayBlocks(k, twin).map(v => (v << 16) | (v << 8) | v), 0, 72)
+          val out = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(img, "jpg", out)
+          out.toByteArray
+        })
       },
-      Some("""SELECT CAST(n_nationkey AS BIGINT) AS id_a,
-          CAST(n_nationkey + 100 AS BIGINT) AS id_b
-        FROM nation WHERE n_regionkey = 2 ORDER BY id_a""")),
+      QueryPack.plantedPairsOracle(2)),
 
     // ---- JPX (JPEG2000) scanned pages feed perceptual dedup: each PDF
     // embeds a LOSSLESS gray JPX codestream (reversible 5/3 wavelet, so
@@ -652,59 +615,12 @@ object CatalogQueries {
     QuerySpec("multimodal_jpx_scan_dedup",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "jpxscanfiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"jpxscanfiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
-          def jpxBytes(k: Long, perturb: Boolean): Array[Byte] = {
-            val w = 72; val h = 64
-            val px = new Array[Int](w * h)
-            for (by <- 0 until 8; bx <- 0 until 9) {
-              var z = k * 0x9E3779B97F4A7C15L + bx * 0xBF58476D1CE4E5B9L +
-                by * 0x94D049BB133111EBL
-              z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-              z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-              var v = 16 + 16 * ((z >>> 40) % 14).toInt
-              if (perturb && bx == 4 && by == 3) v = ((v + 112) % 224) + 16
-              for (y <- by * 8 until by * 8 + 8; x <- bx * 8 until bx * 8 + 8)
-                px(y * w + x) = v
-            }
-            graft.sources.unstructured.JpxEncode.encode(Array(px), w, h, 8, 2)
-          }
-          def pdfBytes(jp: Array[Byte]): Array[Byte] =
-            ("%PDF-1.4\n5 0 obj << /Type /XObject /Subtype /Image /Width 72 " +
-              s"/Height 64 /BitsPerComponent 8 /ColorSpace /DeviceGray " +
-              s"/Filter /JPXDecode /Length ${jp.length} >>\nstream\n")
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ jp ++
-            "\nendstream\nendobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          QueryPack.t(s, dir, "nation").select(col("n_nationkey"), col("n_regionkey"))
-            .collect().foreach { r =>
-              val (k, reg) = (r.get(0).toString.toLong, r.get(1).toString.toLong)
-              java.nio.file.Files.write(java.nio.file.Paths.get(
-                staging.toString, f"$k%05d.pdf"), pdfBytes(jpxBytes(k, perturb = false)))
-              if (reg == 2)
-                java.nio.file.Files.write(java.nio.file.Paths.get(
-                  staging.toString, f"${k + 100}%05d.pdf"), pdfBytes(jpxBytes(k, perturb = true)))
-            }
-          if (!staging.renameTo(fixture)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
-          }
-        }
-        Graft.sql(s,
-          s"REGISTER OR REPLACE PDF DATASOURCE jpxsrc OPTIONS (path '$fixture') NAMESPACE graft.datasource.un")
-        val media = s.sql("SELECT path, images FROM graft.datasource.un.jpxsrc.content")
-          .select(
-            regexp_extract(col("path"), "([0-9]+)\\.pdf$", 1).cast("long").as("id"),
-            explode(col("images")).as("bytes"))
-        graft.multimodal.Multimodal.imageNearDuplicates(media, "id", "bytes", maxDistance = 6)
-          .select(col("id_a"), col("id_b"))
-          .orderBy(col("id_a"))
+        scanDedup(s, "jpxsrc", plantedScanPdfs(s, dir, "jpxscanfiles",
+            "/BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /JPXDecode") { (k, twin) =>
+          graft.sources.unstructured.JpxEncode.encode(Array(grayBlocks(k, twin)), 72, 64, 8, 2)
+        })
       },
-      Some("""SELECT CAST(n_nationkey AS BIGINT) AS id_a,
-          CAST(n_nationkey + 100 AS BIGINT) AS id_b
-        FROM nation WHERE n_regionkey = 2 ORDER BY id_a""")),
+      QueryPack.plantedPairsOracle(2)),
 
     // ---- JBIG2 scanned pages feed perceptual dedup: each PDF embeds an
     // MMR-coded generic-region JBIG2 image (the bilevel fax-scan shape) of
@@ -715,72 +631,26 @@ object CatalogQueries {
     QuerySpec("multimodal_jbig2_scan_dedup",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "jbig2scanfiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"jbig2scanfiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
-          def be32(v: Long): Array[Byte] = Array(
-            ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-            ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-          def segment(num: Long, segType: Int, data: Array[Byte]): Array[Byte] =
-            be32(num) ++ Array(segType.toByte, 0.toByte, 1.toByte) ++
-              be32(data.length.toLong) ++ data
-          def jbig2Bytes(k: Long, perturb: Boolean): Array[Byte] = {
-            val w = 72; val h = 64
-            val bits = new Array[Byte](w * h)
-            for (by <- 0 until 8; bx <- 0 until 9) {
-              var z = k * 0x9E3779B97F4A7C15L + bx * 0xBF58476D1CE4E5B9L +
-                by * 0x94D049BB133111EBL
-              z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-              z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-              var black = ((z >>> 40) & 1) == 1
-              if (perturb && bx == 4 && by == 3) black = !black
-              if (black)
-                for (y <- by * 8 until by * 8 + 8; x <- bx * 8 until bx * 8 + 8)
-                  bits(y * w + x) = 1
-            }
-            val gray = bits.map(b => if (b != 0) 0x00.toByte else 0xff.toByte)
-            val coded = graft.sources.unstructured.CcittDecode.encodeG4(gray, w, h)
-            val region = be32(w) ++ be32(h) ++ be32(0) ++ be32(0) ++
-              Array(0.toByte) ++ Array(1.toByte /* MMR */) ++ coded
-            val pageInfo = be32(w) ++ be32(h) ++ be32(0) ++ be32(0) ++
-              Array(0.toByte, 0.toByte, 0.toByte)
-            segment(0, 48, pageInfo) ++ segment(1, 38, region)
-          }
-          def pdfBytes(jb: Array[Byte]): Array[Byte] =
-            ("%PDF-1.4\n5 0 obj << /Type /XObject /Subtype /Image /Width 72 " +
-              s"/Height 64 /BitsPerComponent 1 /ColorSpace /DeviceGray " +
-              s"/Filter /JBIG2Decode /Length ${jb.length} >>\nstream\n")
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ jb ++
-            "\nendstream\nendobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          QueryPack.t(s, dir, "nation").select(col("n_nationkey"), col("n_regionkey"))
-            .collect().foreach { r =>
-              val (k, reg) = (r.get(0).toString.toLong, r.get(1).toString.toLong)
-              java.nio.file.Files.write(java.nio.file.Paths.get(
-                staging.toString, f"$k%05d.pdf"), pdfBytes(jbig2Bytes(k, perturb = false)))
-              if (reg == 2)
-                java.nio.file.Files.write(java.nio.file.Paths.get(
-                  staging.toString, f"${k + 100}%05d.pdf"), pdfBytes(jbig2Bytes(k, perturb = true)))
-            }
-          if (!staging.renameTo(fixture)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
-          }
-        }
-        Graft.sql(s,
-          s"REGISTER OR REPLACE PDF DATASOURCE jb2src OPTIONS (path '$fixture') NAMESPACE graft.datasource.un")
-        val media = s.sql("SELECT path, images FROM graft.datasource.un.jb2src.content")
-          .select(
-            regexp_extract(col("path"), "([0-9]+)\\.pdf$", 1).cast("long").as("id"),
-            explode(col("images")).as("bytes"))
-        graft.multimodal.Multimodal.imageNearDuplicates(media, "id", "bytes", maxDistance = 6)
-          .select(col("id_a"), col("id_b"))
-          .orderBy(col("id_a"))
+        def be32(v: Long): Array[Byte] = Array(
+          ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
+          ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
+        def segment(num: Long, segType: Int, data: Array[Byte]): Array[Byte] =
+          be32(num) ++ Array(segType.toByte, 0.toByte, 1.toByte) ++
+            be32(data.length.toLong) ++ data
+        scanDedup(s, "jb2src", plantedScanPdfs(s, dir, "jbig2scanfiles",
+            "/BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /JBIG2Decode") { (k, twin) =>
+          // one bit per block (1 = black); the twin flips its edited block
+          val bits = scanBlocks(k, twin)(z => ((z >>> 40) & 1).toInt, 1 - _)
+          val coded = graft.sources.unstructured.CcittDecode.encodeG4(
+            bits.map(b => if (b != 0) 0x00.toByte else 0xff.toByte), 72, 64)
+          val region = be32(72) ++ be32(64) ++ be32(0) ++ be32(0) ++
+            Array(0.toByte) ++ Array(1.toByte /* MMR */) ++ coded
+          val pageInfo = be32(72) ++ be32(64) ++ be32(0) ++ be32(0) ++
+            Array(0.toByte, 0.toByte, 0.toByte)
+          segment(0, 48, pageInfo) ++ segment(1, 38, region)
+        })
       },
-      Some("""SELECT CAST(n_nationkey AS BIGINT) AS id_a,
-          CAST(n_nationkey + 100 AS BIGINT) AS id_b
-        FROM nation WHERE n_regionkey = 2 ORDER BY id_a""")),
+      QueryPack.plantedPairsOracle(2)),
 
     // ---- unstructured WRITE sink roundtrip: SQL INSERT through the
     // FileFormat sink (one file per row, distributed write), then read BOTH
@@ -792,20 +662,16 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val sink = new java.io.File(wh(dir), "writesink")
-        // completion marker OUTSIDE the dir: a crash mid-INSERT must not
-        // leave a half-written dir that later runs mistake for the fixture
-        val done = new java.io.File(wh(dir), "writesink.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE TEXT DATASOURCE writesink OPTIONS (path '$sink') NAMESPACE graft.datasource.un")
-        if (!done.exists()) {
-          Option(sink.listFiles()).foreach(_.foreach(_.delete()))
+        // marker OUTSIDE the dir the INSERT fills
+        QueryPack.fixtureOnce(new java.io.File(wh(dir), "writesink.done"), clear = Seq(sink)) {
           sink.mkdirs()
           QueryPack.t(s, dir, "documents")
             .select(format_string("%05d.txt", col("doc_id")).as("path"),
               col("text").as("textcontent"))
             .createOrReplaceTempView("writesink_src")
           s.sql("INSERT INTO graft.datasource.un.writesink.content SELECT path, textcontent FROM writesink_src")
-          done.createNewFile()
         }
         val meta = s.sql("SELECT path, sizeinbytes FROM graft.datasource.un.writesink.writesink")
         val content = s.sql("SELECT path, textcontent FROM graft.datasource.un.writesink.content")
@@ -827,19 +693,12 @@ object CatalogQueries {
     QuerySpec("unstructured_tag_scan",
       (s, dir) => {
         setup(s, dir)
-        val fixture = new java.io.File(wh(dir), "tagfiles")
-        if (!fixture.exists()) {
-          val staging = new java.io.File(wh(dir), s"tagfiles.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fixture = QueryPack.fixtureDir(new java.io.File(wh(dir), "tagfiles")) { staging =>
           QueryPack.t(s, dir, "nation").select(col("n_nationkey")).collect().foreach { r =>
             val key = r.getInt(0)
             java.nio.file.Files.write(
               java.nio.file.Paths.get(staging.toString, f"$key%05d.txt"),
               s"tagged doc $key".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-          if (!staging.renameTo(fixture)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
           }
         }
         Graft.sql(s,
@@ -869,10 +728,10 @@ object CatalogQueries {
     QuerySpec("src_csv_scan",
       (s, dir) => {
         setup(s, dir)
-        val fmtDir = new java.io.File(wh(dir), "fmt/csvdir")
-        if (!fmtDir.exists())
+        val fmtDir = QueryPack.fixtureDir(new java.io.File(wh(dir), "fmt/csvdir")) { staging =>
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-            .write.mode("overwrite").option("header", "true").csv(s"$fmtDir/nation")
+            .write.option("header", "true").csv(s"$staging/nation")
+        }
         Graft.sql(s,
           s"REGISTER OR REPLACE CSV DATASOURCE csvsrc OPTIONS (path '${fmtDir.getPath}', header 'true', inferSchema 'true') NAMESPACE graft.datasource.fmt")
         s.sql(
@@ -886,10 +745,10 @@ object CatalogQueries {
     QuerySpec("src_json_scan",
       (s, dir) => {
         setup(s, dir)
-        val fmtDir = new java.io.File(wh(dir), "fmt/jsondir")
-        if (!fmtDir.exists())
+        val fmtDir = QueryPack.fixtureDir(new java.io.File(wh(dir), "fmt/jsondir")) { staging =>
           QueryPack.t(s, dir, "region").select("r_regionkey", "r_name")
-            .write.mode("overwrite").json(s"$fmtDir/region")
+            .write.json(s"$staging/region")
+        }
         Graft.sql(s,
           s"REGISTER OR REPLACE JSON DATASOURCE jsonsrc OPTIONS (path '${fmtDir.getPath}') NAMESPACE graft.datasource.fmt")
         s.sql(
@@ -906,10 +765,10 @@ object CatalogQueries {
     QuerySpec("src_orc_scan",
       (s, dir) => {
         setup(s, dir)
-        val fmtDir = new java.io.File(wh(dir), "fmt/orcdir")
-        if (!fmtDir.exists())
+        val fmtDir = QueryPack.fixtureDir(new java.io.File(wh(dir), "fmt/orcdir")) { staging =>
           QueryPack.t(s, dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-            .write.mode("overwrite").orc(s"$fmtDir/part")
+            .write.orc(s"$staging/part")
+        }
         Graft.sql(s,
           s"REGISTER OR REPLACE ORC DATASOURCE orcsrc OPTIONS (path '${fmtDir.getPath}') NAMESPACE graft.datasource.fmt")
         s.sql(
@@ -948,10 +807,7 @@ object CatalogQueries {
     QuerySpec("src_avro_scan",
       (s, dir) => {
         setup(s, dir)
-        val fmtDir = new java.io.File(wh(dir), "fmt/avrodir")
-        if (!fmtDir.exists()) {
-          val staging = new java.io.File(wh(dir), s"fmt/avrodir.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        val fmtDir = QueryPack.fixtureDir(new java.io.File(wh(dir), "fmt/avrodir")) { staging =>
           val df = QueryPack.t(s, dir, "nation").select(
             col("n_nationkey"), col("n_name"),
             col("n_regionkey").cast("long").as("key_long"),
@@ -963,10 +819,6 @@ object CatalogQueries {
             (col("n_nationkey") / 7.0).as("key_ratio"))
           graft.sources.lake.AvroLite.writeDataFrame(
             df.orderBy("n_nationkey"), new java.io.File(staging, "nation.avro"))
-          if (!staging.renameTo(fmtDir)) {
-            Option(staging.listFiles()).foreach(_.foreach(_.delete()))
-            staging.delete()
-          }
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE AVRO DATASOURCE avrosrc OPTIONS (path '${fmtDir.getPath}') NAMESPACE graft.datasource.fmt")
@@ -1020,9 +872,7 @@ object CatalogQueries {
         import graft.sources.lake.LakeWrite.{IcebergSnapshot, ManifestEntry}
         import org.apache.hadoop.fs.Path
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_ice")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_ice.tmp${System.nanoTime()}")
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_ice")) { staging =>
           new java.io.File(staging, "metadata").mkdirs()
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
@@ -1055,7 +905,6 @@ object CatalogQueries {
               IcebergSnapshot(1002L, 1700000100000L, "metadata/ml2.avro", 2L)),
             currentSnapshotId = 1002L,
             refs = Map("main" -> (1002L, "branch"), "before" -> (1001L, "tag")))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE icesrc OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -1135,9 +984,7 @@ object CatalogQueries {
         import graft.sources.lake.LakeWrite.{IcebergSnapshot, ManifestEntry, ManifestFile}
         import org.apache.hadoop.fs.Path
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_ice_eq")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_ice_eq.tmp${System.nanoTime()}")
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_ice_eq")) { staging =>
           new java.io.File(staging, "metadata").mkdirs()
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
@@ -1184,7 +1031,6 @@ object CatalogQueries {
               IcebergSnapshot(4002L, 1700000100000L, "metadata/ml2.avro", 2L),
               IcebergSnapshot(4003L, 1700000200000L, "metadata/ml3.avro", 3L)),
             currentSnapshotId = 4003L)
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE iceeq OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -1209,10 +1055,7 @@ object CatalogQueries {
         import graft.sources.lake.{LakeWrite, RoaringDv}
         import org.apache.hadoop.fs.Path
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_dv")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_dv.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_dv")) { staging =>
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
           val nation = QueryPack.t(s, dir, "nation")
@@ -1246,7 +1089,6 @@ object CatalogQueries {
                 "u", RoaringDv.encodeUuid(uuid), Some(off1), sz1, oddPos.size.toLong),
               LakeWrite.deltaAddDv("r3.parquet", sizes(3), 1700000100000L, Map.empty,
                 "i", RoaringDv.base85Encode(padded), None, bmp3.length, 1L)))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dvsrc OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -1275,10 +1117,7 @@ object CatalogQueries {
         import org.apache.hadoop.fs.Path
         import org.apache.spark.sql.types._
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_cmap")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_cmap.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_cmap")) { staging =>
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
           val nation = QueryPack.t(s, dir, "nation")
@@ -1312,7 +1151,6 @@ object CatalogQueries {
             Seq(LakeWrite.deltaCommitInfo(1700000100000L),
               LakeWrite.deltaMetaData("nation-cmap", logical("n_label"),
                 Seq("n_regionkey"), cmapCfg)))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE cmapsrc OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -1332,12 +1170,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_w")
-        val done = new java.io.File(lakeDir, "nation_w.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dwrite OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir) // crashed half-build
+        tableOnce(lakeDir, "nation_w") {
           s.sql("CREATE TABLE graft.datasource.lakew.dwrite.nation_w " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) PARTITIONED BY (n_regionkey)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1348,7 +1183,6 @@ object CatalogQueries {
           s.sql("INSERT INTO graft.datasource.lakew.dwrite.nation_w " +
             "SELECT CAST(n_nationkey AS INT), n_name, CAST(n_regionkey AS INT) " +
             "FROM __nation_w_src WHERE n_nationkey >= 15")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1367,12 +1201,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_iw")
-        val done = new java.io.File(lakeDir, "nation_iw.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE iwrite OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_iw") {
           s.sql("CREATE TABLE graft.datasource.lakew.iwrite.nation_iw " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) PARTITIONED BY (n_regionkey)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1383,7 +1214,6 @@ object CatalogQueries {
           s.sql("INSERT OVERWRITE graft.datasource.lakew.iwrite.nation_iw " +
             "SELECT CAST(n_nationkey AS INT), n_name, CAST(n_regionkey AS INT) " +
             "FROM __nation_iw_src WHERE n_nationkey < 10")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1403,12 +1233,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_dml")
-        val done = new java.io.File(lakeDir, "nation_dml.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE ddml OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir) // crashed half-build
+        tableOnce(lakeDir, "nation_dml") {
           s.sql("CREATE TABLE graft.datasource.lakew.ddml.nation_dml " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) PARTITIONED BY (n_regionkey)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1429,7 +1256,6 @@ object CatalogQueries {
               |WHEN MATCHED THEN UPDATE SET n_name = s.nm
               |WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name, n_regionkey)
               |  VALUES (s.k, s.nm, 0)""".stripMargin)
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1455,12 +1281,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_idml")
-        val done = new java.io.File(lakeDir, "nation_idml.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE idml OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_idml") {
           s.sql("CREATE TABLE graft.datasource.lakew.idml.nation_idml " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) PARTITIONED BY (n_regionkey)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1481,7 +1304,6 @@ object CatalogQueries {
               |WHEN MATCHED THEN UPDATE SET n_name = s.nm
               |WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name, n_regionkey)
               |  VALUES (s.k, s.nm, 0)""".stripMargin)
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1513,12 +1335,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_ievo")
-        val done = new java.io.File(lakeDir, "nation_ievo.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE ievo OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_ievo") {
           s.sql("CREATE TABLE graft.datasource.lakew.ievo.nation_ievo " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1533,7 +1352,6 @@ object CatalogQueries {
           s.sql("INSERT INTO graft.datasource.lakew.ievo.nation_ievo " +
             "SELECT CAST(n_nationkey AS INT), CAST(n_regionkey AS INT) AS region_id, n_name " +
             "FROM __nation_ievo_src WHERE n_nationkey >= 12")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, region_id, n_name
@@ -1558,9 +1376,7 @@ object CatalogQueries {
         import org.apache.hadoop.fs.Path
         import org.json4s.{JObject, JString, JInt}
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_ice_day")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_ice_day.tmp${System.nanoTime()}")
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_ice_day")) { staging =>
           new java.io.File(staging, "metadata").mkdirs()
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
@@ -1591,7 +1407,6 @@ object CatalogQueries {
             specFields = Seq(JObject("name" -> JString("d_day"),
               "transform" -> JString("day"), "source-id" -> JInt(3),
               "field-id" -> JInt(1000))))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE iceday OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -1613,12 +1428,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_opt")
-        val done = new java.io.File(lakeDir, "nation_opt.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dopt OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_opt") {
           s.sql("CREATE TABLE graft.datasource.lakew.dopt.nation_opt " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) PARTITIONED BY (n_regionkey)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1632,7 +1444,6 @@ object CatalogQueries {
           val res = Graft.sql(s, "OPTIMIZE LAKE TABLE graft.datasource.lakew.dopt.nation_opt")
             .collect()
           require(res.head.getLong(0) > 0, "OPTIMIZE should compact the insert files")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1652,12 +1463,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_sync")
-        val done = new java.io.File(lakeDir, "nation_sync.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dsync OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_sync") {
           s.sql("CREATE TABLE graft.datasource.lakew.dsync.nation_sync " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) PARTITIONED BY (n_regionkey)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1677,7 +1485,6 @@ object CatalogQueries {
               |WHEN NOT MATCHED BY SOURCE AND t.n_regionkey = 4 THEN
               |  UPDATE SET n_name = 'TOMBSTONE'
               |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1712,12 +1519,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_vac")
-        val done = new java.io.File(lakeDir, "nation_vac.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dvac OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_vac") {
           s.sql("CREATE TABLE graft.datasource.lakew.dvac.nation_vac " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1732,7 +1536,6 @@ object CatalogQueries {
             "VACUUM LAKE TABLE graft.datasource.lakew.dvac.nation_vac RETAIN 1 VERSIONS")
             .collect()
           require(res.head.getLong(0) > 0, "vacuum should delete the overwritten files")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -1793,13 +1596,10 @@ object CatalogQueries {
         setup(s, dir)
         val custFqn = ensureJdbcCustomer(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "cust_mirror")
-        val done = new java.io.File(lakeDir, "cust_mirror.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE fmrg OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
         val fqn = "graft.datasource.lakew.fmrg.cust_mirror"
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "cust_mirror") {
           s.sql(s"CREATE TABLE $fqn (c_custkey BIGINT, c_nationkey BIGINT, " +
             "c_mktsegment STRING, c_acctbal DOUBLE)")
           // seed from the warehouse parquet (Derby cannot evaluate a pushed
@@ -1817,7 +1617,6 @@ object CatalogQueries {
                |WHEN MATCHED THEN UPDATE SET c_acctbal = s.c_acctbal
                |WHEN NOT MATCHED THEN INSERT (c_custkey, c_nationkey, c_mktsegment, c_acctbal)
                |  VALUES (s.c_custkey, s.c_nationkey, s.c_mktsegment, s.c_acctbal)""".stripMargin)
-          done.createNewFile(): Unit
         }
         s.sql(s"SELECT c_custkey, c_nationkey, c_mktsegment, c_acctbal FROM $fqn " +
           "ORDER BY c_custkey")
@@ -1966,10 +1765,7 @@ object CatalogQueries {
         import graft.sources.lake.LakeWrite
         import org.apache.hadoop.fs.Path
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_cdf")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_cdf.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_cdf")) { staging =>
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
           val nation = QueryPack.t(s, dir, "nation")
@@ -2008,7 +1804,6 @@ object CatalogQueries {
           LakeWrite.deltaCommit(conf, root, 2,
             Seq(LakeWrite.deltaCommitInfo(1700000200000L),
               LakeWrite.deltaRemove("r4.parquet", 1700000200000L)))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE cdfsrc OPTIONS (path '${lakeDir.getPath}', readChangeFeed 'true') NAMESPACE graft.datasource.lake")
@@ -2040,12 +1835,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_cdfw")
-        val done = new java.io.File(lakeDir, "nation_cdfw.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dcdfw OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_cdfw") {
           s.sql("CREATE TABLE graft.datasource.lakew.dcdfw.nation_cdfw " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) " +
             "TBLPROPERTIES ('delta.enableChangeDataFeed' = 'true')")
@@ -2058,7 +1850,6 @@ object CatalogQueries {
             "SET n_name = upper(n_name) WHERE n_regionkey = 2")
           s.sql("DELETE FROM graft.datasource.lakew.dcdfw.nation_cdfw " +
             "WHERE n_regionkey = 4")
-          done.createNewFile(): Unit
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dcdfr OPTIONS (path '${lakeDir.getPath}', readChangeFeed 'true', endingVersion '3') NAMESPACE graft.datasource.lakew")
@@ -2091,12 +1882,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_alter")
-        val done = new java.io.File(lakeDir, "nation_alter.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dalter OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_alter") {
           s.sql("CREATE TABLE graft.datasource.lakew.dalter.nation_alter " +
             "(n_nationkey INT, n_name STRING) " +
             "TBLPROPERTIES ('delta.columnMapping.mode' = 'name')")
@@ -2112,7 +1900,6 @@ object CatalogQueries {
             "FROM __nation_alter_src WHERE n_nationkey >= 10")
           s.sql("ALTER TABLE graft.datasource.lakew.dalter.nation_alter " +
             "RENAME COLUMN n_name TO nation_name")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, nation_name, n_regionkey
@@ -2139,13 +1926,10 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_restore")
-        val done = new java.io.File(lakeDir, "nation_restore.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE rst OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
         val fqn = "graft.datasource.lakew.rst.nation_restore"
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_restore") {
           s.sql(s"CREATE TABLE $fqn (n_nationkey INT, n_name STRING, n_regionkey INT)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
             .createOrReplaceTempView("__nation_rst_src")
@@ -2155,7 +1939,6 @@ object CatalogQueries {
           s.sql(s"UPDATE $fqn SET n_name = 'gone' WHERE n_nationkey < 3")     // v3
           Graft.sql(s, s"RESTORE LAKE TABLE $fqn TO VERSION 1")               // v4
           s.sql(s"INSERT INTO $fqn VALUES (990, 'POSTRESTORE', 0)")           // v5
-          done.createNewFile(): Unit
         }
         s.sql(s"SELECT n_nationkey, n_name, n_regionkey FROM $fqn ORDER BY n_nationkey")
       },
@@ -2173,18 +1956,13 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val done = new java.io.File(lakeDir, "nation_rts.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE rts OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE rti OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
         val dFqn = "graft.datasource.lakew.rts.nation_rts"
         val iFqn = "graft.datasource.lakew.rti.nation_rti"
-        if (!done.exists()) {
-          Seq("nation_rts", "nation_rti").foreach { n =>
-            val td = new java.io.File(lakeDir, n)
-            if (td.exists()) deleteRecursively(td)
-          }
+        tableOnce(lakeDir, "nation_rts", "nation_rti") {
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
             .createOrReplaceTempView("__nation_rts_src")
           for (fqn <- Seq(dFqn, iFqn)) {
@@ -2199,7 +1977,6 @@ object CatalogQueries {
           s.sql(s"INSERT INTO $iFqn VALUES (991, 'UNDONE', 9)")          // snap B
           Graft.sql(s, s"RESTORE LAKE TABLE $dFqn TO TIMESTAMP '$mid'")
           Graft.sql(s, s"RESTORE LAKE TABLE $iFqn TO TIMESTAMP '$mid'")
-          done.createNewFile(): Unit
         }
         s.sql(s"""SELECT 'delta' AS src, n_nationkey, n_name, n_regionkey FROM $dFqn
           UNION ALL SELECT 'iceberg' AS src, n_nationkey, n_name, n_regionkey FROM $iFqn
@@ -2217,10 +1994,7 @@ object CatalogQueries {
         import graft.sources.lake.LakeWrite
         import org.apache.hadoop.fs.Path
         val lakeDir = new java.io.File(wh(dir), "lake")
-        val tableDir = new java.io.File(lakeDir, "nation_hist")
-        if (!tableDir.exists()) {
-          val staging = new java.io.File(lakeDir, s"nation_hist.tmp${System.nanoTime()}")
-          staging.mkdirs()
+        QueryPack.fixtureDir(new java.io.File(lakeDir, "nation_hist")) { staging =>
           val conf = s.sparkContext.hadoopConfiguration
           val root = new Path(staging.toString)
           val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, v INT")
@@ -2246,7 +2020,6 @@ object CatalogQueries {
             LakeWrite.deltaCommitInfo(1700000400000L),
             LakeWrite.deltaMetaData("hist-fixture",
               org.apache.spark.sql.types.StructType.fromDDL("id INT, v INT, w INT"), Nil)))
-          if (!staging.renameTo(tableDir)) deleteRecursively(staging)
         }
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE dhist OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lake")
@@ -2280,16 +2053,11 @@ object CatalogQueries {
         val nation = QueryPack.t(s, dir, "nation")
           .select(col("n_nationkey").cast("int").as("n_nationkey"), col("n_name"),
             col("n_regionkey").cast("int").as("n_regionkey"))
-        def ensure(name: String, fmt: String): Unit = {
+        def ensure(name: String, fmt: String): Unit = tableOnce(lakeDir, name) {
           val td = new java.io.File(lakeDir, name)
-          val done = new java.io.File(lakeDir, s"$name.done")
-          if (!done.exists()) {
-            if (td.exists()) deleteRecursively(td)
-            nation.write.partitionBy("n_regionkey").parquet(td.getPath)
-            val res = Graft.sql(s, s"CONVERT TO $fmt '${td.getPath}'").collect()
-            require(res.head.getLong(0) > 0, s"conversion to $fmt registered no files")
-            done.createNewFile(): Unit
-          }
+          nation.write.partitionBy("n_regionkey").parquet(td.getPath)
+          val res = Graft.sql(s, s"CONVERT TO $fmt '${td.getPath}'").collect()
+          require(res.head.getLong(0) > 0, s"conversion to $fmt registered no files")
         }
         ensure("nation_conv_delta", "DELTA")
         ensure("nation_conv_ice", "ICEBERG")
@@ -2318,12 +2086,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_dvdml")
-        val done = new java.io.File(lakeDir, "nation_dvdml.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE DELTA DATASOURCE ddvml OPTIONS (path '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_dvdml") {
           s.sql("CREATE TABLE graft.datasource.lakew.ddvml.nation_dvdml " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) " +
             "TBLPROPERTIES ('delta.enableDeletionVectors' = 'true')")
@@ -2336,7 +2101,6 @@ object CatalogQueries {
             "WHERE n_regionkey = 2")
           s.sql("DELETE FROM graft.datasource.lakew.ddvml.nation_dvdml " +
             "WHERE n_nationkey % 2 = 1")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -2358,12 +2122,9 @@ object CatalogQueries {
       (s, dir) => {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
-        val tableDir = new java.io.File(lakeDir, "nation_imordml")
-        val done = new java.io.File(lakeDir, "nation_imordml.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE imorml OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_imordml") {
           s.sql("CREATE TABLE graft.datasource.lakew.imorml.nation_imordml " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT) " +
             "TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')")
@@ -2376,7 +2137,6 @@ object CatalogQueries {
             "WHERE n_regionkey = 3")
           s.sql("DELETE FROM graft.datasource.lakew.imorml.nation_imordml " +
             "WHERE n_nationkey % 2 = 0")
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey
@@ -2400,11 +2160,9 @@ object CatalogQueries {
         setup(s, dir)
         val lakeDir = new java.io.File(wh(dir), "lakew")
         val tableDir = new java.io.File(lakeDir, "nation_equps")
-        val done = new java.io.File(lakeDir, "nation_equps.done")
         Graft.sql(s,
           s"REGISTER OR REPLACE ICEBERG DATASOURCE iequp OPTIONS (warehouse '${lakeDir.getPath}') NAMESPACE graft.datasource.lakew")
-        if (!done.exists()) {
-          if (tableDir.exists()) deleteRecursively(tableDir)
+        tableOnce(lakeDir, "nation_equps") {
           s.sql("CREATE TABLE graft.datasource.lakew.iequp.nation_equps " +
             "(n_nationkey INT, n_name STRING, n_regionkey INT)")
           QueryPack.t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -2420,7 +2178,6 @@ object CatalogQueries {
               |UNION ALL SELECT 901, 'NEW_B', 9""".stripMargin)
           graft.sources.lake.LakeNativeWrite.icebergEqUpsert(s,
             new org.apache.hadoop.fs.Path(tableDir.getPath), batch, Seq("n_nationkey"))
-          done.createNewFile(): Unit
         }
         s.sql(
           """SELECT n_nationkey, n_name, n_regionkey

@@ -85,36 +85,6 @@ object Pipeline {
         TRUE AS rank_ok, TRUE AS cosine_ok
       FROM embeddings WHERE vec_id < 20 ORDER BY query_id"""
 
-  /** Parallel driver-side media-fixture synthesis, bounded by the SESSION's
-    * declared parallelism (local[k] ⇒ k — same honesty rule as the
-    * KMeansLite fits: the bench's core-count scaling must not be inflated
-    * by unbounded host threads) AND the driver host's core count — these
-    * are DRIVER threads, and on a cluster `defaultParallelism` is the
-    * total executor core count, not anything about the driver (r18,
-    * VERDICT r17 #3). The multimodal gates synthesize ~30 independent
-    * deterministic payloads per run, and serial synthesis was their
-    * measured driver gap (OPTIMIZATION_r17.md §4: the mp3 gate spent 1.55 s
-    * of its 2.9 s wall between jobs). Output order — hence the gate rows — is
-    * identical to the serial map.
-    */
-  private def parRows[T](spark: org.apache.spark.sql.SparkSession,
-      specs: IndexedSeq[T])(f: T => org.apache.spark.sql.Row): Seq[org.apache.spark.sql.Row] = {
-    val out = new Array[org.apache.spark.sql.Row](specs.length)
-    val bound = math.max(1, math.min(specs.length, math.min(
-      Runtime.getRuntime.availableProcessors(),
-      spark.sparkContext.defaultParallelism)))
-    if (bound == 1) specs.indices.foreach(i => out(i) = f(specs(i)))
-    else {
-      val pool = new java.util.concurrent.ForkJoinPool(bound)
-      try pool.submit(new Runnable {
-        def run(): Unit = java.util.stream.IntStream.range(0, specs.length)
-          .parallel().forEach(i => out(i) = f(specs(i)))
-      }).get()
-      finally pool.shutdown()
-    }
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-  }
-
   /** The `text_gopher_quality` gate over a `documents`-shaped frame
     * (`doc_id`, `text`): per-doc word count, mean word length and
     * alphabetic-word fraction, the top-bigram occupancy (most frequent
@@ -611,10 +581,7 @@ object Pipeline {
           val img = new java.awt.image.BufferedImage(64, 64,
             java.awt.image.BufferedImage.TYPE_INT_RGB)
           for (y <- 0 until 64; x <- 0 until 64) {
-            var z = k * 0x9E3779B97F4A7C15L + x * 0xBF58476D1CE4E5B9L + y * 0x94D049BB133111EBL
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            val v = ((z >>> 40) & 0xFF).toInt
+            val v = ((QueryPack.cellHash(k, x, y, rounds = 2) >>> 40) & 0xFF).toInt
             img.setRGB(x, y, (v << 16) | (v << 8) | v)
           }
           if (perturb) img.setRGB(14, 16, 0xFFFFFF)
@@ -622,25 +589,12 @@ object Pipeline {
           javax.imageio.ImageIO.write(img, "png", out)
           out.toByteArray
         }
-        val keys = t(s, dir, "nation").select("n_nationkey", "n_regionkey")
-          .collect().map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
-        val fixtureSpecs: IndexedSeq[(Long, Long, Boolean)] =
-          (keys.map { case (k, _) => (k, k, false) } ++
-            keys.collect { case (k, r) if r == 2 => (k + 100L, k, true) }).toIndexedSeq
-        val rows = parRows(s, fixtureSpecs) { case (id, pk, pert) =>
-          org.apache.spark.sql.Row(id, noisePng(pk, pert)) }
-        val media = s.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, false),
-            org.apache.spark.sql.types.StructField("bytes", org.apache.spark.sql.types.BinaryType))))
-        graft.multimodal.Multimodal.imageNearDuplicates(media, "id", "bytes", maxDistance = 6)
+        graft.multimodal.Multimodal.imageNearDuplicates(
+            QueryPack.plantedFrame(s, dir, twinRegion = 2)(noisePng), "id", "bytes", maxDistance = 6)
           .select(col("id_a"), col("id_b"))
           .orderBy(col("id_a"))
       },
-      Some("""SELECT CAST(n_nationkey AS BIGINT) AS id_a,
-          CAST(n_nationkey + 100 AS BIGINT) AS id_b
-        FROM nation WHERE n_regionkey = 2 ORDER BY id_a""")),
+      QueryPack.plantedPairsOracle(2)),
 
     // ---- PERCEPTUAL AUDIO DEDUP (real PCM decode): one amplitude-
     // modulated tone per nation key, plus — for region 1 — a GAIN-SCALED,
@@ -657,9 +611,7 @@ object Pipeline {
           val data = new Array[Byte](n * 2)
           for (i <- 0 until n) {
             val w = i * 65 / n
-            var z = k * 0x9E3779B97F4A7C15L + w * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            val amp = 0.1 + 0.8 * ((z >>> 40) & 0xFF) / 255.0
+            val amp = 0.1 + 0.8 * ((QueryPack.cellHash(k, w, 0, rounds = 1) >>> 40) & 0xFF) / 255.0
             val base = amp * gain * math.sin(2 * math.Pi * 440 * i / rate)
             val v = math.max(-1.0, math.min(1.0, if (glitch && w == 30) 0.0 else base))
             val sv = (v * 20000).toShort
@@ -674,25 +626,13 @@ object Pipeline {
           bb.put("data".getBytes).putInt(data.length).put(data)
           bb.array()
         }
-        val keys = t(s, dir, "nation").select("n_nationkey", "n_regionkey")
-          .collect().map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
-        val fixtureSpecs: IndexedSeq[(Long, Long, Double, Boolean)] =
-          (keys.map { case (k, _) => (k, k, 1.0, false) } ++
-            keys.collect { case (k, r) if r == 1 => (k + 100L, k, 0.6, true) }).toIndexedSeq
-        val rows = parRows(s, fixtureSpecs) { case (id, tk, g, gl) =>
-          org.apache.spark.sql.Row(id, toneWav(tk, g, glitch = gl)) }
-        val media = s.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, false),
-            org.apache.spark.sql.types.StructField("bytes", org.apache.spark.sql.types.BinaryType))))
+        val media = QueryPack.plantedFrame(s, dir, twinRegion = 1) { (k, twin) =>
+          toneWav(k, if (twin) 0.6 else 1.0, glitch = twin) }
         graft.multimodal.Multimodal.audioNearDuplicates(media, "id", "bytes", maxDistance = 4)
           .select(col("id_a"), col("id_b"))
           .orderBy(col("id_a"))
       },
-      Some("""SELECT CAST(n_nationkey AS BIGINT) AS id_a,
-          CAST(n_nationkey + 100 AS BIGINT) AS id_b
-        FROM nation WHERE n_regionkey = 1 ORDER BY id_a""")),
+      QueryPack.plantedPairsOracle(1)),
 
     // ---- PERCEPTUAL AUDIO DEDUP over REAL MP3 payloads: the same planted-
     // pair design as multimodal_audio_dedup, but every payload is a Layer
@@ -714,9 +654,7 @@ object Pipeline {
           val lvl = new Array[Int](65)
           var prevLvl = -1
           for (w <- 0 until 65) {
-            var z = k * 0x9E3779B97F4A7C15L + w * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            var li = ((z >>> 40) & 3).toInt
+            var li = ((QueryPack.cellHash(k, w, 0, rounds = 1) >>> 40) & 3).toInt
             if (li == prevLvl) li = (li + 1) & 3 // adjacent windows differ
             lvl(w) = li; prevLvl = li
           }
@@ -728,25 +666,13 @@ object Pipeline {
           }
           graft.multimodal.Mp3Encode.encode(Array(pcm), 32000)
         }
-        val keys = t(s, dir, "nation").select("n_nationkey", "n_regionkey")
-          .collect().map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
-        val fixtureSpecs: IndexedSeq[(Long, Long, Double, Boolean)] =
-          (keys.map { case (k, _) => (k, k, 1.0, false) } ++
-            keys.collect { case (k, r) if r == 1 => (k + 100L, k, 0.6, true) }).toIndexedSeq
-        val rows = parRows(s, fixtureSpecs) { case (id, tk, g, gl) =>
-          org.apache.spark.sql.Row(id, toneMp3(tk, g, glitch = gl)) }
-        val media = s.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, false),
-            org.apache.spark.sql.types.StructField("bytes", org.apache.spark.sql.types.BinaryType))))
+        val media = QueryPack.plantedFrame(s, dir, twinRegion = 1) { (k, twin) =>
+          toneMp3(k, if (twin) 0.6 else 1.0, glitch = twin) }
         graft.multimodal.Multimodal.audioNearDuplicates(media, "id", "bytes", maxDistance = 4)
           .select(col("id_a"), col("id_b"))
           .orderBy(col("id_a"))
       },
-      Some("""SELECT CAST(n_nationkey AS BIGINT) AS id_a,
-          CAST(n_nationkey + 100 AS BIGINT) AS id_b
-        FROM nation WHERE n_regionkey = 1 ORDER BY id_a""")),
+      QueryPack.plantedPairsOracle(1)),
 
     // ---- ANN: brute-force exact top-5 cosine neighbors for 20 query vectors.
     // Corpus never shuffles: queries broadcast, scoring is map-side codegen,

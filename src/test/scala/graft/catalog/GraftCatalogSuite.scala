@@ -230,6 +230,35 @@ class GraftCatalogSuite extends SparkTestBase {
     spark.sql("REMOVE USL dqdispatch NAMESPACE graft.metastore")
   }
 
+  test("SHOW DQ RECORD resolves a named constraint by its column list, as RUN DQ does") {
+    spark.sql(
+      s"""COMPILE USL dqshow DEPLOY NAMESPACE graft.metastore DDL
+         |create table orders (
+         |  o_orderkey bigint,
+         |  o_custkey bigint,
+         |  o_totalprice double,
+         |  constraint ck primary key (o_orderkey, o_custkey)
+         |)""".stripMargin)
+    spark.sql(
+      "ACTIVATE USL TABLE graft.metastore.dqshow.orders AS SELECT o_orderkey, o_custkey, o_totalprice FROM graft.datasource.file.tpch.orders")
+    val table = "graft.metastore.dqshow.orders"
+    def records(which: String, name: String): Seq[String] =
+      spark.sql(s"SHOW DQ $which RECORD $name TABLE $table").collect().map(_.getString(0)).toSeq.sorted
+    val run = spark.sql(s"RUN DQ `o_orderkey,o_custkey` TABLE $table").collect()
+    assert(run.length == 1 && run.head.getString(2) == "PK")
+    val byList = records("VALID", "`o_orderkey,o_custkey`")
+    assert(byList.nonEmpty && byList.length == run.head.getLong(4))
+    assert(byList == records("VALID", "ck"))
+    assert(records("INVALID", "`o_orderkey,o_custkey`").isEmpty)
+    // the REST endpoint's frame (/api/qdq) resolves through the same lookup
+    val api = graft.commands.ShowDqRecordsCommand("`o_orderkey,o_custkey`", table.split('.').toSeq,
+      valid = true).recordsDf(spark).toJSON.collect().toSeq.sorted
+    assert(api == byList)
+    val e = intercept[NoSuchElementException](records("VALID", "`no,such`"))
+    assert(e.getMessage.contains("no DQ or constraint"))
+    spark.sql("REMOVE USL dqshow NAMESPACE graft.metastore")
+  }
+
   test("REST/XML register but reject at load (reference parity; AUDIO now scans)") {
     spark.sql("REGISTER REST DATASOURCE api1 OPTIONS (url 'http://x') NAMESPACE graft.datasource.misc")
     val e = intercept[Exception] {

@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -7,7 +11,9 @@ import graft.SparkTestBase
 
 /** `QueryPack.t` reads parquet through the shared schema memo: a repeated
   * read of unchanged files runs no footer-inference job and yields the
-  * schema and rows of an uncached read.
+  * schema and rows of an uncached read. The fixture-publish helpers survive
+  * a failing writer and a racing build, and the planted-pair builder keeps
+  * its key layout.
   */
 class QueryPackSuite extends SparkTestBase {
 
@@ -93,5 +99,87 @@ class QueryPackSuite extends SparkTestBase {
     assert(jobsOf(read("true", caseSensitive = "true")) == 1)
     assert(jobsOf(read("true", caseSensitive = "true")) == 0)
     assert(jobsOf(assert(read("true").collect().head.getLong(0) == 1000000L)) == 1)
+  }
+
+  private def text(f: File): String = new String(Files.readAllBytes(f.toPath), UTF_8)
+
+  private def put(f: File, s: String): Unit = {
+    f.getParentFile.mkdirs()
+    Files.write(f.toPath, s.getBytes(UTF_8)): Unit
+  }
+
+  test("fixtureDir: a writer that throws publishes nothing and leaves no staging tree") {
+    val parent = new File(tmp("graft-qp-fx"))
+    val target = new File(parent, "fx")
+    val e = intercept[IllegalStateException] {
+      QueryPack.fixtureDir(target) { st =>
+        put(new File(st, "nested/part"), "half")
+        throw new IllegalStateException("writer died")
+      }
+    }
+    assert(e.getMessage == "writer died")
+    assert(parent.list().isEmpty, parent.list().mkString(", "))
+    assert(QueryPack.fixtureDir(target)(st => put(new File(st, "a"), "whole")) == target)
+    assert(text(new File(target, "a")) == "whole")
+    // a published fixture is served as it is
+    QueryPack.fixtureDir(target)(_ => fail("a published fixture was rebuilt"))
+  }
+
+  test("fixtureDir: two racing builds publish one tree and the loser's staging is gone") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val parent = new File(tmp("graft-qp-race"))
+    val target = new File(parent, "fx")
+    // each writer waits for the other, so both pass the exists() check
+    // before either renames
+    val bothWriting = new java.util.concurrent.CountDownLatch(2)
+    def build(tag: String): Future[File] = Future {
+      QueryPack.fixtureDir(target) { st =>
+        put(new File(st, "who"), tag)
+        put(new File(st, "nested/deeper/part"), tag)
+        bothWriting.countDown()
+        assert(bothWriting.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      }
+    }
+    Seq(build("a"), build("b")).foreach(f => assert(Await.result(f, 2.minutes) == target))
+    assert(parent.list().toSeq == Seq("fx"), parent.list().mkString(", "))
+    val winner = text(new File(target, "who"))
+    assert(Set("a", "b")(winner))
+    assert(text(new File(target, "nested/deeper/part")) == winner)
+  }
+
+  test("fixtureOnce: a missing marker clears the leftover and rebuilds; a marker skips") {
+    val parent = new File(tmp("graft-qp-once"))
+    val table = new File(parent, "t")
+    val marker = new File(parent, "t.done")
+    put(new File(table, "_log/0.json"), "crashed half-build")
+    var builds = 0
+    QueryPack.fixtureOnce(marker, clear = Seq(table)) {
+      assert(!table.exists(), "the leftover was not cleared before the build")
+      put(new File(table, "_log/0.json"), "complete")
+      builds += 1
+    }
+    assert(builds == 1 && marker.isFile && text(new File(table, "_log/0.json")) == "complete")
+    QueryPack.fixtureOnce(marker, clear = Seq(table)) { builds += 1 }
+    assert(builds == 1 && text(new File(table, "_log/0.json")) == "complete")
+    // a build that throws writes no marker
+    val other = new File(parent, "u.done")
+    intercept[IllegalStateException](QueryPack.fixtureOnce(other)(throw new IllegalStateException("x")))
+    assert(!other.exists())
+  }
+
+  test("plantedPairs: every nation key, then a key+100 twin per key of the twinned region") {
+    val nation = spark.read.parquet(s"${sf()}/nation.parquet")
+      .select("n_nationkey", "n_regionkey").collect()
+      .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
+    val pairs = QueryPack.plantedPairs(spark, sf(), twinRegion = 2) { (k, twin) =>
+      Array(k.toByte, (if (twin) 1 else 0).toByte)
+    }
+    val twins = nation.collect { case (k, 2L) => k }
+    assert(twins.nonEmpty)
+    assert(pairs.map(_._1) == nation.map(_._1).toSeq ++ twins.map(_ + 100))
+    assert(pairs.forall { case (id, p) =>
+      p.toSeq == Seq((id % 100).toByte, (if (id >= 100) 1 else 0).toByte) })
   }
 }
