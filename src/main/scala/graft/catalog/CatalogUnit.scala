@@ -1,7 +1,8 @@
 package graft.catalog
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog}
+import org.apache.spark.sql.connector.catalog.{Column, Identifier, Table, TableCatalog, TableChange, TableInfo}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.datasources.FileFormat
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
@@ -18,6 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.hadoop.fs.Path
 
 import graft.model.{DataSourceSpec, SourceType}
+import java.util.{Map => JMap}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -30,26 +32,42 @@ import scala.util.Try
   * pushdown, partition pruning for free).
   */
 trait CatalogUnit {
+  /** The registered datasource this unit serves. */
+  def ds: DataSourceSpec
+
   def loadTable(spark: SparkSession, rest: Seq[String], name: String,
       schemaOverride: Option[StructType]): Table
   def listTables(spark: SparkSession, rest: Seq[String]): Seq[String]
   def listNamespaces(spark: SparkSession, rest: Seq[String]): Seq[Seq[String]] = Nil
 
-  /** CREATE TABLE routed from the catalog; lake-lite units override (JDBC
-    * has its own TableCatalog path; file datasources keep the reference's
-    * reject, FileCatalogUnit.scala:151-154).
+  /** CREATE TABLE routed from the catalog; by default the reference's
+    * reject for file datasources (FileCatalogUnit.scala:151-154).
     */
   def createTable(spark: SparkSession, rest: Seq[String], name: String,
-      schema: StructType, partitionCols: Seq[String],
-      properties: Map[String, String] = Map.empty): Table =
+      columns: Array[Column], partitions: Array[Transform],
+      properties: JMap[String, String]): Table =
     throw new UnsupportedOperationException(
-      s"CREATE TABLE not supported for this datasource type")
+      s"CREATE TABLE not supported for ${ds.sourceType} datasources " +
+        "(reference: FileCatalogUnit.scala:151-154)")
 
-  /** ALTER TABLE routed from the catalog; lake-lite units override. */
   def alterTable(spark: SparkSession, rest: Seq[String], name: String,
-      changes: Seq[org.apache.spark.sql.connector.catalog.TableChange]): Table =
-    throw new UnsupportedOperationException(
-      s"ALTER TABLE not supported for this datasource type")
+      changes: Seq[TableChange]): Table =
+    throw new UnsupportedOperationException("ALTER TABLE not supported for this datasource type")
+
+  /** DROP TABLE; false when the source keeps the table. */
+  def dropTable(spark: SparkSession, rest: Seq[String], name: String): Boolean = false
+
+  /** VERSION AS OF / TIMESTAMP AS OF (`timestamp` in DSv2 micros): Iceberg
+    * only (reference: AbstractLightningCatalog.scala:338-360,
+    * CatalogUnit.scala:91-108, AbstractIcebergCatalogUnit.scala:61-66).
+    */
+  def loadTableVersion(spark: SparkSession, rest: Seq[String], name: String,
+      version: String): Table = noTimeTravel
+  def loadTableTimestamp(spark: SparkSession, rest: Seq[String], name: String,
+      timestamp: Long): Table = noTimeTravel
+
+  private def noTimeTravel: Nothing = throw new UnsupportedOperationException(
+    s"time travel is not supported for ${ds.sourceType} datasources (Iceberg only)")
 }
 
 object CatalogUnit {
@@ -79,10 +97,18 @@ object CatalogUnit {
       if (hasImpl(ds) || classPresent(default) || !hasPath)
         new ReflectiveCatalogUnit(ds, ReflectiveCatalogUnit.implClass(ds, default))
       else new graft.sources.lake.DeltaLiteCatalogUnit(ds)
-    case t => throw new UnsupportedOperationException(
-      s"source type $t is registered but has no catalog unit (matches reference behavior " +
+    case _ => new Rejected(ds)
+  }
+
+  /** REST/XML register but serve no tables; namespace walks still pass them. */
+  private final class Rejected(val ds: DataSourceSpec) extends CatalogUnit {
+    private def reject = throw new UnsupportedOperationException(
+      s"source type ${ds.typ} is registered but has no catalog unit (matches reference behavior " +
         "for REST/XML, execution/command/DataSourceType.scala:26-73; AUDIO is an " +
         "unstructured scan here, beyond the reference's runtime-reject)")
+    override def loadTable(spark: SparkSession, rest: Seq[String], name: String,
+        schemaOverride: Option[StructType]): Table = reject
+    override def listTables(spark: SparkSession, rest: Seq[String]): Seq[String] = reject
   }
 
   private def hasImpl(ds: DataSourceSpec): Boolean =
@@ -101,14 +127,14 @@ object CatalogUnit {
   * tables: table `t` resolves to `<path>/t`, `<path>/t.<ext>`, or — when the
   * datasource name itself is queried — `<path>` (single-table source).
   */
-final class FileCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
+final class FileCatalogUnit(val ds: DataSourceSpec) extends CatalogUnit {
   private val format = ds.sourceType.toLowerCase
   private val basePath = ds.options.getOrElse("path",
     throw new IllegalArgumentException(s"file datasource ${ds.name} needs a path option"))
 
   private def candidatePaths(name: String): Seq[String] =
-    Seq(s"$basePath/$name.$format", s"$basePath/$name.parquet", s"$basePath/$name") ++
-      (if (name == ds.name) Seq(basePath) else Nil)
+    (Seq(s"$basePath/$name.$format", s"$basePath/$name.parquet", s"$basePath/$name") ++
+      (if (name == ds.name) Seq(basePath) else Nil)).distinct
 
   private def resolvePath(spark: SparkSession, name: String): String = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -197,7 +223,7 @@ object FileCatalogUnit {
   * directly (reference: JDBCDataSourceCatalogUnit.scala:63-148,
   * SnowflakeJDBCTableCatalog.scala:43-77).
   */
-class JdbcCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
+class JdbcCatalogUnit(val ds: DataSourceSpec) extends CatalogUnit {
   private val url = ds.options.getOrElse("url", "")
   private def twoLevel: Boolean = TwoLevelJdbc.isTwoLevel(url)
   // overridable for tests (a fake store stands in for a live warehouse)
@@ -227,14 +253,25 @@ class JdbcCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
     if (twoLevel) TwoLevelJdbc.listNamespaces(store, TwoLevelJdbc.normalize(url, rest))
     else delegate().listNamespaces(rest.toArray).map(_.toSeq).toSeq
 
-  def tableCatalog: TableCatalog = delegate()
+  override def createTable(spark: SparkSession, rest: Seq[String], name: String,
+      columns: Array[Column], partitions: Array[Transform],
+      properties: JMap[String, String]): Table =
+    delegate().createTable(Identifier.of(rest.toArray, name), new TableInfo.Builder()
+      .withColumns(columns).withPartitions(partitions).withProperties(properties).build())
+
+  override def alterTable(spark: SparkSession, rest: Seq[String], name: String,
+      changes: Seq[TableChange]): Table =
+    delegate().alterTable(Identifier.of(rest.toArray, name), changes: _*)
+
+  override def dropTable(spark: SparkSession, rest: Seq[String], name: String): Boolean =
+    delegate().dropTable(Identifier.of(rest.toArray, name))
 }
 
 /** Iceberg/Delta (and avro file tables): reflective so the unit lights up
   * when the jar is present and raises a clear error offline
   * (reference: v3.5/.../IcebergCatalogUnit.scala:30-42).
   */
-final class ReflectiveCatalogUnit(ds: DataSourceSpec, catalogClass: String) extends CatalogUnit {
+final class ReflectiveCatalogUnit(val ds: DataSourceSpec, catalogClass: String) extends CatalogUnit {
   private def delegate(): TableCatalog = {
     val cls = try Class.forName(catalogClass) catch {
       case _: ClassNotFoundException => throw new UnsupportedOperationException(
@@ -251,10 +288,16 @@ final class ReflectiveCatalogUnit(ds: DataSourceSpec, catalogClass: String) exte
   override def listTables(spark: SparkSession, rest: Seq[String]): Seq[String] =
     delegate().listTables(rest.toArray).map(_.name).toSeq.sorted
 
-  def loadTableVersion(spark: SparkSession, ident: Identifier, version: String): Table =
-    delegate().loadTable(ident, version)
-  def loadTableTimestamp(spark: SparkSession, ident: Identifier, timestamp: Long): Table =
-    delegate().loadTable(ident, timestamp)
+  // time travel stays Iceberg-only (reference parity); Delta keeps the reject
+  private def iceberg: Boolean = ds.typ == SourceType.ICEBERG
+  override def loadTableVersion(spark: SparkSession, rest: Seq[String], name: String,
+      version: String): Table =
+    if (iceberg) delegate().loadTable(Identifier.of(rest.toArray, name), version)
+    else super.loadTableVersion(spark, rest, name, version)
+  override def loadTableTimestamp(spark: SparkSession, rest: Seq[String], name: String,
+      timestamp: Long): Table =
+    if (iceberg) delegate().loadTable(Identifier.of(rest.toArray, name), timestamp)
+    else super.loadTableTimestamp(spark, rest, name, timestamp)
 }
 
 object ReflectiveCatalogUnit {

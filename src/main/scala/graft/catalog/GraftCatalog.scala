@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.model.{GraftModel, SourceType}
+import graft.model.GraftModel
 import graft.sources.usl.UslTable
 
 import java.util.{Map => JMap}
@@ -18,11 +18,11 @@ import scala.jdk.CollectionConverters._
   * (reference: catalog/AbstractLightningCatalog.scala:47-360).
   *
   * Two hard-coded root namespaces: `datasource` and `metastore`
-  * (reference: AbstractLightningCatalog.scala:152-159). Table resolution
-  * walks the identifier's namespace up to the nearest registered datasource
-  * (`findParentDataSource`) and delegates to its [[CatalogUnit]]; metastore
-  * identifiers resolve registered table snapshots (schema override, no
-  * re-inference) and activated USL tables.
+  * (reference: AbstractLightningCatalog.scala:152-159). The catalog only
+  * routes: [[route]] walks an identifier up to the nearest registered
+  * datasource and every per-source table operation goes to that source's
+  * [[CatalogUnit]]; metastore identifiers resolve registered table
+  * snapshots (schema override, no re-inference) and activated USL tables.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
@@ -40,28 +40,36 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def name(): String = catalogName
 
+  /** The unit of the nearest datasource at or above `path`, plus the part
+    * of `path` below that datasource.
+    */
+  private def route(path: Seq[String]): Option[(CatalogUnit, Seq[String])] =
+    model.findParentDataSource(path).map { case (ds, rest) => (CatalogUnit(ds), rest) }
+
+  /** [[route]] for a table: its unit and the namespace below the datasource. */
+  private def routeTable(ns: Seq[String], name: String): Option[(CatalogUnit, Seq[String])] =
+    route(ns :+ name).map { case (u, rest) => (u, rest.dropRight(1)) }
+
+  private def withTable[T](ident: Identifier)(op: (CatalogUnit, Seq[String]) => T): T =
+    routeTable(ident.namespace.toSeq, ident.name).map(op.tupled)
+      .getOrElse(throw new NoSuchTableException(ident.namespace.toSeq :+ ident.name))
+
   // ---- namespaces ----
 
   override def listNamespaces(): Array[Array[String]] =
     GraftModel.Roots.map(r => Array(r)).toArray
 
   override def listNamespaces(ns: Array[String]): Array[Array[String]] = {
-    val own = model.listNamespaces(ns.toSeq).map(_.toArray)
-    // a registered JDBC source's remote schemas surface as child namespaces
-    val delegated = model.findParentDataSource(ns.toSeq) match {
-      case Some((ds, rest)) if ds.typ == SourceType.JDBC =>
-        CatalogUnit(ds) match {
-          case j: JdbcCatalogUnit =>
-            j.listNamespaces(spark, rest).map(child => ns ++ child.drop(rest.size))
-          case _ => Nil
-        }
-      case _ => Nil
+    val own = model.listNamespaces(ns.toSeq)
+    // a source's own namespaces (a JDBC source's remote schemas) surface as children
+    val delegated = route(ns.toSeq).toSeq.flatMap { case (u, rest) =>
+      u.listNamespaces(spark, rest).map(child => ns.toSeq ++ child.drop(rest.size))
     }
-    (own ++ delegated).map(_.toArray[String]).distinct.toArray
+    (own ++ delegated).distinct.map(_.toArray).toArray
   }
 
   override def namespaceExists(ns: Array[String]): Boolean =
-    model.namespaceExists(ns.toSeq) || model.findParentDataSource(ns.toSeq).isDefined
+    model.namespaceExists(ns.toSeq) || route(ns.toSeq).isDefined
 
   override def loadNamespaceMetadata(ns: Array[String]): JMap[String, String] = {
     if (!namespaceExists(ns)) throw new NoSuchNamespaceException(ns.toSeq)
@@ -82,10 +90,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def listTables(ns: Array[String]): Array[Identifier] = {
     val nsSeq = ns.toSeq
     val registered = model.listRegisteredTables(nsSeq)
-    val fromSource = model.findParentDataSource(nsSeq) match {
-      case Some((ds, rest)) => CatalogUnit(ds).listTables(spark, rest)
-      case None => Nil
-    }
+    val fromSource = route(nsSeq).map { case (u, rest) => u.listTables(spark, rest) }.getOrElse(Nil)
     val fromUsl = model.findUslFor(nsSeq).map(_.tables.map(_.name)).getOrElse(Nil)
     (registered ++ fromSource ++ fromUsl).distinct.sorted
       .map(t => Identifier.of(ns, t)).toArray
@@ -101,14 +106,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // 1. metastore-registered table snapshot: re-resolve the source with the
     //    ingested schema (no re-inference; reference: AbstractLightningCatalog.scala:266-271)
     model.loadRegisteredTable(ns, name).foreach { reg =>
-      val srcNs = reg.sourceFqn.dropRight(1)
       val srcName = reg.sourceFqn.last
-      model.findParentDataSource(srcNs :+ srcName) match {
-        case Some((ds, rest)) =>
-          return CatalogUnit(ds).loadTable(spark, rest.dropRight(1), srcName, Some(reg.schema))
-        case None =>
-          throw new NoSuchTableException((ns :+ name).toSeq)
-      }
+      return routeTable(reg.sourceFqn.dropRight(1), srcName)
+        .map { case (u, rest) => u.loadTable(spark, rest, srcName, Some(reg.schema)) }
+        .getOrElse(throw new NoSuchTableException(ns :+ name))
     }
 
     // 2. USL virtual table (namespace tail = USL name)
@@ -119,120 +120,32 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     }
 
     // 3. datasource-routed table
-    model.findParentDataSource(ns :+ name) match {
-      case Some((ds, rest)) =>
-        // `rest` still carries the table name; the unit gets namespace-below-source
-        CatalogUnit(ds).loadTable(spark, rest.dropRight(1), name, None)
-      case None =>
-        throw new NoSuchTableException((ns :+ name).toSeq)
-    }
+    withTable(ident)(_.loadTable(spark, _, name, None))
   }
 
   override def createTable(ident: Identifier, columns: Array[Column],
-      partitions: Array[Transform], properties: JMap[String, String]): Table = {
-    val ns = ident.namespace.toSeq
-    model.findParentDataSource(ns :+ ident.name) match {
-      case Some((ds, rest)) if ds.typ == SourceType.JDBC =>
-        CatalogUnit(ds) match {
-          case j: JdbcCatalogUnit =>
-            j.tableCatalog.createTable(
-              Identifier.of(rest.dropRight(1).toArray, ident.name),
-              new org.apache.spark.sql.connector.catalog.TableInfo.Builder()
-                .withColumns(columns).withPartitions(partitions)
-                .withProperties(properties).build())
-          case _ => throw new UnsupportedOperationException("createTable")
-        }
-      case Some((ds, rest)) =>
-        CatalogUnit(ds) match {
-          case u @ (_: graft.sources.lake.DeltaLiteCatalogUnit |
-                    _: graft.sources.lake.IcebergLiteCatalogUnit) =>
-            // identity transforms only — the lite writers' documented subset
-            val partCols = partitions.toSeq.map {
-              case t if t.name == "identity" && t.references.length == 1 =>
-                t.references.head.fieldNames.mkString(".")
-              case t => throw new UnsupportedOperationException(
-                s"partition transform $t not supported by the native lake writer (identity only)")
-            }
-            // Spark injects bookkeeping properties (provider, location,
-            // owner); pass through only what the user wrote
-            val userProps = properties.asScala.toMap -- Seq(
-              "provider", "location", "owner", "external", "comment")
-            u.createTable(spark, rest.dropRight(1), ident.name,
-              org.apache.spark.sql.GraftSQLBridge.v2ColumnsToStructType(columns), partCols,
-              userProps)
-          case _ => throw new UnsupportedOperationException(
-            s"CREATE TABLE not supported for ${ds.sourceType} datasources " +
-              "(reference: FileCatalogUnit.scala:151-154)")
-        }
-      case None => throw new NoSuchNamespaceException(ns.toSeq)
-    }
-  }
+      partitions: Array[Transform], properties: JMap[String, String]): Table =
+    routeTable(ident.namespace.toSeq, ident.name)
+      .map { case (u, rest) => u.createTable(spark, rest, ident.name, columns, partitions, properties) }
+      .getOrElse(throw new NoSuchNamespaceException(ident.namespace.toSeq))
 
   @deprecated("use the Column-based overload", "")
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: JMap[String, String]): Table =
     createTable(ident, org.apache.spark.sql.GraftSQLBridge.structTypeToV2Columns(schema), partitions, properties)
 
-  // ---- time travel: VERSION AS OF / TIMESTAMP AS OF routes here; only
-  // Iceberg units support it, everything else rejects (reference:
-  // AbstractLightningCatalog.scala:338-360, CatalogUnit.scala:91-108,
-  // AbstractIcebergCatalogUnit.scala:61-66) ----
-
   override def loadTable(ident: Identifier, version: String): Table =
-    timeTravelUnit(ident) match {
-      case (u: ReflectiveCatalogUnit, _) => u.loadTableVersion(spark, ident, version)
-      case (u: graft.sources.lake.IcebergLiteCatalogUnit, rest) =>
-        u.loadVersion(spark, rest.dropRight(1), ident.name, version)
-      case (u, _) => throw new UnsupportedOperationException(s"time travel: $u")
-    }
+    withTable(ident)(_.loadTableVersion(spark, _, ident.name, version))
 
   override def loadTable(ident: Identifier, timestamp: Long): Table =
-    timeTravelUnit(ident) match {
-      case (u: ReflectiveCatalogUnit, _) => u.loadTableTimestamp(spark, ident, timestamp)
-      case (u: graft.sources.lake.IcebergLiteCatalogUnit, rest) =>
-        // DSv2 hands micros; the lite reader compares snapshot timestamp-ms
-        u.loadTimestamp(spark, rest.dropRight(1), ident.name, Math.floorDiv(timestamp, 1000L))
-      case (u, _) => throw new UnsupportedOperationException(s"time travel: $u")
-    }
+    withTable(ident)(_.loadTableTimestamp(spark, _, ident.name, timestamp))
 
-  private def timeTravelUnit(ident: Identifier): (CatalogUnit, Seq[String]) = {
-    val ns = ident.namespace.toSeq
-    model.findParentDataSource(ns :+ ident.name) match {
-      case Some((ds, rest)) if ds.typ == SourceType.ICEBERG => (CatalogUnit(ds), rest)
-      case Some((ds, _)) => throw new UnsupportedOperationException(
-        s"time travel is not supported for ${ds.sourceType} datasources (Iceberg only)")
-      case None => throw new NoSuchTableException((ns :+ ident.name).toSeq)
-    }
-  }
+  override def alterTable(ident: Identifier, changes: TableChange*): Table =
+    withTable(ident)(_.alterTable(spark, _, ident.name, changes.toSeq))
 
-  override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val ns = ident.namespace.toSeq
-    model.findParentDataSource(ns :+ ident.name) match {
-      case Some((ds, rest)) if ds.typ == SourceType.JDBC =>
-        CatalogUnit(ds) match {
-          case j: JdbcCatalogUnit =>
-            j.tableCatalog.alterTable(
-              Identifier.of(rest.dropRight(1).toArray, ident.name), changes: _*)
-          case _ => throw new UnsupportedOperationException("ALTER TABLE")
-        }
-      case Some((ds, rest)) =>
-        CatalogUnit(ds).alterTable(spark, rest.dropRight(1), ident.name, changes.toSeq)
-      case None => throw new NoSuchTableException(ns :+ ident.name)
-    }
-  }
-
-  override def dropTable(ident: Identifier): Boolean = {
-    val ns = ident.namespace.toSeq
-    model.findParentDataSource(ns :+ ident.name) match {
-      case Some((ds, rest)) if ds.typ == SourceType.JDBC =>
-        CatalogUnit(ds) match {
-          case j: JdbcCatalogUnit =>
-            j.tableCatalog.dropTable(Identifier.of(rest.dropRight(1).toArray, ident.name))
-          case _ => false
-        }
-      case _ => false
-    }
-  }
+  override def dropTable(ident: Identifier): Boolean =
+    routeTable(ident.namespace.toSeq, ident.name)
+      .exists { case (u, rest) => u.dropTable(spark, rest, ident.name) }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
     throw new UnsupportedOperationException("RENAME TABLE is not supported")

@@ -1,12 +1,12 @@
 package graft.model
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.json4s._
 import org.json4s.jackson.Serialization
 import org.json4s.jackson.Serialization.{read, write}
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedReader, FileNotFoundException, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
 
@@ -38,10 +38,23 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
   private def nsPath(ns: Seq[String]): Path =
     ns.foldLeft(root)((p, n) => new Path(p, n))
 
-  private def writeString(p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+  private def bytes(spec: AnyRef): Array[Byte] = write(spec).getBytes(StandardCharsets.UTF_8)
+
+  /** Every spec write replaces the file whole ([[AtomicFile.replace]]). */
+  private def writeSpec(p: Path, spec: AnyRef): Unit = AtomicFile.replace(fs, p, bytes(spec))
+
+  /** Every spec read: the spec at `p`, or None when no file is there. */
+  private def readSpec[T: Manifest](p: Path): Option[T] =
+    try Some(read[T](readString(p))) catch { case _: FileNotFoundException => None }
+
+  /** A namespace's entries; none when it does not exist. */
+  private def entries(ns: Seq[String]): Seq[FileStatus] =
+    try fs.listStatus(nsPath(ns)).toSeq catch { case _: FileNotFoundException => Nil }
+
+  private def specNames(ns: Seq[String], suffix: String): Seq[String] =
+    entries(ns).filter(_.isFile).map(_.getPath.getName).collect {
+      case n if n.endsWith(suffix) => n.dropRight(suffix.length)
+    }.sorted
 
   private def readString(p: Path): String = {
     val in = new BufferedReader(new InputStreamReader(fs.open(p), StandardCharsets.UTF_8))
@@ -59,15 +72,14 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
     requireUnderRoot(ns)
     val p = nsPath(ns)
     fs.mkdirs(p)
-    if (properties.nonEmpty) writeString(new Path(p, ".properties"), write(properties))
+    if (properties.nonEmpty) writeSpec(new Path(p, ".properties"), properties)
   }
 
-  def namespaceExists(ns: Seq[String]): Boolean = fs.exists(nsPath(ns)) && fs.getFileStatus(nsPath(ns)).isDirectory
+  def namespaceExists(ns: Seq[String]): Boolean =
+    try fs.getFileStatus(nsPath(ns)).isDirectory catch { case _: FileNotFoundException => false }
 
-  def namespaceProperties(ns: Seq[String]): Map[String, String] = {
-    val p = new Path(nsPath(ns), ".properties")
-    if (fs.exists(p)) read[Map[String, String]](readString(p)) else Map.empty
-  }
+  def namespaceProperties(ns: Seq[String]): Map[String, String] =
+    readSpec[Map[String, String]](new Path(nsPath(ns), ".properties")).getOrElse(Map.empty)
 
   def dropNamespace(ns: Seq[String]): Boolean = {
     requireUnderRoot(ns)
@@ -76,33 +88,32 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
   }
 
   /** Child namespaces = subdirectories that are not USL activation dirs. */
-  def listNamespaces(ns: Seq[String]): Seq[Seq[String]] = {
-    val p = nsPath(ns)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq
+  def listNamespaces(ns: Seq[String]): Seq[Seq[String]] =
+    entries(ns)
       .filter(st => st.isDirectory && !st.getPath.getName.startsWith("."))
       .map(st => ns :+ st.getPath.getName)
       .sortBy(_.mkString("."))
-  }
 
   // ---- data sources ----
 
+  /** Without OR REPLACE the name is claimed create-exclusive, so of two
+    * concurrent REGISTERs of one name exactly one succeeds.
+    */
   def saveDataSource(spec: DataSourceSpec): String = {
     requireUnderRoot(spec.namespace)
     createNamespace(spec.namespace)
     val suffix = if (isFileLike(spec)) FsSuffix else DsSuffix
     val p = new Path(nsPath(spec.namespace), s"${spec.name}$suffix")
-    if (fs.exists(p) && !spec.replace)
+    if (spec.replace) writeSpec(p, spec)
+    else if (!AtomicFile.atomicCreate(fs, p, bytes(spec)))
       throw new IllegalStateException(s"datasource ${spec.fqn.mkString(".")} already exists (use OR REPLACE)")
-    writeString(p, write(spec))
     p.toString
   }
 
   def loadDataSource(ns: Seq[String], name: String): Option[DataSourceSpec] =
     Seq(DsSuffix, FsSuffix).iterator
-      .map(sfx => new Path(nsPath(ns), s"$name$sfx"))
-      .find(fs.exists)
-      .map(p => read[DataSourceSpec](readString(p)))
+      .flatMap(sfx => readSpec[DataSourceSpec](new Path(nsPath(ns), s"$name$sfx")))
+      .nextOption()
 
   /** Walk the namespace prefix from the leaf upward looking for the nearest
     * registered data source (reference: AbstractLightningCatalog.scala:70-92).
@@ -124,50 +135,40 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
 
   def saveTable(spec: RegisteredTableSpec): Unit = {
     createNamespace(spec.namespace)
-    writeString(new Path(nsPath(spec.namespace), s"${spec.name}$TableSuffix"), write(spec))
+    writeSpec(new Path(nsPath(spec.namespace), s"${spec.name}$TableSuffix"), spec)
   }
 
-  def loadRegisteredTable(ns: Seq[String], name: String): Option[RegisteredTableSpec] = {
-    val p = new Path(nsPath(ns), s"$name$TableSuffix")
-    if (fs.exists(p)) Some(read[RegisteredTableSpec](readString(p))) else None
-  }
+  def loadRegisteredTable(ns: Seq[String], name: String): Option[RegisteredTableSpec] =
+    readSpec[RegisteredTableSpec](new Path(nsPath(ns), s"$name$TableSuffix"))
 
   // ---- USL ----
 
   def saveUsl(spec: UslSpec): Unit = {
     createNamespace(spec.namespace)
-    writeString(new Path(nsPath(spec.namespace), s"${spec.name}$UslSuffix"), write(spec))
+    writeSpec(new Path(nsPath(spec.namespace), s"${spec.name}$UslSuffix"), spec)
   }
 
-  def loadUsl(ns: Seq[String], name: String): Option[UslSpec] = {
-    val p = new Path(nsPath(ns), s"$name$UslSuffix")
-    if (!fs.exists(p)) None
-    else {
-      val usl = read[UslSpec](readString(p))
+  def loadUsl(ns: Seq[String], name: String): Option[UslSpec] =
+    readSpec[UslSpec](new Path(nsPath(ns), s"$name$UslSuffix")).map { usl =>
       // merge activation queries (reference: LightningHdfsModel.scala:405-419)
-      Some(usl.copy(tables = usl.tables.map { tb =>
+      usl.copy(tables = usl.tables.map { tb =>
         tb.copy(activateQuery = loadActivation(ns, name, tb.name).map(_.query))
-      }))
+      })
     }
-  }
 
   def removeUsl(ns: Seq[String], name: String): Boolean = {
-    val dir = new Path(nsPath(ns), s".$name")
-    if (fs.exists(dir)) fs.delete(dir, true)
-    val p = new Path(nsPath(ns), s"$name$UslSuffix")
-    fs.exists(p) && fs.delete(p, false)
+    fs.delete(new Path(nsPath(ns), s".$name"), true)
+    fs.delete(new Path(nsPath(ns), s"$name$UslSuffix"), false)
   }
 
   def saveActivation(ns: Seq[String], usl: String, spec: ActivationSpec): Unit = {
     val dir = new Path(nsPath(ns), s".$usl")
     fs.mkdirs(dir)
-    writeString(new Path(dir, s"${spec.table}$ActivationSuffix"), write(spec))
+    writeSpec(new Path(dir, s"${spec.table}$ActivationSuffix"), spec)
   }
 
-  def loadActivation(ns: Seq[String], usl: String, table: String): Option[ActivationSpec] = {
-    val p = new Path(new Path(nsPath(ns), s".$usl"), s"$table$ActivationSuffix")
-    if (fs.exists(p)) Some(read[ActivationSpec](readString(p))) else None
-  }
+  def loadActivation(ns: Seq[String], usl: String, table: String): Option[ActivationSpec] =
+    readSpec[ActivationSpec](new Path(new Path(nsPath(ns), s".$usl"), s"$table$ActivationSuffix"))
 
   /** Find the USL (if any) a `ns.table` identifier belongs to: the last
     * namespace element may be a USL name.
@@ -181,21 +182,9 @@ class GraftModel(val warehouse: String, hadoopConf: Configuration = new Configur
     * tables are resolved lazily by the catalog; USL names are namespaces here.
     * (reference: LightningHdfsModel.scala:176-208)
     */
-  def listRegisteredTables(ns: Seq[String]): Seq[String] = {
-    val p = nsPath(ns)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName).collect {
-      case n if n.endsWith(TableSuffix) => n.dropRight(TableSuffix.length)
-    }.sorted
-  }
+  def listRegisteredTables(ns: Seq[String]): Seq[String] = specNames(ns, TableSuffix)
 
-  def listUsls(ns: Seq[String]): Seq[String] = {
-    val p = nsPath(ns)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName).collect {
-      case n if n.endsWith(UslSuffix) => n.dropRight(UslSuffix.length)
-    }.sorted
-  }
+  def listUsls(ns: Seq[String]): Seq[String] = specNames(ns, UslSuffix)
 
   private def isFileLike(spec: DataSourceSpec): Boolean =
     SourceType.fileTypes.contains(spec.typ) || SourceType.unstructuredTypes.contains(spec.typ)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Graft
+import QueryPack.wh
 
 /** Correctness-gate queries that exercise the federation layer end-to-end
   * through the PUBLIC surface (Graft.sql / spark.sql with the graft catalog):
@@ -17,26 +18,6 @@ object CatalogQueries {
   // ways: files a gate writes itself go through QueryPack.fixtureDir
   // (staged, then one rename), tables SQL writes at a registered path go
   // through QueryPack.fixtureOnce (completion marker written last).
-  // The warehouse path embeds a fingerprint of the source parquet tables
-  // (name:size:mtime of every *.parquet in the sf dir): the fixtures DERIVE
-  // from those tables, so when testdata is regenerated in place, a path
-  // keyed only on the dir name would serve the previous generation's
-  // fixtures against oracles reading the new parquet — a spurious gate
-  // failure. A new generation lands in a fresh warehouse and every fixture
-  // rebuilds. (Stale generations are orphaned in /tmp; fixture scale makes
-  // that cheap.)
-  private val whFingerprints = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def wh(dir: String): String = {
-    val fp = whFingerprints.getOrElseUpdate(dir, {
-      val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
-      val sig = files.map(f => s"${f.getName}:${f.length()}:${f.lastModified()}").mkString("|")
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.take(6).map(b => f"$b%02x").mkString
-    })
-    "/tmp/graft-verify-wh-" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "-" + fp
-  }
 
   /** [[QueryPack.fixtureOnce]] for lake tables SQL builds under `lakeDir`:
     * the marker is `<first table>.done` beside them, and a build without

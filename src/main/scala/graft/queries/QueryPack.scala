@@ -69,6 +69,28 @@ object QueryPack {
       .collect { case r: HadoopFsRelation => r.location }
       .collect { case i: PartitioningAwareFileIndex => i }
 
+  // The one path of a gate run's warehouse: every fixture and gate output
+  // lives under it. The path embeds a fingerprint of the source parquet tables
+  // (name:size:mtime of every *.parquet in the sf dir): the fixtures DERIVE
+  // from those tables, so when testdata is regenerated in place, a path
+  // keyed only on the dir name would serve the previous generation's
+  // fixtures against oracles reading the new parquet — a spurious gate
+  // failure. A new generation lands in a fresh warehouse and every fixture
+  // rebuilds. (Stale generations are orphaned in /tmp; fixture scale makes
+  // that cheap.)
+  private val whFingerprints = scala.collection.concurrent.TrieMap.empty[String, String]
+  private[queries] def wh(dir: String): String = {
+    val fp = whFingerprints.getOrElseUpdate(dir, {
+      val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
+      val sig = files.map(f => s"${f.getName}:${f.length()}:${f.lastModified()}").mkString("|")
+      val md = java.security.MessageDigest.getInstance("MD5")
+        .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.take(6).map(b => f"$b%02x").mkString
+    })
+    "/tmp/graft-verify-wh-" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "-" + fp
+  }
+
   /** Build-once publish for a fixture whose files the gate writes itself.
     * While `target` is missing, `write` fills a fresh sibling staging
     * directory and one rename publishes it, so a crash mid-build never

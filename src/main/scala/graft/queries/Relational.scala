@@ -1105,7 +1105,7 @@ object Relational {
     QuerySpec("bucketed_join",
       (s, dir) => {
         import org.apache.spark.sql.SaveMode
-        val base = "/tmp/graft-verify-wh-" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "/buck"
+        val base = QueryPack.wh(dir) + "/buck"
         graft.operators.Bucketing.writeBucketed(
           t(s, dir, "orders").select("o_custkey", "o_totalprice"),
           "gate_orders_b", Seq("o_custkey"), 8, sorted = true, SaveMode.Overwrite,

@@ -459,7 +459,7 @@ object DeltaLite {
       "numFiles" -> JInt(BigInt(numFiles)),
       "numMetadata" -> JInt(BigInt(1L)),
       "numProtocol" -> JInt(BigInt(1L))))
-    LakeWrite.atomicCreate(crc.getFileSystem(conf), crc,
+    graft.model.AtomicFile.atomicCreate(crc.getFileSystem(conf), crc,
       (json + "\n").getBytes("UTF-8")): Unit
   } catch { case _: Exception => () } // advisory: the commit already landed
 

@@ -3,7 +3,8 @@ package graft.sources.lake
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.catalog.{Column, SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
@@ -13,7 +14,7 @@ import graft.model.DataSourceSpec
 import graft.plans.{HasRowLevelHandle, LakeRowLevel}
 import graft.sources.DataFrameV1Table
 
-import java.util.{Set => JSet}
+import java.util.{Map => JMap, Set => JSet}
 import scala.jdk.CollectionConverters._
 
 /** A lake-lite table that also accepts `INSERT [OVERWRITE]` through the
@@ -47,6 +48,25 @@ private[lake] class WritableLakeTable(name: String, schema: StructType,
     }
 }
 
+private[lake] object LiteCreate {
+  /** A CREATE TABLE's schema, partition columns and user properties in the
+    * lite writers' terms: identity transforms only (their documented
+    * subset), and none of the bookkeeping properties Spark injects
+    * (provider, location, owner), only what the user wrote.
+    */
+  def apply(columns: Array[Column], partitions: Array[Transform],
+      properties: JMap[String, String]): (StructType, Seq[String], Map[String, String]) = {
+    val partCols = partitions.toSeq.map {
+      case t if t.name == "identity" && t.references.length == 1 =>
+        t.references.head.fieldNames.mkString(".")
+      case t => throw new UnsupportedOperationException(
+        s"partition transform $t not supported by the native lake writer (identity only)")
+    }
+    (org.apache.spark.sql.GraftSQLBridge.v2ColumnsToStructType(columns), partCols,
+      properties.asScala.toMap -- Seq("provider", "location", "owner", "external", "comment"))
+  }
+}
+
 /** Catalog units backed by the lite lake readers — chosen by
   * [[graft.catalog.CatalogUnit.apply]] when no `catalog_impl` override is
   * registered and the real runtime jar is absent, so a minimal deployment
@@ -57,7 +77,7 @@ private[lake] class WritableLakeTable(name: String, schema: StructType,
 /** `path` option = a directory of Delta tables (`<path>/<t>/_delta_log`),
   * or itself a single Delta table addressed by the datasource name.
   */
-final class DeltaLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
+final class DeltaLiteCatalogUnit(val ds: DataSourceSpec) extends CatalogUnit {
   private val basePath = ds.options.getOrElse("path", ds.options.getOrElse("warehouse",
     throw new IllegalArgumentException(s"DELTA datasource ${ds.name} needs a path option")))
 
@@ -180,11 +200,12 @@ final class DeltaLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
     * public lever for per-table behavior like `delta.enableChangeDataFeed`.
     */
   override def createTable(spark: SparkSession, rest: Seq[String], name: String,
-      schema: StructType, partitionCols: Seq[String],
-      properties: Map[String, String] = Map.empty): Table = {
+      columns: Array[Column], partitions: Array[Transform],
+      properties: JMap[String, String]): Table = {
+    val (schema, partitionCols, userProps) = LiteCreate(columns, partitions, properties)
     val dir = new Path((Seq(basePath) ++ rest :+ name).mkString("/"))
     LakeNativeWrite.deltaCreate(spark, dir, schema, partitionCols,
-      properties.filter(_._1.startsWith("delta.")))
+      userProps.filter(_._1.startsWith("delta.")))
     loadTable(spark, rest, name, None)
   }
 
@@ -340,23 +361,6 @@ final class DeltaLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
       s => DeltaLite.changes(s, dir, from, resolvedTo))
   }
 
-  /** Programmatic time travel (SQL `VERSION AS OF` stays Iceberg-only for
-    * reference parity; see GraftCatalog.timeTravelUnit).
-    */
-  def loadVersion(spark: SparkSession, rest: Seq[String], name: String, version: Long): Table = {
-    val dir = dirFor(spark, rest, name)
-    val snap = DeltaLite.snapshot(spark, dir, version = Some(version))
-    new DataFrameV1Table(s"$name@v$version", snap.schema,
-      s => DeltaLite.toDataFrame(s, snap))
-  }
-
-  def loadTimestamp(spark: SparkSession, rest: Seq[String], name: String, tsMillis: Long): Table = {
-    val dir = dirFor(spark, rest, name)
-    val snap = DeltaLite.snapshot(spark, dir, timestampMs = Some(tsMillis))
-    new DataFrameV1Table(s"$name@ts$tsMillis", snap.schema,
-      s => DeltaLite.toDataFrame(s, snap))
-  }
-
   override def listTables(spark: SparkSession, rest: Seq[String]): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val base = new Path((Seq(basePath) ++ rest).mkString("/"))
@@ -370,7 +374,7 @@ final class DeltaLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
 /** `warehouse` (or `path`) option = a hadoop-style warehouse of Iceberg
   * tables: `<warehouse>/<ns...>/<t>/metadata/vN.metadata.json`.
   */
-final class IcebergLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
+final class IcebergLiteCatalogUnit(val ds: DataSourceSpec) extends CatalogUnit {
   private val warehouse = ds.options.getOrElse("warehouse", ds.options.getOrElse("path",
     throw new IllegalArgumentException(s"ICEBERG datasource ${ds.name} needs a warehouse option")))
 
@@ -506,10 +510,11 @@ final class IcebergLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
     * behavior levers like `write.delete.mode = merge-on-read`).
     */
   override def createTable(spark: SparkSession, rest: Seq[String], name: String,
-      schema: StructType, partitionCols: Seq[String],
-      properties: Map[String, String] = Map.empty): Table = {
+      columns: Array[Column], partitions: Array[Transform],
+      properties: JMap[String, String]): Table = {
+    val (schema, partitionCols, userProps) = LiteCreate(columns, partitions, properties)
     val dir = new Path((Seq(warehouse) ++ rest :+ name).mkString("/"))
-    LakeNativeWrite.icebergCreate(spark, dir, schema, partitionCols, properties)
+    LakeNativeWrite.icebergCreate(spark, dir, schema, partitionCols, userProps)
     loadTable(spark, rest, name, None)
   }
 
@@ -553,14 +558,18 @@ final class IcebergLiteCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
     loadTable(spark, rest, name, None)
   }
 
-  def loadVersion(spark: SparkSession, rest: Seq[String], name: String, version: String): Table = {
+  override def loadTableVersion(spark: SparkSession, rest: Seq[String], name: String,
+      version: String): Table = {
     val dir = dirFor(spark, rest, name)
     val snap = IcebergLite.snapshot(spark, dir, version = Some(version))
     new DataFrameV1Table(s"$name@$version", snap.schema,
       s => IcebergLite.toDataFrame(s, snap))
   }
 
-  def loadTimestamp(spark: SparkSession, rest: Seq[String], name: String, tsMillis: Long): Table = {
+  override def loadTableTimestamp(spark: SparkSession, rest: Seq[String], name: String,
+      timestamp: Long): Table = {
+    // DSv2 hands micros; the lite reader compares snapshot timestamp-ms
+    val tsMillis = Math.floorDiv(timestamp, 1000L)
     val dir = dirFor(spark, rest, name)
     val snap = IcebergLite.snapshot(spark, dir, timestampMs = Some(tsMillis))
     new DataFrameV1Table(s"$name@ts$tsMillis", snap.schema,

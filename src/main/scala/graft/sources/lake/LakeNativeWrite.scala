@@ -771,7 +771,7 @@ object LakeNativeWrite {
     var attempts = 0
     while (attempts < 10) {
       val file = new Path(log, f"$v%020d.json")
-      if (LakeWrite.atomicCreate(fs, file, (actions.mkString("\n") + "\n").getBytes("UTF-8")))
+      if (graft.model.AtomicFile.atomicCreate(fs, file, (actions.mkString("\n") + "\n").getBytes("UTF-8")))
         return v
       val winner = classifyDelta(readCommitLines(fs, file))
       val t = tableDir.toString

@@ -9,6 +9,8 @@ import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.model.AtomicFile
+
 /** Minimal, spec-conformant *writers* for the two lake formats — enough to
   * materialize real on-disk tables (data + transaction metadata) for the
   * correctness gates, round-trip suites, and small exports. Production
@@ -145,57 +147,6 @@ object LakeWrite {
     JsonMethods.compact(JObject("commitInfo" -> JObject(
       List("timestamp" -> (JInt(timestamp): JValue)) ++
         Option(operation).map(o => "operation" -> (JString(o): JValue)).toList)))
-
-  /** Atomically publish `bytes` at `file`, failing (false) if the path is
-    * already taken — the claim primitive both commit protocols need.
-    *
-    * HDFS-like stores: `create(overwrite = false)` is an atomic namespace
-    * operation server-side, and content visibility races are tolerable
-    * there because the name is claimed first (a reader of a half-written
-    * claim is the same window delta-standalone documents). The LOCAL
-    * filesystem has neither property — `RawLocalFileSystem.create(false)`
-    * is exists-then-open (two racers both pass) and the file is visible
-    * mid-write — so file:// paths publish via hard link: write a hidden
-    * temp sibling, `Files.createLink(dst, tmp)` (O(1), atomic, EEXIST when
-    * the version is taken, and dst appears with its FULL content or not at
-    * all), then drop the temp.
-    */
-  def atomicCreate(fs: org.apache.hadoop.fs.FileSystem, file: Path,
-      bytes: Array[Byte]): Boolean = {
-    val qualified = fs.makeQualified(file).toUri
-    if (qualified.getScheme == "file") {
-      val dst = java.nio.file.Paths.get(qualified.getPath)
-      java.nio.file.Files.createDirectories(dst.getParent)
-      val tmp = dst.resolveSibling(s".${dst.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.write(tmp, bytes)
-      try {
-        java.nio.file.Files.createLink(dst, tmp)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    } else {
-      // CREATE-time and WRITE-time failures must not be conflated: once
-      // create(overwrite=false) returns, the name is OURS — a failure
-      // while writing/closing is an IO fault, and reporting it as
-      // "version taken" would leave our own torn partial at that version
-      // for commitDelta to parse as the race winner (and permanently
-      // break log replay there). Delete the partial claim and rethrow.
-      val out = try fs.create(file, false) catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-        case e: java.io.IOException => return (if (fs.exists(file)) false else throw e)
-      }
-      try {
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case e: java.io.IOException =>
-          try fs.delete(file, false)
-          catch { case _: java.io.IOException => () } // best effort; original fault wins
-          throw e
-      }
-    }
-  }
 
   /** Write one commit file `_delta_log/%020d.json`. */
   def deltaCommit(conf: Configuration, tableDir: Path, version: Long, actions: Seq[String]): Path = {
@@ -567,7 +518,7 @@ object LakeWrite {
     val file = new Path(metaDir, s"v$version.metadata.json")
     val bytes = JsonMethods.pretty(JsonMethods.render(json)).getBytes("UTF-8")
     if (failIfExists) {
-      if (!atomicCreate(fs, file, bytes))
+      if (!AtomicFile.atomicCreate(fs, file, bytes))
         throw new LakeConcurrency.CommitFailedException(
           s"lost the commit race for v$version under $metaDir — " +
             "refresh the table metadata and retry the operation")

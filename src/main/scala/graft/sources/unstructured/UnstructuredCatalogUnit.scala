@@ -22,7 +22,7 @@ import scala.jdk.CollectionConverters._
   * as a file under the datasource path, with automatic image thumbnails
   * (reference: UnstructuredFileFormat.scala:35-121, BinOutputWriter.scala:79-116).
   */
-final class UnstructuredCatalogUnit(ds: DataSourceSpec) extends CatalogUnit {
+final class UnstructuredCatalogUnit(val ds: DataSourceSpec) extends CatalogUnit {
 
   override def loadTable(spark: SparkSession, rest: Seq[String], name: String,
       schemaOverride: Option[StructType]): Table = name match {

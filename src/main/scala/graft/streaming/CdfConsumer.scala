@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.model.AtomicFile
 import graft.sources.lake.DeltaLite
 
 /** Incremental consumer of a native Delta table's Change Data Feed — the
@@ -50,19 +51,9 @@ final class CdfConsumer(tableDir: Path, checkpointFile: Path,
   }
 
   /** Atomically record `version` as processed. */
-  def commit(conf: Configuration, version: Long): Unit = {
-    val fs = checkpointFile.getFileSystem(conf)
-    val tmp = new Path(checkpointFile.getParent,
-      s".${checkpointFile.getName}.tmp${System.nanoTime()}")
-    fs.mkdirs(checkpointFile.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"lastVersion":$version}""".getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, checkpointFile)) {
-      // rename-over-existing fails on some filesystems: replace then rename
-      fs.delete(checkpointFile, false)
-      require(fs.rename(tmp, checkpointFile), s"cannot commit checkpoint $checkpointFile")
-    }
-  }
+  def commit(conf: Configuration, version: Long): Unit =
+    AtomicFile.replace(checkpointFile.getFileSystem(conf), checkpointFile,
+      s"""{"lastVersion":$version}""".getBytes("UTF-8"))
 
   /** One micro-batch: poll, hand the feed (plus its version range) to `fn`,
     * and advance the checkpoint only after `fn` returns. Returns true when

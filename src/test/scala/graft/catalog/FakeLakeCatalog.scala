@@ -21,9 +21,10 @@ import scala.jdk.CollectionConverters._
   * reflective plumbing and the time-travel routing EXECUTE under `sbt test`
   * instead of only raising offline jar-missing errors.
   *
-  * The "lake" exposes one two-column table `t` (id bigint, tag string); the
-  * tag records which load path produced the rows, so a SELECT through the
-  * graft catalog can assert the exact overload that ran.
+  * The "lake" exposes one two-column table `t` (id bigint, tag string) in
+  * every namespace; the tag records which load path produced the rows, so a
+  * SELECT through the graft catalog can assert the exact overload that ran,
+  * and [[FakeLakeCatalog.loads]] records the namespace each load was given.
   */
 class FakeLakeCatalog extends TableCatalog {
   private var catalogName: String = _
@@ -41,17 +42,19 @@ class FakeLakeCatalog extends TableCatalog {
   override def listTables(namespace: Array[String]): Array[Identifier] =
     tables.keySet().asScala.toArray.sorted.map(n => Identifier.of(namespace, n))
 
-  override def loadTable(ident: Identifier): Table =
-    Option(tables.get(ident.name)).map(_.at("current"))
+  private def load(ident: Identifier, kind: String, tag: String): Table = {
+    FakeLakeCatalog.loads.add((kind, ident.namespace().toSeq))
+    Option(tables.get(ident.name)).map(_.at(tag))
       .getOrElse(throw new NoSuchTableException((ident.namespace().toSeq :+ ident.name())))
+  }
+
+  override def loadTable(ident: Identifier): Table = load(ident, "current", "current")
 
   override def loadTable(ident: Identifier, version: String): Table =
-    Option(tables.get(ident.name)).map(_.at(s"version=$version"))
-      .getOrElse(throw new NoSuchTableException((ident.namespace().toSeq :+ ident.name())))
+    load(ident, "version", s"version=$version")
 
   override def loadTable(ident: Identifier, timestamp: Long): Table =
-    Option(tables.get(ident.name)).map(_.at(s"timestamp=$timestamp"))
-      .getOrElse(throw new NoSuchTableException((ident.namespace().toSeq :+ ident.name())))
+    load(ident, "timestamp", s"timestamp=$timestamp")
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {
@@ -73,6 +76,8 @@ class FakeLakeCatalog extends TableCatalog {
 
 object FakeLakeCatalog {
   @volatile var lastInit: Option[(String, Map[String, String])] = None
+  /** Every load as (current | version | timestamp, the identifier's namespace). */
+  val loads = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
 }
 
 /** A readable DSv2 table: 3 rows of (id, tag) where `tag` is the load-path

@@ -9,6 +9,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkTestBase
 
+import scala.jdk.CollectionConverters._
+
 /** End-to-end catalog federation: register datasources, query through the
   * lightning-style FQN, ingest a catalog snapshot, compile + activate a USL,
   * run data-quality checks (covers the reference suites
@@ -444,5 +446,80 @@ class GraftCatalogSuite extends SparkTestBase {
     assert(givenSchema(fqn) == Some(struct("k" -> LongType, "w" -> DoubleType)))
     assert(columns(fqn) == Seq("k" -> LongType, "w" -> DoubleType))
     assert(spark.sql(s"SELECT SUM(w) FROM $fqn").head().getDouble(0) == 9.0)
+  }
+  test("a file-table miss probes each candidate path once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-probe").toString
+    val ds = graft.model.DataSourceSpec("probe", "PARQUET", Seq("datasource", "file"), Map("path" -> dir))
+    val e = intercept[NoSuchElementException](CatalogUnit(ds).loadTable(spark, Nil, "missing", None))
+    val tried = e.getMessage.split("""\(tried """).last.stripSuffix(")").split(", ").toSeq
+    assert(tried == Seq(s"$dir/missing.parquet", s"$dir/missing"), e.getMessage)
+  }
+
+  test("routing pin: each source's outcome for every table operation") {
+    val base = java.nio.file.Files.createTempDirectory("graft-pin").toString
+    spark.range(2).selectExpr("CAST(id AS INT) AS id").write.parquet(s"$base/pq/t")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/txt"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/txt/a.txt"), "pin")
+    val fake = classOf[FakeLakeCatalog].getName
+    val ns = "graft.datasource.pin"
+    Seq(
+      s"REGISTER PARQUET DATASOURCE pq OPTIONS (path '$base/pq') NAMESPACE $ns",
+      s"REGISTER JDBC DATASOURCE db OPTIONS (url 'jdbc:derby:$base/derby;create=true', " +
+        s"driver 'org.apache.derby.jdbc.EmbeddedDriver') NAMESPACE $ns",
+      s"REGISTER DELTA DATASOURCE dl OPTIONS (path '$base/delta') NAMESPACE $ns",
+      s"REGISTER ICEBERG DATASOURCE il OPTIONS (warehouse '$base/iceberg') NAMESPACE $ns",
+      s"REGISTER TEXT DATASOURCE txt OPTIONS (path '$base/txt') NAMESPACE $ns",
+      s"REGISTER ICEBERG DATASOURCE ri OPTIONS (catalog_impl '$fake', warehouse '$base/ri') NAMESPACE $ns",
+      s"REGISTER DELTA DATASOURCE rd OPTIONS (catalog_impl '$fake', path '$base/rd') NAMESPACE $ns"
+    ).foreach(spark.sql)
+    // (source, the table every operation targets, whether CREATE TABLE makes it)
+    val sources = Seq(("pq", "pq.t", false), ("db", "db.APP.t", true), ("dl", "dl.t", true),
+      ("il", "il.t", true), ("txt", "txt.txt", false), ("ri", "ri.t", false), ("rd", "rd.t", false))
+    // "ok <result>" or the exception, then the namespaces the fake adapter
+    // was handed by time-travel loads
+    def outcome(sql: String)(result: Array[Row] => String): String = {
+      FakeLakeCatalog.loads.clear()
+      val out = try ("ok " + result(spark.sql(sql).collect())).trim catch {
+        case e: Exception => s"${e.getClass.getSimpleName}: ${e.getMessage.linesIterator.next()}"
+      }
+      val travelled = FakeLakeCatalog.loads.asScala.collect { case (k, n) if k != "current" => n }
+      (out.replace(base, "<tmp>") +: travelled.toSeq.distinct.map(_.mkString("ns=[", ".", "]")))
+        .mkString(" ")
+    }
+    val actual = try sources.map { case (src, tbl, creates) =>
+      val t = s"$ns.$tbl"
+      val create = outcome(s"CREATE TABLE ${if (creates) t else s"$ns.$src.newt"} (id INT)")(_ => "")
+      if (creates) spark.sql(s"INSERT INTO $t VALUES (1)")
+      src -> Seq(create,
+        outcome(s"ALTER TABLE $t ADD COLUMNS (x INT)")(_ => ""),
+        outcome(s"SELECT * FROM $t VERSION AS OF 'main'")(_.length.toString),
+        outcome(s"SELECT * FROM $t TIMESTAMP AS OF '2100-01-01 00:00:00'")(_.length.toString),
+        outcome(s"SHOW NAMESPACES IN $ns.$src")(_.map(_.getString(0)).mkString(",")),
+        outcome(s"DROP TABLE $t")(_ => if (spark.catalog.tableExists(t)) "kept" else "gone"))
+    } finally spark.sql(s"DROP NAMESPACE IF EXISTS $ns CASCADE")
+
+    val noCreate = (typ: String) => "UnsupportedOperationException: CREATE TABLE not supported " +
+      s"for $typ datasources (reference: FileCatalogUnit.scala:151-154)"
+    val noAlter = "UnsupportedOperationException: ALTER TABLE not supported for this datasource type"
+    val noTravel = (typ: String) =>
+      s"UnsupportedOperationException: time travel is not supported for $typ datasources (Iceberg only)"
+    val derbySchemas = Seq("APP", "NULLID", "SQLJ", "SYS", "SYSCAT", "SYSCS_DIAG", "SYSCS_UTIL",
+      "SYSFUN", "SYSIBM", "SYSPROC", "SYSSTAT").map(s => s"datasource.pin.db.$s").mkString(",")
+    // columns: CREATE, ALTER ADD COLUMNS, VERSION AS OF, TIMESTAMP AS OF, SHOW NAMESPACES IN, DROP
+    val expected = Seq(
+      "pq" -> Seq(noCreate("PARQUET"), noAlter, noTravel("PARQUET"), noTravel("PARQUET"), "ok", "ok kept"),
+      "db" -> Seq("ok", "ok", noTravel("JDBC"), noTravel("JDBC"), s"ok $derbySchemas", "ok gone"),
+      "dl" -> Seq("ok", "ok", noTravel("DELTA"), noTravel("DELTA"), "ok", "ok kept"),
+      "il" -> Seq("ok", "ok", "ok 1", "ok 1", "ok", "ok kept"),
+      "txt" -> Seq(noCreate("TEXT"), noAlter, noTravel("TEXT"), noTravel("TEXT"), "ok", "ok kept"),
+      // the adapter gets the namespace below the datasource, as a current read does
+      "ri" -> Seq(noCreate("ICEBERG"), noAlter, "ok 3 ns=[]", "ok 3 ns=[]", "ok", "ok kept"),
+      "rd" -> Seq(noCreate("DELTA"), noAlter, noTravel("DELTA"), noTravel("DELTA"), "ok", "ok kept"))
+    val diffs = for {
+      ((src, got), (_, want)) <- actual.zip(expected)
+      (g, w) <- got.zip(want) if g != w
+    } yield s"$src:\n  got  $g\n  want $w"
+    assert(actual.map(_._1) == expected.map(_._1))
+    assert(diffs.isEmpty, diffs.mkString("\n"))
   }
 }

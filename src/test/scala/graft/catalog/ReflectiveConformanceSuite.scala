@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.connector.catalog.Identifier
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import graft.model.DataSourceSpec
@@ -54,7 +54,7 @@ class ReflectiveConformanceSuite extends SparkTestBase {
 
   test("version and timestamp overloads reach the adapter's time-travel loads") {
     val u = unit("ICEBERG", "lake3")
-    val byVersion = u.loadTableVersion(spark, Identifier.of(Array.empty, "t"), "42")
+    val byVersion = u.loadTableVersion(spark, Nil, "t", "42")
     assert(byVersion.asInstanceOf[FakeLakeTable].at("x") != null) // right class
     val tagOf = (t: org.apache.spark.sql.connector.catalog.Table) => {
       // read one row through the DSv2 scan to observe which load path ran
@@ -68,7 +68,7 @@ class ReflectiveConformanceSuite extends SparkTestBase {
       reader.close(); tag
     }
     assert(tagOf(byVersion) == "version=42")
-    val byTs = u.loadTableTimestamp(spark, Identifier.of(Array.empty, "t"), 1700000000L)
+    val byTs = u.loadTableTimestamp(spark, Nil, "t", 1700000000L)
     assert(tagOf(byTs) == "timestamp=1700000000")
   }
 
@@ -90,6 +90,23 @@ class ReflectiveConformanceSuite extends SparkTestBase {
         .head().getString(0)
       assert(ts.startsWith("timestamp="))
     } finally spark.sql("DROP NAMESPACE IF EXISTS graft.datasource.lakehouse CASCADE")
+  }
+
+  test("time-travel loads of a nested table get the namespace the current read gets") {
+    spark.sql(s"REGISTER ICEBERG DATASOURCE lake OPTIONS (catalog_impl '$fakeImpl', warehouse '/tmp/fake-lake') " +
+      "NAMESPACE graft.datasource.lakehouse3")
+    try {
+      val t = "graft.datasource.lakehouse3.lake.db.t"
+      FakeLakeCatalog.loads.clear()
+      assert(spark.sql(s"SELECT tag FROM $t").head().getString(0) == "current")
+      assert(spark.sql(s"SELECT tag FROM $t VERSION AS OF '7'").head().getString(0) == "version=7")
+      assert(spark.sql(s"SELECT tag FROM $t TIMESTAMP AS OF '2024-01-02 00:00:00'")
+        .head().getString(0).startsWith("timestamp="))
+      val loads = FakeLakeCatalog.loads.asScala.toSeq
+      assert(loads.map(_._1).toSet == Set("current", "version", "timestamp"))
+      // the adapter sees the namespace below the datasource, never graft's own path
+      assert(loads.forall(_._2 == Seq("db")), loads.mkString("; "))
+    } finally spark.sql("DROP NAMESPACE IF EXISTS graft.datasource.lakehouse3 CASCADE")
   }
 
   test("time travel on a non-iceberg source rejects; create/drop error surfaces hold") {

@@ -18,6 +18,9 @@ class FixturePublishSuite extends AnyFunSuite {
 
   private val Helpers = Seq("def fixtureDir(", "def fixtureOnce(")
 
+  // a path built by hand beside QueryPack.wh misses its fingerprint suffix
+  private val WarehousePrefix = "/tmp/graft-verify-wh-"
+
   /** Line indices of the two helpers in QueryPack.scala, from each `def` to
     * the brace that closes its body.
     */
@@ -54,5 +57,19 @@ class FixturePublishSuite extends AnyFunSuite {
       hits.mkString("publish fixtures through QueryPack.fixtureDir / fixtureOnce:\n", "\n", ""))
     val queryPack = Files.readString(root.resolve("QueryPack.scala"))
     Helpers.foreach(d => assert(queryPack.contains(d), s"QueryPack.scala has no `$d`"))
+  }
+
+  test("only QueryPack.wh spells the gate warehouse path") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
+    val queryPack = root.resolve("graft/queries/QueryPack.scala")
+    val hits = for {
+      f: Path <- Files.walk(root).iterator().asScala.toSeq.sortBy(_.toString)
+      if f.toString.endsWith(".scala") && f != queryPack
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(WarehousePrefix)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("build warehouse paths with QueryPack.wh:\n", "\n", ""))
+    assert(Files.readString(queryPack).contains(WarehousePrefix), "QueryPack.scala lost the warehouse path")
   }
 }

@@ -368,7 +368,7 @@ class LakeConcurrencySuite extends SparkTestBase {
     fs.initialize(java.net.URI.create("mockfs:///"), conf)
     val target = new Path(s"${tmpDir("torn")}/00000000000000000002.json")
     val ex = intercept[java.io.IOException] {
-      LakeWrite.atomicCreate(fs, target, "payload".getBytes("UTF-8"))
+      graft.model.AtomicFile.atomicCreate(fs, target, "payload".getBytes("UTF-8"))
     }
     assert(ex.getMessage.contains("disk fault"),
       "the IO fault must surface, not be reported as a version collision")
@@ -378,7 +378,7 @@ class LakeConcurrencySuite extends SparkTestBase {
     // while a genuine create-time collision still reports 'taken' quietly
     val taken = new Path(s"${tmpDir("torn")}/00000000000000000003.json")
     val pre = fs.create(taken, true); pre.close()
-    assert(!LakeWrite.atomicCreate(fs, taken, "x".getBytes("UTF-8")))
+    assert(!graft.model.AtomicFile.atomicCreate(fs, taken, "x".getBytes("UTF-8")))
   }
 
   // ---- Delta: predicate-scoped conflict checking (delta-spark's actual
